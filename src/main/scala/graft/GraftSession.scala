@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Engine-recommended Spark session settings, shared by every driver-contract
-  * main (Bench / Verify / Probe / ScalingBench). These are tuning defaults,
+  * main (Bench / Verify / ScalingBench). These are tuning defaults,
   * not semantics: every operator produces identical results under stock
   * configuration.
   *

@@ -96,7 +96,7 @@ object ScalingBench {
   }
 
   /** The SNAPSHOT form of the same job: the full cascade through
-    * ResumableCascade — every stage committed as a payload-pruned TableIO
+    * Cascade.runResumable — every stage committed as a payload-pruned TableIO
     * snapshot on real disk, final labels re-joined and committed. This is
     * the cluster-reliable path the 100 TB resumability story rests on
     * (localCheckpoint blocks die with their executor; committed snapshots
@@ -117,7 +117,7 @@ object ScalingBench {
     }
     try {
       val pages = spark.read.parquet(path).select("url", "warc_ts", "html", "text", "lang")
-      val labeled = graft.cascade.ResumableCascade.run(spark, pages,
+      val labeled = Cascade.runResumable(pages,
         PagesGen.matchingConfig, root.toString, Some(models), PagesGen.exemplarTexts())
       labeled.filter(org.apache.spark.sql.functions.col("keep")).count()
     } finally deleteRecursively(root)
@@ -133,11 +133,11 @@ object ScalingBench {
     try {
       val pages = spark.read.parquet(path).select("url", "warc_ts", "html", "text", "lang")
       val cfg = PagesGen.matchingConfig
-      val full = graft.cascade.ResumableCascade.run(spark, pages, cfg,
+      val full = Cascade.runResumable(pages, cfg,
         rootA.toString, Some(models), PagesGen.exemplarTexts())
-      graft.cascade.ResumableCascade.run(spark, pages, cfg,
+      Cascade.runResumable(pages, cfg,
         rootB.toString, Some(models), PagesGen.exemplarTexts(), stopAfterStages = 2)
-      val resumed = graft.cascade.ResumableCascade.run(spark, pages, cfg,
+      val resumed = Cascade.runResumable(pages, cfg,
         rootB.toString, Some(models), PagesGen.exemplarTexts())
       // exact per-url label equality, distributed (no driver collect)
       val a = full.select("url", "dqc", "keep")
@@ -208,7 +208,7 @@ object ScalingBench {
     val coresList = sys.env.get("SPARK_GRAFT_CORES")
       .map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(Seq(8, 32))
     // SPARK_GRAFT_SCALING_MODE: checkpoint (default, localCheckpoint form) |
-    // snapshot (ResumableCascade payload-pruned TableIO commits — the
+    // snapshot (Cascade.runResumable payload-pruned TableIO commits — the
     // cluster-reliable form) | both (side-by-side comparison)
     val modes = sys.env.getOrElse("SPARK_GRAFT_SCALING_MODE", "checkpoint") match {
       case "both" => Seq("checkpoint", "snapshot")

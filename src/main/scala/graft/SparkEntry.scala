@@ -218,7 +218,7 @@ object SparkEntry {
         .select(col("doc_id"), col(Cols.Dqc).cast("int").as("dqc"), col(Cols.KeepCol).as("keep"))
         .orderBy("doc_id")),
 
-    // ResumableCascade under the SAME oracle as q_cascade: the cluster/
+    // The snapshot form under the SAME oracle as q_cascade: the cluster/
     // resume form (every stage committed as a payload-pruned TableIO
     // snapshot, labels re-joined at the end — the north_rule's "restarts
     // from the last committed snapshot" path) must label every doc exactly
@@ -226,7 +226,7 @@ object SparkEntry {
     // gate that snapshot commits introduce no semantic drift.
     "q_cascade_resumable" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("resumable_q").toString
-      graft.cascade.ResumableCascade.run(s, Docs.pages(s, dir), docCfg, root)
+      Cascade.runResumable(Docs.pages(s, dir), docCfg, root)
         .select(col("doc_id"), col(Cols.Dqc).cast("int").as("dqc"), col(Cols.KeepCol).as("keep"))
         .orderBy("doc_id")
     }),
@@ -291,10 +291,12 @@ object SparkEntry {
       docs.withColumn("_par", pmod(col("doc_id"), lit(2)).cast("int"))
         .repartition(1)
         .write.partitionBy("_par").parquet(stage)
+      // a parity with no rows writes no _par=<p> directory: that slice is
+      // simply absent, and the other one streams as a single micro-batch
       Seq(0, 1).foreach { par =>
-        val part = new java.io.File(s"$stage/_par=$par").listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, inDir.resolve(s"b$par.parquet"))
+        Option(new java.io.File(s"$stage/_par=$par").listFiles()).toSeq.flatten
+          .find(_.getName.endsWith(".parquet"))
+          .foreach(part => java.nio.file.Files.move(part.toPath, inDir.resolve(s"b$par.parquet")))
       }
       val src = s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir.toString)

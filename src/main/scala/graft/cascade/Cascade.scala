@@ -1,7 +1,10 @@
 package graft.cascade
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import graft.io.TableIO
 import graft.model.{CascadeConfig, FlagCodes}
 import graft.stages._
 
@@ -15,6 +18,22 @@ import graft.stages._
   * null-guarded projection or a group-stats join; the row-local prefix fuses
   * into one codegen span, and Catalyst pushes the feature projection into
   * the scan.
+  *
+  * ONE stage loop ([[runWith]]) folds the stage list for both forms of a
+  * run. They differ only in how a stage output is made durable — the
+  * [[Materializer]], chosen by the entry point:
+  *  - [[run]] (local): the input of every self-join stage is a lazy local
+  *    checkpoint, and the blocks a stage supersedes are swept as it runs.
+  *    The in-memory batch form, also run on every streaming micro-batch
+  *    (graft.streaming.StreamingFilter.microBatchCascade).
+  *  - [[runResumable]] (snapshot): every post-prefix stage output is
+  *    committed as a TableIO snapshot and re-read, and a restarted run
+  *    resumes from the last committed stage — the north_rule "any stage
+  *    restarts from the last committed Iceberg snapshot". Executor-local
+  *    checkpoint blocks die with their executor; committed snapshots don't.
+  *
+  * Reference analog: every check's output is the next check's input
+  * (reference titan.r:103-263, sequential flag mutation).
   */
 object Cascade {
   import Cols._
@@ -25,32 +44,30 @@ object Cascade {
     * per scan. MEMORY_AND_DISK_SER pushes every block through the
     * serializer on each write AND each of the many per-stage re-reads; that
     * CPU is core-count-invariant, i.e. exactly the kind of term that caps
-    * multi-core scaling. Measured A/B on the identical 2M-doc corpus at
-    * local[32] (steady-state rep): SER 304.7 s vs DESER 171.5 s — a 1.78×
-    * end-to-end difference. Default is deserialized;
-    * SPARK_GRAFT_CKPT_LEVEL=ser restores the round-2 behavior for A/Bs.
+    * multi-core scaling. Measured on the identical 2M-doc corpus at
+    * local[32] (steady-state rep): SER 304.7 s vs deserialized 171.5 s.
     */
-  private val ckptLevel: org.apache.spark.storage.StorageLevel =
-    sys.env.get("SPARK_GRAFT_CKPT_LEVEL") match {
-      case Some("ser") => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      case _           => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    }
+  private val CkptLevel = StorageLevel.MEMORY_AND_DISK
 
   /** Per-run registry of the checkpoint RDD ids THIS run created — the
-    * sweep scope of [[run]]/[[iterate]]. The previous scope (everything
-    * registered on the shared SparkContext after the run's baseline) would
-    * unpersist blocks a CONCURRENT query, streaming micro-batch, or second
-    * cascade run registered mid-run; tracking only ids observed around this
-    * run's own localCheckpoint calls confines the sweep to blocks the run
-    * provably created. (Residual exposure: a foreign registration landing
-    * inside one of our own localCheckpoint calls — a window of a single
-    * `persist` call, not the whole run.)
+    * sweep scope of a cascade run and of [[iterate]]. The previous scope
+    * (everything registered on the shared SparkContext after the run's
+    * baseline) would unpersist blocks a CONCURRENT query, streaming
+    * micro-batch, or second cascade run registered mid-run; tracking only
+    * ids observed around this run's own localCheckpoint calls confines the
+    * sweep to blocks the run provably created. (Residual exposure: a
+    * foreign registration landing inside one of our own localCheckpoint
+    * calls — a window of a single `persist` call, not the whole run.)
     */
-  private[graft] final class RunTracker {
+  private[graft] final class RunTracker(sc: SparkContext) {
     private val set = scala.collection.mutable.LinkedHashSet.empty[Int]
     def record(ids: Iterable[Int]): Unit = synchronized { set ++= ids }
-    def remove(ids: Iterable[Int]): Unit = synchronized { set --= ids }
     def snapshot: Set[Int] = synchronized { set.toSet }
+    /** Unpersist these blocks and stop tracking them. */
+    def release(ids: Set[Int]): Unit = {
+      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+      synchronized { set --= ids }
+    }
   }
 
   /** The active run's tracker (thread-local: a cascade run builds its whole
@@ -61,31 +78,39 @@ object Cascade {
   private[graft] val runTracker =
     new scala.util.DynamicVariable[Option[RunTracker]](None)
 
-  /** Materialize a stage input (lazy local checkpoint); storage level per
-    * [[ckptLevel]]. (Cluster form: ResumableCascade snapshots.) Records the
-    * registered RDD ids into the active [[RunTracker]], if any.
+  /** Materialize a stage input (local checkpoint at [[CkptLevel]]; lazy
+    * unless `eager`). Records the registered RDD ids into the active
+    * [[RunTracker]], if any.
     */
   def materialize(df: DataFrame, eager: Boolean = false): DataFrame =
     runTracker.value match {
-      case None => df.localCheckpoint(eager, ckptLevel)
+      case None => df.localCheckpoint(eager, CkptLevel)
       case Some(t) =>
         val sc = df.sparkSession.sparkContext
         val before = sc.getPersistentRDDs.keySet.toSet
-        val c = df.localCheckpoint(eager, ckptLevel)
+        val c = df.localCheckpoint(eager, CkptLevel)
         t.record(sc.getPersistentRDDs.keySet.toSet.diff(before))
         c
     }
+
+  /** Run `f` with job description `desc`, then restore the enclosing one:
+    * labels nest, so a stats action inside a stage never leaves the rest of
+    * the stage's jobs unlabeled (UI/diagnostics only).
+    */
+  private[graft] def labeled[T](sc: SparkContext, desc: String)(f: => T): T = {
+    val outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try f finally sc.setJobDescription(outer)
+  }
 
   /** One cascade stage. `selfRef` marks the self-join shape — the stage
     * aggregates statistics over its input and joins them back, so it scans
     * the input more than once. Folding such stages over a lazy plan would
     * re-execute the whole upstream (including the model UDF columns) once
     * per scan, compounding per stage — the runtime blows up exponentially
-    * in cascade depth. `run` therefore materializes the input of every
-    * selfRef stage (localCheckpoint: computes it once, truncates the
-    * logical plan); ResumableCascade gets the same effect from its
-    * per-stage snapshot commit + re-read, which is the cluster-reliable
-    * form (executor-local checkpoint blocks don't survive executor loss).
+    * in cascade depth. Both materializers therefore make the input of every
+    * selfRef stage durable: a local checkpoint (computed once, logical plan
+    * truncated) or a snapshot commit + re-read.
     */
   final case class StageDef(code: Int, selfRef: Boolean, f: DataFrame => DataFrame)
 
@@ -99,11 +124,10 @@ object Cascade {
   def iterate(df: DataFrame, maxIter: Int, breakAt: Long, code: Int)
              (once: DataFrame => DataFrame): DataFrame = {
     if (maxIter <= 1) return once(df)
-    val sc = df.sparkSession.sparkContext
     // scope the per-round sweep to ids THIS iteration created (standalone
-    // callers get a fresh tracker; inside Cascade.run the run's tracker is
+    // callers get a fresh tracker; inside a cascade run the run's tracker is
     // reused so the run-level sweep sees the leftovers too)
-    val tracker = runTracker.value.getOrElse(new RunTracker)
+    val tracker = runTracker.value.getOrElse(new RunTracker(df.sparkSession.sparkContext))
     runTracker.withValue(Some(tracker)) {
       var cur = df
       var prevIds: Set[Int] = Set.empty
@@ -124,8 +148,7 @@ object Cascade {
         cur = materialize(once(cur), eager = false)
         val added = tracker.snapshot.diff(before)
         val flagged = cur.filter(col(Dqc) === code).count()
-        prevIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-        tracker.remove(prevIds)
+        tracker.release(prevIds)
         prevIds = added
         val fresh = flagged - prevFlagged
         prevFlagged = flagged
@@ -153,9 +176,8 @@ object Cascade {
     }
     // html is consumed only by the backfill and the cross-field check;
     // dropping it as soon as it is dead halves the bytes later stage
-    // checkpoints materialize. Folded into the last consumer's stage (not a
-    // stage of its own: in ResumableCascade every stage is a full-corpus
-    // snapshot, and a pure projection doesn't deserve one).
+    // checkpoints materialize. Folded into the last consumer's stage: a
+    // pure projection doesn't deserve a stage of its own.
     val dropHtmlAtCrossField = cfg.enabled.contains(CrossField)
     // scrub is non-flagging; code 0 marks it as a transform, always on
     b += StageDef(Good, selfRef = false, d => {
@@ -207,11 +229,12 @@ object Cascade {
   }
 
   /** Synthetic 1:1 reattach key for the payload split. Assigned once, on
-    * the frame that is then materialized — both the light and the payload
-    * side read the SAME frozen blocks, so the (per-run, partition-derived)
-    * ids are consistent between them by construction.
+    * the frame that is then made durable — both the light and the payload
+    * side read the SAME frozen rows, so the (partition-derived) ids are
+    * consistent between them by construction, across restarts too (a
+    * resumed run reads the committed ids, never re-derives them).
     */
-  private[cascade] val RowId = "_graft_rid"
+  private val RowId = "_graft_rid"
 
   /** Columns the post-prefix stages actually read. Every `text`/`html`
     * consumer (metadata, backfill, scrub, model features, cross-field,
@@ -225,21 +248,13 @@ object Cascade {
     * derived — the `f_stats` struct, the row-local ratio features, the
     * detected-language pair — is dead after the prefix and travels as
     * payload, which at corpus scale roughly halves the bytes every light
-    * checkpoint/stat scan moves (measured via SPARK_GRAFT_SPLIT_DEBUG).
-    * SPARK_GRAFT_WIDE_LIGHT=1 restores the carry-all-f_* round-3 set for
-    * A/Bs on identical inputs.
+    * checkpoint/stat scan moves.
     */
-  private[cascade] def workingCol(cfg: graft.model.CascadeConfig)(c: String): Boolean =
-    if (wideLight)
-      c == RowId || c == Url || c == Domain || c == Lang ||
-        c == Doit || c == Prio || c == Dqc || c.startsWith("f_")
-    else
-      c == RowId || c == UrlHash || c == Domain || c == Lang ||
-        c == Doit || c == Prio || c == Dqc ||
-        c == NWords || c == DigitRatio || c.startsWith(LogPpl) ||
-        cfg.buddyKeys.contains(c) || cfg.isolationKeys.contains(c)
-
-  private val wideLight: Boolean = sys.env.contains("SPARK_GRAFT_WIDE_LIGHT")
+  private def workingCol(cfg: CascadeConfig)(c: String): Boolean =
+    c == RowId || c == UrlHash || c == Domain || c == Lang ||
+      c == Doit || c == Prio || c == Dqc ||
+      c == NWords || c == DigitRatio || c.startsWith(LogPpl) ||
+      cfg.buddyKeys.contains(c) || cfg.isolationKeys.contains(c)
 
   /** Group-key dictionary encoding for the light working set: `domain` and
     * `lang` travel as null-preserving xxhash64 codes (one 8-byte fixed slot
@@ -256,32 +271,53 @@ object Cascade {
     * expected colliding PAIRS at 10⁸ domains ≈ (10⁸)²/2⁶⁵ ≈ 3·10⁻⁴, i.e.
     * none, and the consequence is a slightly-blended stat, not corruption
     * (the url already travels as xxhash64 under the same argument).
-    * SPARK_GRAFT_NO_KEYCODE=1 restores string keys for A/Bs.
     */
-  private val keyCode: Boolean = !sys.env.contains("SPARK_GRAFT_NO_KEYCODE")
+  private def encodedKeyCols(cfg: CascadeConfig, outCols: Seq[String]): Seq[String] =
+    Seq(Domain, Lang).filter(c => outCols.contains(c) && workingCol(cfg)(c))
 
-  private[cascade] def encodedKeyCols(cfg: graft.model.CascadeConfig,
-                                      outCols: Seq[String]): Seq[String] =
-    if (!keyCode) Nil
-    else Seq(Domain, Lang).filter(c => outCols.contains(c) && workingCol(cfg)(c))
-
-  private[cascade] def encodeKeys(df: DataFrame, cols: Seq[String]): DataFrame =
+  private def encodeKeys(df: DataFrame, cols: Seq[String]): DataFrame =
     cols.foldLeft(df)((d, c) =>
       d.withColumn(c,
         when(col(c).isNull, lit(null).cast("long")).otherwise(xxhash64(col(c)))))
 
-  /** Payload split on/off (default on); SPARK_GRAFT_PAYLOAD_SPLIT=off
-    * restores the carry-everything behavior for A/Bs.
-    */
-  private val payloadSplit: Boolean =
-    !sys.env.get("SPARK_GRAFT_PAYLOAD_SPLIT").contains("off")
+  /** Table names of the snapshot form, under its root. */
+  val PrefixTable = "prefix"
+  private def stageTable(i: Int, code: Int) = f"stage_$i%03d_$code"
 
-  /** Normalize + stamp lists + fold the enabled checks + final decision.
-    * The input of every self-join-shaped stage is materialized first
-    * (see StageDef) — the narrow row-local prefix between two such stages
-    * stays fused in one codegen span, and each stage's statistics pass
-    * reads the materialized blocks instead of recomputing the cascade
-    * prefix.
+  /** Normalize + stamp lists + fold the enabled checks + final decision,
+    * with local checkpoints (see [[Local]]). The input of every
+    * self-join-shaped stage is materialized first (see StageDef) — the
+    * narrow row-local prefix between two such stages stays fused in one
+    * codegen span, and each stage's statistics pass reads the materialized
+    * blocks instead of recomputing the cascade prefix.
+    */
+  def run(pages: DataFrame, cfg: CascadeConfig,
+          models: Option[Models] = None,
+          pseudoTexts: Seq[String] = Nil): DataFrame =
+    runWith(pages, cfg, models, pseudoTexts, new Local(pages.sparkSession))
+
+  /** The same cascade with every post-prefix stage committed under `root`
+    * (see [[Snapshot]]); a rerun against a `root` that already holds
+    * progress for the same stage list resumes from the last committed
+    * stage instead of recomputing. Stage writes are idempotent (a rerun of
+    * a committed stage appends a fresh snapshot; readers only ever see the
+    * committed manifest). Ends with the `pages_labeled` and `metrics`
+    * ([[metrics]]) commits and returns the committed labels.
+    *
+    * `stopAfterStages`: commit at most this many post-prefix stages and
+    * return early WITHOUT the final label/metrics commit — a deterministic
+    * stand-in for a mid-run kill, used by the resume-equivalence tests and
+    * the scaling bench's resume check. Production callers leave the
+    * default.
+    */
+  def runResumable(pages: DataFrame, cfg: CascadeConfig, root: String,
+                   models: Option[Models] = None,
+                   pseudoTexts: Seq[String] = Nil,
+                   stopAfterStages: Int = Int.MaxValue): DataFrame =
+    runWith(pages, cfg, models, pseudoTexts,
+      new Snapshot(pages.sparkSession, root, stopAfterStages))
+
+  /** The stage loop.
     *
     * Payload split: the self-join stages form a chain of full-corpus
     * materializations, but they only ever read the light working set
@@ -291,159 +327,226 @@ object Cascade {
     * and every re-checkpoint would move the text bytes through memory
     * again. Core-count-invariant memory traffic is exactly the term that
     * caps single-box scaling (BENCH/BASELINE.md §1), so after the row-local
-    * prefix (the last text consumer) the corpus is materialized ONCE and
-    * split: the checks fold over the light projection, and the payload is
-    * reattached 1:1 by [[RowId]] at the end. Consumers that never read the
-    * payload (e.g. a keep-count) pay only a pruned id-join; the cluster
-    * analog is writing stage snapshots without the payload columns and
-    * re-joining the immutable ingest table at the end (ResumableCascade
-    * gets the same effect from columnar snapshot pruning).
+    * prefix (the last text consumer) the corpus is made durable ONCE with
+    * the [[RowId]] and split: the checks fold over the light projection,
+    * and the payload is reattached 1:1 by [[RowId]] at the end. Consumers
+    * that never read the payload (e.g. a keep-count) pay only a pruned
+    * id-join. The materializer decides whether to split
+    * ([[Materializer.splitAt]]).
     */
-  def run(pages: DataFrame, cfg: CascadeConfig,
-          models: Option[Models] = None,
-          pseudoTexts: Seq[String] = Nil): DataFrame = {
-    // Each selfRef stage's input is eagerly checkpointed (so its two scans
-    // share one computation), and everything this run created that the
-    // new leaf supersedes — the previous stage's checkpoint, iterate-round
-    // leftovers, the per-group stats checkpoints groupStats/joinReady
-    // created while the stage plan was BUILT — is unpersisted immediately
-    // after the leaf materializes. Without this, blocks stay pinned until
-    // driver GC and a long cascade over millions of rows turns into an
-    // eviction storm. Sweep scope: ONLY ids recorded by this run's own
-    // materialize calls ([[RunTracker]]); concurrent queries', streaming
-    // jobs', or callers' caches — whenever registered — are never touched.
-    val sc = pages.sparkSession.sparkContext
-    val tracker = new RunTracker
-    runTracker.withValue(Some(tracker)) {
-    var protectedIds: Set[Int] = Set.empty
-    def matTracked(d: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) = {
+  private def runWith(pages: DataFrame, cfg: CascadeConfig, models: Option[Models],
+                      pseudoTexts: Seq[String], m: Materializer): DataFrame =
+    runTracker.withValue(Some(m.tracker)) {
+      val sc = pages.sparkSession.sparkContext
+      val stageList = stages(cfg, models, pseudoTexts)
+      val split = m.splitAt(stageList.indexWhere(_.selfRef), stageList.length, pages, cfg)
+      def fold(start: DataFrame, from: Int, until: Int): DataFrame =
+        (from until until).foldLeft(start) { (d, i) =>
+          val s = stageList(i)
+          if (split.exists(i < _)) s.f(d) // row-local prefix: one fused projection
+          else labeled(sc, s"cascade: stage ${s.code}")(m.stage(d, s, i, split.contains(i)))
+        }
+      // ingest-time duplicate drop BEFORE any check (read_data_to_check.r:
+      // 122-143): duplicates must never inflate neighborhood statistics.
+      // The drop reads only url/warc_ts/text, so it runs over the PRE-
+      // feature normalization, and the feature pass runs once per surviving
+      // row, after the drop (result-identical — features are deterministic
+      // per row; see Ingest.normalizeCore).
+      def ingested: DataFrame = Ingest.stampLists(
+        if (cfg.dedupIngest)
+          Ingest.features(Ingest.dropDuplicatePages(m.dedupInput(Ingest.normalizeCore(pages, cfg))))
+        else Ingest.normalize(pages, cfg), cfg)
+      split match {
+        case None => m.finish(fold(ingested, 0, stageList.length), finalDecision)
+        case Some(at) =>
+          val full = m.prefix(fold(ingested, 0, at).withColumn(RowId, monotonically_increasing_id()))
+          val outCols = full.columns.toSeq.filterNot(_ == RowId)
+          // key-encoded columns live TWICE: hashed in the light set (grouping/
+          // join key) and as strings in the payload (caller-visible output)
+          val encKeys = encodedKeyCols(cfg, outCols)
+          // never empty: url and text always travel as payload
+          val payloadCols = outCols.filterNot(workingCol(cfg)) ++ encKeys
+          val light = m.light(encodeKeys(
+            full.select(full.columns.filter(workingCol(cfg)).map(col): _*), encKeys))
+          m.finish(fold(light, at, stageList.length), d => finalDecision(
+            d.drop(encKeys: _*) // hashed keys: the string originals rejoin here
+              .join(full.select((RowId +: payloadCols).map(col): _*), Seq(RowId)) // 1:1
+              .select(outCols.map(col): _*)))
+      }
+    }
+
+  /** How the stage loop makes its outputs durable — the one difference
+    * between the local and the snapshot form. Each run gets a fresh
+    * instance; its [[RunTracker]] scopes every sweep of checkpoint blocks to
+    * the ones this run created.
+    */
+  private sealed abstract class Materializer(spark: SparkSession) {
+    val tracker = new RunTracker(spark.sparkContext)
+    /** Index of the first stage folded over the light working set (the
+      * stages before it are the row-local prefix), or None to fold every
+      * stage over the full frame.
+      */
+    def splitAt(firstSelf: Int, nStages: Int, pages: DataFrame, cfg: CascadeConfig): Option[Int]
+    /** The normalized input of the ingest duplicate drop, which scans it
+      * three times (keeper aggregate, semi-join, union).
+      */
+    def dedupInput(df: DataFrame): DataFrame
+    /** The prefix output, full width with the [[RowId]]. By name: a resumed
+      * run never builds it.
+      */
+    def prefix(df: => DataFrame): DataFrame
+    /** The light working set, projected from the prefix output. */
+    def light(df: DataFrame): DataFrame
+    /** Stage `i` over `d`; `durableInput`: `d` is the split's freshly made
+      * durable start frame.
+      */
+    def stage(d: DataFrame, s: StageDef, i: Int, durableInput: Boolean): DataFrame
+    /** The caller's result from the checked frame; `label` reattaches the
+      * payload and adds the final decision.
+      */
+    def finish(checked: DataFrame, label: DataFrame => DataFrame): DataFrame
+  }
+
+  /** Local checkpoints. Each selfRef stage's input is checkpointed (so its
+    * scans share one computation), and everything this run created that
+    * the new checkpoint supersedes — the previous stage's checkpoint,
+    * iterate-round leftovers, the per-group stats checkpoints
+    * groupStats/joinReady created while the stage plan was BUILT — is
+    * unpersisted right after the stage ran. Without this, blocks stay
+    * pinned until driver GC and a long cascade over millions of rows turns
+    * into an eviction storm. Blocks that back the returned frame (the
+    * payload side of the split) stay pinned for the caller's action.
+    */
+  private final class Local(spark: SparkSession) extends Materializer(spark) {
+    private val sc = spark.sparkContext
+    private var prefixIds = Set.empty[Int]
+    private var protectedIds = Set.empty[Int]
+
+    private def materializeTracked(d: DataFrame, eager: Boolean): (DataFrame, Set[Int]) = {
       val before = tracker.snapshot
       val c = materialize(d, eager)
       (c, tracker.snapshot.diff(before))
     }
-    def unpersistIds(ids: Set[Int]): Unit = {
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      tracker.remove(ids)
-    }
-    def sweepExcept(keep: Set[Int]): Unit =
-      unpersistIds(tracker.snapshot.diff(keep).diff(protectedIds))
-    def ckpt(d: DataFrame): DataFrame = {
-      val (c, added) = matTracked(d)
-      sweepExcept(added)
+    private def sweepExcept(keep: Set[Int]): Unit =
+      tracker.release(tracker.snapshot.diff(keep).diff(protectedIds))
+
+    // Catalyst's input-size estimate (exact file bytes for a parquet scan)
+    // gates the split: the savings scale with corpus size, the cost is fixed
+    def splitAt(firstSelf: Int, nStages: Int, pages: DataFrame, cfg: CascadeConfig): Option[Int] =
+      if (firstSelf >= 0 &&
+          pages.queryExecution.optimizedPlan.stats.sizeInBytes >= cfg.payloadSplitMinBytes)
+        Some(firstSelf)
+      else None
+
+    // LAZY: the first downstream action (the first selfRef stage's stats
+    // pass, or the prefix checkpoint) computes and pins it inside that same
+    // Spark action; the next sweep reaps it, by which point both are
+    // materialized
+    def dedupInput(df: DataFrame): DataFrame = materialize(df, eager = false)
+
+    def prefix(df: => DataFrame): DataFrame = {
+      val (c, ids) = materializeTracked(df, eager = true)
+      prefixIds = ids
+      sweepExcept(ids) // the ingest-dedup blocks are superseded here
       c
     }
-    // UI/diagnostic labels for the run's driver-side actions (guide: label
-    // your jobs); thread-local, cleared after each materialization
-    def labeled[T](desc: String)(f: => T): T = {
-      sc.setJobDescription(desc)
-      try f finally sc.setJobDescription(null)
+
+    // the payload stays a LAZY projection of the pinned prefix blocks —
+    // materializing it as its own checkpoint would put a second copy of the
+    // text bytes in the storage pool (measured: eviction/spill churn that
+    // nearly doubled the 2M-doc cascade). UnsafeRow field access is
+    // offset-based, so the end-join's pruned read never copies bytes the
+    // consumer didn't ask for.
+    def light(df: DataFrame): DataFrame = {
+      protectedIds ++= prefixIds
+      materialize(df, eager = true)
     }
+
+    def stage(d: DataFrame, s: StageDef, i: Int, durableInput: Boolean): DataFrame =
+      if (s.selfRef && !durableInput) foldSelfRef(d, s) else s.f(d)
+
+    def finish(checked: DataFrame, label: DataFrame => DataFrame): DataFrame = label(checked)
+
     /** Fold one selfRef stage over a LAZY input checkpoint: the stage's own
       * stats pass (every selfRef stage measures its per-group statistics
       * with a driver action while its plan is built — that is what makes it
       * selfRef) materializes the checkpoint inside that same Spark action,
-      * so the separate eager-checkpoint job the old shape paid per stage
-      * disappears. The sweep of superseded blocks is DEFERRED until after
-      * the stage ran: the lazy checkpoint's compute still reads the
-      * previous stage's blocks, and the stage's own stats checkpoints (its
-      * broadcast builds read them at the NEXT action) must survive it —
-      * both are exactly what the old shape kept alive across this window.
-      * A defensive check forces materialization in the (currently
-      * impossible) case of a selfRef stage that ran no action, so the
-      * sweep can never strand an unmaterialized lineage-truncated plan.
+      * so no separate eager-checkpoint job is paid per stage. The sweep of
+      * superseded blocks is DEFERRED until after the stage ran: the lazy
+      * checkpoint's compute still reads the previous stage's blocks, and
+      * the stage's own stats checkpoints (its broadcast builds read them at
+      * the NEXT action) must survive it. A defensive check forces
+      * materialization in the (currently impossible) case of a selfRef
+      * stage that ran no action, so the sweep can never strand an
+      * unmaterialized lineage-truncated plan.
       */
-    def foldSelfRef(d: DataFrame, s: StageDef): DataFrame =
-      labeled(s"cascade: stage ${s.code}") {
-        val (c, added) = matTracked(d, eager = false)
-        val before = tracker.snapshot
-        val out = s.f(c)
-        val fullyCached = sc.getRDDStorageInfo.exists(i =>
-          added.contains(i.id) && i.numCachedPartitions == i.numPartitions)
-        if (!fullyCached) c.count() // force: see scaladoc
-        sweepExcept(added ++ tracker.snapshot.diff(before))
+    private def foldSelfRef(d: DataFrame, s: StageDef): DataFrame = {
+      val (c, added) = materializeTracked(d, eager = false)
+      val before = tracker.snapshot
+      val out = s.f(c)
+      val fullyCached = sc.getRDDStorageInfo.exists(i =>
+        added.contains(i.id) && i.numCachedPartitions == i.numPartitions)
+      if (!fullyCached) c.count() // force: see scaladoc
+      sweepExcept(added ++ tracker.snapshot.diff(before))
+      out
+    }
+  }
+
+  /** TableIO snapshot commits. The row-local prefix — every text/html
+    * consumer — is committed ONCE, full width with the [[RowId]]; its
+    * presence is the progress indicator of a restart. Every later stage
+    * snapshot holds only the light working set, because the neighborhood
+    * stages never read the payload; parquet being columnar, even the first
+    * light projection of the prefix never moves the text bytes off disk.
+    * This removes the text bytes from every per-stage write AND every
+    * stats-pass re-read — the dominant I/O term of a 10^12-doc cascade.
+    * Re-reading each committed stage truncates lineage (which the
+    * iterate-to-convergence checks need, SURVEY.md §4) and guarantees the
+    * next stage consumes exactly what a restart would consume. Always
+    * splits; the stats checkpoints a stage registers while its plan is
+    * built are reaped once its snapshot is committed.
+    */
+  private final class Snapshot(spark: SparkSession, root: String, stopAfterStages: Int)
+      extends Materializer(spark) {
+    private var committed = 0
+    private def stopped = committed >= stopAfterStages
+    private def reap(): Unit = tracker.release(tracker.snapshot)
+
+    def splitAt(firstSelf: Int, nStages: Int, pages: DataFrame, cfg: CascadeConfig): Option[Int] =
+      Some(if (firstSelf < 0) nStages else firstSelf)
+
+    // a lazy re-read of the source: the prefix commit is the durable form
+    def dedupInput(df: DataFrame): DataFrame = df
+
+    def prefix(df: => DataFrame): DataFrame = {
+      if (TableIO.currentSnapshot(root, PrefixTable).isEmpty) TableIO.write(df, root, PrefixTable)
+      TableIO.read(spark, root, PrefixTable)
+    }
+
+    def light(df: DataFrame): DataFrame = df
+
+    def stage(d: DataFrame, s: StageDef, i: Int, durableInput: Boolean): DataFrame = {
+      val table = stageTable(i, s.code)
+      if (TableIO.currentSnapshot(root, table).isDefined) TableIO.read(spark, root, table)
+      else if (stopped) d
+      else {
+        TableIO.write(s.f(d), root, table)
+        committed += 1
+        val out = TableIO.read(spark, root, table)
+        reap()
         out
       }
-    // ingest-time duplicate drop BEFORE any check (read_data_to_check.r:
-    // 122-143): duplicates must never inflate neighborhood statistics.
-    // Self-join-shaped, so the input is materialized like selfRef stages;
-    // its blocks (still carrying html) are dead the moment the next
-    // checkpoint materializes, and the baseline sweep reaps them there.
-    // The materialized frame is the PRE-feature normalization (the drop
-    // reads only url/warc_ts/text): the checkpoint is narrower by the
-    // whole f_* working set, and the feature pass runs once per surviving
-    // row, after the drop (result-identical — features are deterministic
-    // per row; see Ingest.normalizeCore).
-    // LAZY checkpoint: the first downstream action (the first selfRef
-    // stage's stats pass, or the payload-split `full` materialization)
-    // computes and pins it inside that same Spark action; its blocks are
-    // swept by that stage's deferred sweep, by which point both frames
-    // are materialized.
-    val deduped = if (cfg.dedupIngest) {
-      val (m, _) = matTracked(Ingest.normalizeCore(pages, cfg), eager = false)
-      Ingest.features(Ingest.dropDuplicatePages(m))
-    } else Ingest.normalize(pages, cfg)
-    val prepared = Ingest.stampLists(deduped, cfg)
-    val stageList = stages(cfg, models, pseudoTexts)
-    val firstSelf = stageList.indexWhere(_.selfRef)
-    // Catalyst's input-size estimate (exact file bytes for a parquet scan)
-    // gates the split: the savings scale with corpus size, the cost is fixed
-    val bigEnough =
-      pages.queryExecution.optimizedPlan.stats.sizeInBytes >= cfg.payloadSplitMinBytes
-    val checked =
-      if (firstSelf < 0 || !payloadSplit || !bigEnough)
-        stageList.foldLeft(prepared) { case (d, s) =>
-          if (s.selfRef) foldSelfRef(d, s) else s.f(d) }
+    }
+
+    def finish(checked: DataFrame, label: DataFrame => DataFrame): DataFrame =
+      if (stopped) checked // simulated mid-run kill
       else {
-        val prefixed = stageList.take(firstSelf).foldLeft(prepared) { case (d, s) => s.f(d) }
-        val (full, fullIds) = matTracked(prefixed.withColumn(RowId, monotonically_increasing_id()))
-        sweepExcept(fullIds) // the ingest-dedup blocks are superseded here
-        val outCols = full.columns.filterNot(_ == RowId)
-        // key-encoded columns live TWICE: hashed in the light set (grouping/
-        // join key) and as strings in the payload (caller-visible output)
-        val encKeys = encodedKeyCols(cfg, outCols.toSeq)
-        val payloadCols = outCols.filterNot(workingCol(cfg)) ++ encKeys
-        // fold the remaining stages; index 0 (the first selfRef stage) is
-        // already materialized, so only LATER selfRef inputs re-checkpoint
-        def foldRest(start: DataFrame): DataFrame =
-          stageList.drop(firstSelf).zipWithIndex.foldLeft(start) {
-            case (d, (s, i)) =>
-              if (s.selfRef && i > 0) foldSelfRef(d, s) else s.f(d)
-          }
-        if (payloadCols.isEmpty) {
-          foldRest(full).drop(RowId)
-        } else {
-          // payload stays a LAZY projection of the pinned `full` blocks —
-          // materializing it as its own checkpoint would put a second copy
-          // of the text bytes in the storage pool next to `full` (measured:
-          // eviction/spill churn that nearly doubled the 2M-doc cascade).
-          // UnsafeRow field access is offset-based, so the end-join's
-          // pruned read of (RowId, payloadCols) never copies bytes the
-          // consumer didn't ask for.
-          val payload = full.select((RowId +: payloadCols).map(col): _*)
-          protectedIds ++= fullIds // `full` stays pinned: it backs `payload`
-          val (light, lightIds) =
-            matTracked(encodeKeys(
-              full.select(full.columns.filter(workingCol(cfg)).map(col): _*), encKeys))
-          sweepExcept(lightIds)
-          // measurement hook for the working-set-width A/B (pair with
-          // SPARK_GRAFT_WIDE_LIGHT): rows and stored bytes of the light
-          // checkpoint, i.e. what every post-prefix stat scan re-reads
-          if (sys.env.contains("SPARK_GRAFT_SPLIT_DEBUG")) {
-            val n = light.count()
-            val bytes = sc.getRDDStorageInfo
-              .filter(i => lightIds.contains(i.id)).map(i => i.memSize + i.diskSize).sum
-            System.err.println(
-              f"[cascade] light working set: $n rows, $bytes bytes (${
-                bytes.toDouble / math.max(n, 1L)}%.1f B/row, cols=${light.columns.length})")
-          }
-          foldRest(light)
-            .drop(encKeys: _*) // hashed keys: the string originals rejoin below
-            .join(payload, Seq(RowId)) // 1:1 by construction
-            .select(outCols.map(col): _*)
-        }
+        val labeled = label(checked)
+        TableIO.write(labeled, root, "pages_labeled")
+        TableIO.write(metrics(labeled), root, "metrics")
+        reap()
+        TableIO.read(spark, root, "pages_labeled")
       }
-    finalDecision(checked)
-    } // runTracker scope
   }
 
   private val observeId = new java.util.concurrent.atomic.AtomicLong()

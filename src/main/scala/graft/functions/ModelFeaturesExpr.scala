@@ -28,8 +28,7 @@ import graft.stages.Models
   * BlockManager whose lock serializes all task threads (measured in round 3:
   * a 32-thread futex storm capping scaling at ~0.48). The `@transient lazy
   * val` below re-resolves once per deserialized task closure and holds a
-  * STRONG reference for the task's lifetime — identical semantics to the
-  * ModelPin the UDF used.
+  * STRONG reference for the task's lifetime.
   *
   * Reference analog: the first-guess fields are loaded once and consulted
   * row-locally by every check (/root/reference/functions/IO/read_fgs.r:

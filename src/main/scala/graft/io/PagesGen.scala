@@ -68,8 +68,8 @@ object PagesGen {
     // analog) keeps small-σ hosts from manufacturing z ≥ 3.2 out of noise
     // (a 79-word sctout doc on a σ=0.14 host measured z 3.4 — a stolen
     // flag). The reference always iterates its spatial checks to
-    // convergence (i.*=10, test/ini/ta_sct.ini:7); all three knobs were
-    // calibrated via ProfileBuddyCalib/ProfileRepCalib.
+    // convergence (i.*=10, test/ini/ta_sct.ini:7); all three knobs are
+    // pinned by the per-check F1 gate (FixtureF1Spec).
     buddyMinN = 5, buddyZ = 3.2, buddyMaxIter = 4, buddySdFloor = 180.0,
     sctMinN = 5, sctZ = 2.2,
     dualMinN = 5, dualEventWords = 200, dualLoFrac = 0.1, dualHiFrac = 0.95,
@@ -87,7 +87,7 @@ object PagesGen {
     maxRefsPerGroup = Some(10000),
     buddyLog1p = true,
     // repetition ceilings (503): calibrated on the fixture distribution
-    // (ProfileRepCalib) — ngramspam sits at top2 ≥ 0.24 / top3 ≥ 0.22,
+    // (FixtureF1Spec gates it) — ngramspam sits at top2 ≥ 0.24 / top3 ≥ 0.22,
     // every class not already sticky-flagged earlier at ≤ 0.12; the dup
     // fractions stay off because windowed clean text legitimately repeats
     // n-grams (d2 up to ~0.9)

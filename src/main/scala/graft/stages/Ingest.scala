@@ -78,6 +78,8 @@ object Ingest {
   /** withColumn-chain collapse: apply a SEQUENCE of (name, expr) pairs as
     * ONE Dataset operation with withColumn's exact semantics — an existing
     * name is replaced in place, a new name is appended in sequence order.
+    * Names match the way the session resolves them (case-insensitively
+    * under the default `spark.sql.caseSensitive=false`), as in withColumn.
     * Every Dataset operation analyzes the whole upstream logical plan
     * eagerly, so an n-column withColumn chain over the cascade's deep
     * prefix costs n full analyzer passes; this helper pays one. Expressions
@@ -86,11 +88,13 @@ object Ingest {
     * must keep as separate layers.
     */
   private[graft] def withCols(df: DataFrame, cols: Seq[(String, Column)]): DataFrame = {
-    val m = cols.toMap
-    require(m.size == cols.size, "duplicate column names in withCols")
+    val resolve = df.sparkSession.sessionState.conf.resolver
+    require(cols.forall { case (n, _) => cols.count(p => resolve(p._1, n)) == 1 },
+      "duplicate column names in withCols")
     val existing = df.columns
-    val replaced = existing.map(c => m.get(c).map(_.as(c)).getOrElse(col(c)))
-    val appended = cols.collect { case (n, e) if !existing.contains(n) => e.as(n) }
+    val replaced = existing.map(c =>
+      cols.find(p => resolve(p._1, c)).map { case (n, e) => e.as(n) }.getOrElse(col(c)))
+    val appended = cols.collect { case (n, e) if !existing.exists(resolve(_, n)) => e.as(n) }
     df.select(replaced ++ appended: _*)
   }
 

@@ -60,18 +60,10 @@ object Models {
 }
 
 /** Checks and transforms that consult broadcast models. The model lookups
-  * run as deterministic scalar UDFs over broadcast-captured maps (the
-  * closure is serialized once per executor, KenLM-style); everything else
-  * stays a Catalyst expression.
+  * run as one native expression over the broadcast model maps (shipped
+  * once per executor, KenLM-style); everything else stays a Catalyst
+  * expression.
   */
-/** Strong executor-side pin of a broadcast [[Models]] — see the scaladoc at
-  * the use site in [[ModelChecks.withModelFeatures]].
-  */
-private[graft] final class ModelPin(
-    bc: org.apache.spark.broadcast.Broadcast[Models]) extends Serializable {
-  @transient lazy val m: Models = bc.value
-}
-
 object ModelChecks {
   import Cols._
 
@@ -123,12 +115,10 @@ object ModelChecks {
     // and tokenHashes treat "" exactly as they treated null in the UDF form.
     val bc = broadcastOf(df, models)
     val nMembers = models.lms.size
-    val mf =
-      if (sys.env.contains("SPARK_GRAFT_MODEL_UDF")) legacyFeatUdf(bc, nMembers, col(Text))
-      else org.apache.spark.sql.GraftColumns.of(
-        graft.functions.ModelFeaturesExpr(
-          org.apache.spark.sql.GraftColumns.exprOf(coalesce(col(Text), lit(""))),
-          bc, nMembers))
+    val mf = org.apache.spark.sql.GraftColumns.of(
+      graft.functions.ModelFeaturesExpr(
+        org.apache.spark.sql.GraftColumns.exprOf(coalesce(col(Text), lit(""))),
+        bc, nMembers))
     // two Dataset ops, not 4+n: the expensive expression gets its own
     // layer (each field extraction references the COLUMN, so it evaluates
     // once per row), then every field lands in one projection
@@ -140,28 +130,6 @@ object ModelChecks {
       DetLangConf -> col("_mf.det_conf")) ++
       (0 until nMembers).map(i => s"$LogPpl$i" -> col(s"_mf.ppl$i")) :+
       (LogPpl -> col(s"_mf.ppl0"))).drop("_mf")
-  }
-
-  /** A/B hook (SPARK_GRAFT_MODEL_UDF=1): the round-3 fused-UDF form of the
-    * feature pass, kept so the native-expression win stays measurable on
-    * identical inputs. Emits the same struct field names as the expression.
-    * The ModelPin strong-pins the broadcast per task (see ModelFeaturesExpr
-    * scaladoc for the failure mode it prevents).
-    */
-  private def legacyFeatUdf(bc: org.apache.spark.broadcast.Broadcast[Models],
-      nMembers: Int, text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val pin = new ModelPin(bc)
-    val u = udf((t: String) => {
-      val m = pin.m
-      val det = m.langId.detect(t)
-      val toks = graft.ml.NgramLM.tokenHashes(t)
-      val ppls = Array.tabulate(m.lms.size)(i => m.lms(i).logPerplexityTokens(toks))
-      (det._1, det._2, ppls)
-    })
-    val raw = u(text)
-    struct(
-      (raw("_1").as("det_lang") +: raw("_2").as("det_conf") +:
-        (0 until nMembers).map(i => element_at(raw("_3"), i + 1).as(s"ppl$i"))): _*)
   }
 
   /** 902 (model form) — declared vs detected language with a confidence

@@ -95,10 +95,9 @@ object Neighborhood {
               sum("_pn").as("_n"), sum("_pg").as("_gn")))
         // one driver action measures the group cardinality (drives the join
         // form) AND whether any group exceeds the cap
-        df.sparkSession.sparkContext.setJobDescription(
-          s"stats: fused agg+ckpt (${keys.mkString(",")})")
-        val head = fused.agg(count(lit(1)), max("_gn")).head()
-        df.sparkSession.sparkContext.setJobDescription(null)
+        val head = graft.cascade.Cascade.labeled(df.sparkSession.sparkContext,
+          s"stats: fused agg+ckpt (${keys.mkString(",")})")(
+          fused.agg(count(lit(1)), max("_gn")).head())
         val nGroups = head.getLong(0)
         val maxGn = if (nGroups == 0 || head.isNullAt(1)) 0L else head.getLong(1)
         if (maxGn <= cap) {
@@ -158,14 +157,13 @@ object Neighborhood {
   /** [[statsJoinForm]] for a stats frame whose cardinality is not yet
     * known: checkpoint it (so the measuring count and the join read one
     * computation) and count it. The checkpoint blocks are registered while
-    * the enclosing stage builds, so Cascade.run's reap chain releases them
+    * the enclosing stage builds, so the cascade run's sweep releases them
     * with the stage's own materialization.
     */
   private[stages] def joinReady(stats: DataFrame, cfg: CascadeConfig): DataFrame = {
     val ck = graft.cascade.Cascade.materialize(stats)
-    stats.sparkSession.sparkContext.setJobDescription("stats: ckpt+count")
-    val n = ck.count()
-    stats.sparkSession.sparkContext.setJobDescription(null)
+    val n = graft.cascade.Cascade.labeled(stats.sparkSession.sparkContext,
+      "stats: ckpt+count")(ck.count())
     statsJoinForm(ck, n, cfg)
   }
 

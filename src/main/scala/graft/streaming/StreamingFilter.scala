@@ -23,9 +23,9 @@ import graft.stages.{Cols, Ingest, Models}
   *    drop, read_data_to_check.r:122-143).
   *
   *  - [[microBatchCascade]]: the FULL cascade (neighborhood checks
-  *    included) via `foreachBatch` — each micro-batch is a complete
-  *    snapshot run, so buddy/sct statistics are computed within the batch
-  *    window. That is a documented approximation (a batch boundary is a
+  *    included) via `foreachBatch` — each micro-batch is one run of the
+  *    cascade's stage loop with local checkpoints (Cascade.run), so
+  *    buddy/sct statistics are computed within the batch window. That is a documented approximation (a batch boundary is a
   *    statistics boundary), matching how the reference processes one
   *    observation snapshot per invocation (titan.r is a per-snapshot batch
   *    job); at crawl scale a micro-batch of one WARC segment is exactly
@@ -65,7 +65,8 @@ object StreamingFilter {
   }
 
   /** Full-cascade streaming writer: each micro-batch runs the complete
-    * batch cascade (all neighborhood checks) and `sink` receives the
+    * cascade in its local form (Cascade.run: all neighborhood checks, local
+    * checkpoints swept per stage) and `sink` receives the
     * labeled frame plus the batch id — typically a snapshot-commit
     * `TableIO.write` (idempotent by batchId) of the labeled table and the
     * per-partition metrics table.

@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.stages._
 import graft.cascade.Cascade
-import graft.io.Docs
+import graft.io.{Docs, PagesGen}
 
 /** Cascade semantics — the invariants from SURVEY.md §2.6 that make the
   * check order part of the spec.
@@ -133,5 +134,54 @@ class CascadeSpec extends SparkSpec {
     val iter = Cascade.run(Docs.pages(spark, sfDir), c2)
       .filter(col(Cols.Dqc) === FlagCodes.Buddy).count()
     assert(iter >= once)
+  }
+
+  test("local and snapshot materializers label the fixture identically") {
+    val fixtureCfg = Fixture.cfg
+    val pages = PagesGen.generate(spark, 600L)
+    def labels(df: DataFrame): Seq[(String, Int, Boolean)] =
+      df.select("url", Cols.Dqc, Cols.KeepCol).collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getBoolean(2))).toSeq.sortBy(_._1)
+    val root = java.nio.file.Files.createTempDirectory("parity").toString
+    val snapshot = labels(Cascade.runResumable(pages, fixtureCfg, root))
+    assert(snapshot.nonEmpty)
+    // the local form both below and above the payload-split size gate
+    assert(labels(Cascade.run(pages, fixtureCfg)) === snapshot)
+    assert(labels(Cascade.run(pages, fixtureCfg.copy(payloadSplitMinBytes = 0L))) === snapshot)
+  }
+
+  test("job labels nest: a job after a stats action keeps the enclosing stage label") {
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.probe")))
+          .foreach(k => descs.put(k, String.valueOf(e.properties.getProperty("spark.job.description"))))
+    }
+    val df = spark.range(400).select(
+      xxhash64(col("id")).as(Cols.UrlHash),
+      concat(lit("host"), (col("id") % 7).cast("string")).as(Cols.Domain),
+      lit(null).cast("int").as(Cols.Dqc),
+      lit(1).as(Cols.Doit),
+      (col("id") % 50).as("x"))
+    sc.addSparkListener(listener)
+    try {
+      // the fused capped-stats action and the joinReady count action
+      for ((path, c) <- Seq("fused" -> CascadeConfig(maxRefsPerGroup = Some(1000)),
+                            "joinReady" -> CascadeConfig())) {
+        sc.setJobDescription("cascade: stage 10")
+        try {
+          Neighborhood.groupStats(df, col("x"), c)
+          sc.setLocalProperty("graft.test.probe", path)
+          df.count()
+        } finally {
+          sc.setLocalProperty("graft.test.probe", null)
+          sc.setJobDescription(null)
+        }
+      }
+      org.apache.spark.ListenerDrain.drain(sc)
+      assert(descs.get("fused") === "cascade: stage 10")
+      assert(descs.get("joinReady") === "cascade: stage 10")
+    } finally sc.removeSparkListener(listener)
   }
 }

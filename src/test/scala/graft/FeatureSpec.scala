@@ -672,4 +672,20 @@ class FeatureSpec extends SparkSpec {
     assert(rep(0).getAs[Double]("slope") === 1.0)
     assert(rep(0).getAs[Double]("intercept") === -5.0)
   }
+
+  test("withCols resolves names like withColumn under either case sensitivity") {
+    val df = Seq((1, 2)).toDF("a", "b")
+    def check(): Unit = {
+      val got = Ingest.withCols(df, Seq("A" -> lit(7)))
+      val want = df.withColumn("A", lit(7))
+      assert(got.columns === want.columns)
+      assert(got.collect() === want.collect())
+    }
+    // default caseSensitive=false: "A" replaces "a" in place
+    check()
+    assert(Ingest.withCols(df, Seq("A" -> lit(7))).columns.length === 2)
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try check() // "A" is a new column
+    finally spark.conf.unset("spark.sql.caseSensitive")
+  }
 }

@@ -85,4 +85,14 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getInt(1), r.getBoolean(2))).toSeq
     assert(got.nonEmpty && got.sortBy(_._1) === want.sortBy(_._1))
   }
+
+  test("q_stream_batches: a doc_id parity with no rows leaves the other slice intact") {
+    val dir = java.nio.file.Files.createTempDirectory("one_parity").toString
+    graft.io.Docs.read(spark, sfDir).filter(col("doc_id") % 2 === 0)
+      .write.parquet(s"$dir/documents.parquet")
+    val streamed = SparkEntry.queries("q_stream_batches")(spark, dir).collect()
+    // one non-empty slice is one micro-batch over every doc: the batch twin
+    val batch = SparkEntry.queries("q_cascade")(spark, dir).collect()
+    assert(streamed.nonEmpty && streamed === batch)
+  }
 }

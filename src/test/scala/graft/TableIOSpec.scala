@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.io.{PagesGen, TableIO}
-import graft.cascade.ResumableCascade
+import graft.cascade.Cascade
 import graft.stages.Cols
 
 class TableIOSpec extends SparkSpec {
@@ -134,15 +134,15 @@ class TableIOSpec extends SparkSpec {
   test("resumable cascade: restart reuses committed stages and matches a cold run") {
     val cfg = Fixture.cfg
     val pages = PagesGen.generate(spark, 600L)
-    val cold = ResumableCascade.run(spark, pages, cfg, tmpRoot())
+    val cold = Cascade.runResumable(pages, cfg, tmpRoot())
       .select("url", Cols.Dqc).collect().map(r => (r.getString(0), r.getInt(1))).sorted
 
     // run once, then "crash" and rerun against the same root — the second
     // run must resume from the last committed stage and agree exactly
     val root = tmpRoot()
-    ResumableCascade.run(spark, pages, cfg, root)
+    Cascade.runResumable(pages, cfg, root)
     val manifestCountBefore = Files.list(java.nio.file.Paths.get(root)).count()
-    val resumed = ResumableCascade.run(spark, pages, cfg, root)
+    val resumed = Cascade.runResumable(pages, cfg, root)
       .select("url", Cols.Dqc).collect().map(r => (r.getString(0), r.getInt(1))).sorted
     assert(resumed.sameElements(cold))
     // no new stage tables were created on resume (only labeled/metrics advance)
@@ -164,10 +164,10 @@ class TableIOSpec extends SparkSpec {
     val root = tmpRoot()
     // simulated kill: prefix + 2 light-stage commits, then stop before the
     // final label/metrics commit
-    ResumableCascade.run(spark, pages, cfg, root, stopAfterStages = 2)
+    Cascade.runResumable(pages, cfg, root, stopAfterStages = 2)
     assert(TableIO.currentSnapshot(root, "pages_labeled").isEmpty,
       "killed run must not have committed the final table")
-    assert(TableIO.currentSnapshot(root, ResumableCascade.PrefixTable).isDefined)
+    assert(TableIO.currentSnapshot(root, Cascade.PrefixTable).isDefined)
 
     // payload pruning: every post-prefix stage snapshot carries the light
     // working set only — no text/scrubbed payload bytes
@@ -184,9 +184,9 @@ class TableIOSpec extends SparkSpec {
     }
 
     // the resumed run reuses the committed stages and matches a cold run
-    val resumed = ResumableCascade.run(spark, pages, cfg, root)
+    val resumed = Cascade.runResumable(pages, cfg, root)
       .select("url", Cols.Dqc).collect().map(r => (r.getString(0), r.getInt(1))).sorted
-    val cold = ResumableCascade.run(spark, pages, cfg, tmpRoot())
+    val cold = Cascade.runResumable(pages, cfg, tmpRoot())
       .select("url", Cols.Dqc).collect().map(r => (r.getString(0), r.getInt(1))).sorted
     assert(resumed.sameElements(cold))
   }
