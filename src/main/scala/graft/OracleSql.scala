@@ -124,15 +124,28 @@ object OracleSql {
       s"CAST(round(ln(1 + CAST($nwExpr AS DOUBLE)) * 1000.0) AS BIGINT)"
     else s"CAST($nwExpr AS BIGINT)"
 
-  def qBuddy(c: CascadeConfig): String =
+  /** The one configuration of a check's `*Params` list. The single-pass
+    * oracles model exactly one configuration (the `j`-loop oracle unrolls
+    * its list explicitly), so any other length fails loudly here instead of
+    * being silently truncated.
+    */
+  private def single[P](params: Seq[P], name: String): P = {
+    require(params.size == 1,
+      s"$name: this oracle models exactly one configuration, got ${params.size}")
+    params.head
+  }
+
+  def qBuddy(c: CascadeConfig): String = {
+    val b = single(c.buddyParams, "buddyParams")
     s"""WITH f AS (SELECT doc_id, source, ${buddyXSql(c, nw)} AS nw FROM documents),
        |st AS (${buddyStats("f", "TRUE")}),
        |j AS (SELECT f.doc_id, f.nw, st.s, st.q, st.n FROM f LEFT JOIN st USING (source)),
        |m AS (SELECT doc_id, nw, s, q, n, $buddyMean AS mean FROM j),
        |v AS (SELECT doc_id, nw, n, mean, ${buddySdSql(c, "nw")} AS sd FROM m)
-       |SELECT doc_id, CASE WHEN n - 1 >= ${c.buddyMinN} AND sd > 0.0 AND
-       |  abs((CAST(nw AS DOUBLE) - mean) / sd) > ${c.buddyZ} THEN 10 END AS dqc
+       |SELECT doc_id, CASE WHEN n - 1 >= ${b.minN} AND sd > 0.0 AND
+       |  abs((CAST(nw AS DOUBLE) - mean) / sd) > ${b.z} THEN 10 END AS dqc
        |FROM v ORDER BY doc_id""".stripMargin
+  }
 
   /** One pass of the unrolled multi-pass buddy oracle: references are
     * alive rows satisfying `refExtra`; rows stamped are alive rows
@@ -193,9 +206,10 @@ object OracleSql {
   /** Priority rounds (buddy.r:112-155) as an oracle: descending classes,
     * each round's references restricted to classes >= the round's. */
   def qBuddyPrio(c: CascadeConfig): String = {
+    val b = single(c.buddyParams, "buddyParams")
     val classes = (c.priorities.values.toSet + 0).toSeq.sorted(Ordering[Int].reverse)
     qBuddyPasses(c, classes.map(p =>
-      BuddyPassSql(c.buddyMinN, c.buddyZ, s"prio >= $p", s"prio = $p")))
+      BuddyPassSql(b.minN, b.z, s"prio >= $p", s"prio = $p")))
   }
 
   /** Central-order-statistic machinery mirroring Neighborhood.sctOnce: the
@@ -232,7 +246,8 @@ object OracleSql {
   private def popMedSumSql(m0: String, m1: String, n: String): String =
     s"(CASE WHEN $n % 2 = 0 THEN $m0 + $m1 ELSE $m1 + $m1 END)"
 
-  def qSct(c: CascadeConfig): String =
+  def qSct(c: CascadeConfig): String = {
+    val p = single(c.sctParams, "sctParams")
     s"""WITH f AS (SELECT doc_id, source, CAST($nw AS BIGINT) AS x FROM documents),
        |${orderStatsCtes("s", "f", "source", "x")},
        |j AS (SELECT f.doc_id, f.source, f.x, so.n,
@@ -243,9 +258,10 @@ object OracleSql {
        |${orderStatsCtes("dd", "d", "source", "d2")},
        |md AS (SELECT source,
        |  CAST(${popMedSumSql("m0", "m1", "n")} AS DOUBLE) / 4.0 AS mad FROM ddo)
-       |SELECT doc_id, CASE WHEN n - 1 >= ${c.sctMinN} AND mad > 0.0 AND
-       |  abs(CAST(x AS DOUBLE) - loomed) / (1.4826 * mad) > ${c.sctZ} THEN 1 END AS dqc
+       |SELECT doc_id, CASE WHEN n - 1 >= ${p.minN} AND mad > 0.0 AND
+       |  abs(CAST(x AS DOUBLE) - loomed) / (1.4826 * mad) > ${p.z} THEN 1 END AS dqc
        |FROM d LEFT JOIN md USING (source) ORDER BY doc_id""".stripMargin
+  }
 
   /** Two unrolled iterations of the sct check (mirrors Cascade.iterate with
     * maxIter = 2 around Neighborhood.sctOnce): round 1 over everything,
@@ -254,7 +270,8 @@ object OracleSql {
     * round 2 can flag rows round 1 kept (reference: buddy.r:97,209; the
     * test inis iterate every spatial check, test/ini/ta_sct.ini:7).
     */
-  def qSctIter(minN: Int, z: Double): String =
+  def qSctIter(c: CascadeConfig): String = {
+    val p = single(c.sctParams, "sctParams")
     s"""WITH f AS (SELECT doc_id, source, CAST($nw AS BIGINT) AS x FROM documents),
        |${orderStatsCtes("a", "f", "source", "x")},
        |j1 AS (SELECT f.doc_id, f.source, f.x, ao.n,
@@ -265,8 +282,8 @@ object OracleSql {
        |${orderStatsCtes("ad", "e1", "source", "d2")},
        |md1 AS (SELECT source, CAST(${popMedSumSql("m0", "m1", "n")} AS DOUBLE) / 4.0 AS mad FROM ado),
        |r1 AS (SELECT e1.doc_id, e1.source, e1.x,
-       |  CASE WHEN e1.n - 1 >= $minN AND mad > 0.0 AND
-       |    abs(CAST(e1.x AS DOUBLE) - e1.loomed) / (1.4826 * mad) > $z THEN 1 END AS q1
+       |  CASE WHEN e1.n - 1 >= ${p.minN} AND mad > 0.0 AND
+       |    abs(CAST(e1.x AS DOUBLE) - e1.loomed) / (1.4826 * mad) > ${p.z} THEN 1 END AS q1
        |  FROM e1 LEFT JOIN md1 USING (source)),
        |${orderStatsCtes("b", "r1", "source", "x", "q1 IS NULL")},
        |j2 AS (SELECT r1.doc_id, r1.source, r1.x, r1.q1, bo.n,
@@ -277,22 +294,25 @@ object OracleSql {
        |${orderStatsCtes("bd", "e2", "source", "d2", "q1 IS NULL")},
        |md2 AS (SELECT source, CAST(${popMedSumSql("m0", "m1", "n")} AS DOUBLE) / 4.0 AS mad FROM bdo)
        |SELECT doc_id, CASE WHEN q1 = 1 THEN 1
-       |  WHEN q1 IS NULL AND n - 1 >= $minN AND mad > 0.0 AND
-       |    abs(CAST(x AS DOUBLE) - loomed) / (1.4826 * mad) > $z THEN 1 END AS dqc
+       |  WHEN q1 IS NULL AND n - 1 >= ${p.minN} AND mad > 0.0 AND
+       |    abs(CAST(x AS DOUBLE) - loomed) / (1.4826 * mad) > ${p.z} THEN 1 END AS dqc
        |FROM e2 LEFT JOIN md2 USING (source) ORDER BY doc_id""".stripMargin
+  }
 
-  def qDual(c: CascadeConfig): String =
+  def qDual(c: CascadeConfig): String = {
+    val p = single(c.dualParams, "dualParams")
     s"""WITH f AS (SELECT doc_id, source,
-       |  CAST($nw > ${c.dualEventWords} AS INT) AS ev FROM documents),
+       |  CAST($nw > ${p.eventWords} AS INT) AS ev FROM documents),
        |st AS (SELECT source, CAST(SUM(CAST(ev AS BIGINT)) AS BIGINT) AS evs, COUNT(*) AS evn
        |       FROM f GROUP BY source),
        |j AS (SELECT f.doc_id, f.ev, st.evs, st.evn,
        |  CAST(st.evs - CAST(f.ev AS BIGINT) AS DOUBLE) / CAST(st.evn - 1 AS DOUBLE) AS frac
        |  FROM f LEFT JOIN st USING (source))
-       |SELECT doc_id, CASE WHEN evn - 1 >= ${c.dualMinN} AND
-       |  ((frac >= ${c.dualHiFrac} AND ev = 0) OR (frac <= ${c.dualLoFrac} AND ev = 1))
+       |SELECT doc_id, CASE WHEN evn - 1 >= ${p.minN} AND
+       |  ((frac >= ${p.hiFrac} AND ev = 0) OR (frac <= ${p.loFrac} AND ev = 1))
        |  THEN 3 END AS dqc
        |FROM j ORDER BY doc_id""".stripMargin
+  }
 
   def qIsolation(c: CascadeConfig): String =
     s"""WITH st AS (SELECT source, lang, COUNT(*) AS n FROM documents GROUP BY source, lang)
@@ -841,10 +861,13 @@ object OracleSql {
     val repFrepCol = if (!repOn) "" else s", ${repFail(c)} AS f_rep"
     val repWhen = if (!repOn) "" else "\n    WHEN d0 IS NULL AND f_rep THEN 503"
     val orderClause = if (orderBy) " ORDER BY doc_id" else ""
+    val dual = single(c.dualParams, "dualParams")
+    val buddy = single(c.buddyParams, "buddyParams")
+    val sct = single(c.sctParams, "sctParams")
     s"""WITH base0 AS (
        |  SELECT doc_id, source, lang,
        |    $nw AS nw,
-       |    CAST($nw > ${c.dualEventWords} AS INT) AS ev,
+       |    CAST($nw > ${dual.eventWords} AS INT) AS ev,
        |    ${metaFail(c)} AS f_meta,
        |    ${langMismatchFail(c)} AS f_lm,
        |    ${plausFail(c)} AS f_plaus,
@@ -870,8 +893,8 @@ object OracleSql {
        |    CAST(t2.evs - CAST(s1.ev AS BIGINT) AS DOUBLE) / CAST(t2.evn - 1 AS DOUBLE) AS frac
        |  FROM s1 LEFT JOIN t2 USING (source)),
        |s2 AS (SELECT doc_id, source, lang, nw, bx, CASE
-       |    WHEN d1 IS NULL AND evn - 1 >= ${c.dualMinN} AND
-       |      ((frac >= ${c.dualHiFrac} AND ev = 0) OR (frac <= ${c.dualLoFrac} AND ev = 1))
+       |    WHEN d1 IS NULL AND evn - 1 >= ${dual.minN} AND
+       |      ((frac >= ${dual.hiFrac} AND ev = 0) OR (frac <= ${dual.loFrac} AND ev = 1))
        |    THEN 3 ELSE d1 END AS d2
        |  FROM s2a),
        |t3 AS (SELECT source,
@@ -884,8 +907,8 @@ object OracleSql {
        |s3b AS (SELECT doc_id, source, lang, nw, bx, d2, n, mean, ${buddySdSql(c, "bx")} AS sd
        |  FROM s3a),
        |s3 AS (SELECT doc_id, source, lang, nw, CASE
-       |    WHEN d2 IS NULL AND n - 1 >= ${c.buddyMinN} AND sd > 0.0 AND
-       |      abs((CAST(bx AS DOUBLE) - mean) / sd) > ${c.buddyZ}
+       |    WHEN d2 IS NULL AND n - 1 >= ${buddy.minN} AND sd > 0.0 AND
+       |      abs((CAST(bx AS DOUBLE) - mean) / sd) > ${buddy.z}
        |    THEN 10 ELSE d2 END AS d3
        |  FROM s3b),
        |${orderStatsCtes("t4", "s3", "source", "nw", alive3)},
@@ -899,8 +922,8 @@ object OracleSql {
        |t4m AS (SELECT source,
        |    CAST(${popMedSumSql("m0", "m1", "n")} AS DOUBLE) / 4.0 AS mad FROM t4do),
        |s4 AS (SELECT s4b.doc_id, s4b.source, s4b.lang, CASE
-       |    WHEN d3 IS NULL AND s4b.n - 1 >= ${c.sctMinN} AND mad > 0.0 AND
-       |      abs(CAST(s4b.nw AS DOUBLE) - loomed) / (1.4826 * mad) > ${c.sctZ}
+       |    WHEN d3 IS NULL AND s4b.n - 1 >= ${sct.minN} AND mad > 0.0 AND
+       |      abs(CAST(s4b.nw AS DOUBLE) - loomed) / (1.4826 * mad) > ${sct.z}
        |    THEN 1 ELSE d3 END AS d4
        |  FROM s4b LEFT JOIN t4m USING (source)),
        |t5 AS (SELECT source, lang, COUNT(CASE WHEN (d4 IS NULL OR d4 = 990) THEN 1 END) AS n

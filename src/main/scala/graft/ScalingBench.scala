@@ -46,13 +46,11 @@ object ScalingBench {
       // smaller scan splits for the same in-flight-bytes reason; the corpus
       // parquet is ~25 MB/file so this also splits multi-file packing
       .config("spark.sql.files.maxPartitionBytes", "32m")
-      // A/B hook: AQE's parallelismFirst coalescing shrinks the 4x-cores
-      // shuffle partitions back down to ~1.6x cores (e.g. 13 tasks on 8
-      // slots = two ragged waves, ~81% packing in the four checkpoint-write
-      // stages of the 2M-doc local[8] event log). Disabling coalescing
-      // keeps whole waves (32 tasks / 8 slots = 4 full waves).
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        (!sys.env.contains("SPARK_GRAFT_NO_COALESCE")).toString)
+      // AQE partition coalescing stays at its default (on). Turning it off
+      // keeps whole waves of the 4x-cores partitions, but that won only at
+      // 2M docs on 8 cores and lost at 32 cores and at 4M docs
+      // (BENCH/scaling_r3.json, coalesce_ab): partitions should be sized by
+      // data bytes, which is what coalescing does.
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

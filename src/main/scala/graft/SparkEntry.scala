@@ -33,9 +33,9 @@ object SparkEntry {
     maxSymbolRatio = 0.30,
     langStopMin = Map("en" -> 0.05),
     langMismatchMinConf = 0.10,
-    buddyMinN = 5, buddyZ = 2.0,
-    sctMinN = 5, sctZ = 2.5,
-    dualMinN = 5, dualEventWords = 85, dualLoFrac = 0.1, dualHiFrac = 0.95,
+    buddyParams = Seq(BuddyParams(5, 2.0)),
+    sctParams = Seq(SctParams(5, 2.5)),
+    dualParams = Seq(DualParams(5, 85, 0.1, 0.95)),
     isolationMinN = 3,
     blacklistDomains = Set("src19"),
     keepDomains = Set("src7"),
@@ -72,10 +72,12 @@ object SparkEntry {
   val SampleDefaultRate = 0.75
   val SampleSalt = "graft-r3"
 
-  /** z threshold for the convergence-iteration query (tighter than docCfg's
-    * sctZ so that round 2 demonstrably flags more rows at the oracle SFs).
+  /** Config of the convergence-iteration query: docCfg with a tighter sct
+    * z (2.0 instead of 2.5) so that round 2 demonstrably flags more rows at
+    * the oracle SFs, and two rounds.
     */
-  val SctIterZ = 2.0
+  val sctIterCfg: CascadeConfig = docCfg.copy(
+    sctParams = docCfg.sctParams.map(_.copy(z = 2.0)), sctMaxIter = 2)
 
   /** Multi-test-configuration buddy (the reference's `j` loop, buddy.r:101;
     * ini pairs test/ini/rr1_buddy.ini:16-20) exercised through the oracle
@@ -196,9 +198,8 @@ object SparkEntry {
     // strictly more than round 1 at the oracle SFs (removing an outlier
     // shrinks its neighborhood's MAD)
     "q_check_sct_iter" -> ((s, dir) => {
-      val itCfg = docCfg.copy(sctZ = SctIterZ, sctMaxIter = 2)
-      Cascade.iterate(norm(s, dir), itCfg.sctMaxIter, itCfg.sctBreakAt, FlagCodes.Sct)(
-        Neighborhood.sctOnce(_, itCfg))
+      Cascade.iterate(norm(s, dir), sctIterCfg.sctMaxIter, sctIterCfg.sctBreakAt, FlagCodes.Sct)(
+        Neighborhood.sctOnce(_, sctIterCfg))
         .select(col("doc_id"), col(Cols.Dqc).cast("int").as("dqc"))
         .orderBy("doc_id")
     }),
@@ -632,7 +633,7 @@ object SparkEntry {
     "q_check_sct"          -> OracleSql.qSct(docCfg),
     "q_check_dual"         -> OracleSql.qDual(docCfg),
     "q_check_isolation"    -> OracleSql.qIsolation(docCfg),
-    "q_check_sct_iter"     -> OracleSql.qSctIter(docCfg.sctMinN, SctIterZ),
+    "q_check_sct_iter"     -> OracleSql.qSctIter(sctIterCfg),
     "q_check_crossfield"   -> OracleSql.qCrossField,
     "q_cascade"            -> OracleSql.qCascade(docCfg),
     // the snapshot-committed form must agree with the in-memory form doc

@@ -59,21 +59,22 @@ object PagesGen {
     minDistinctWordRatio = 0.08,
     langStopMin = Map("en" -> 0.02),
     langMismatchMinConf = 0.05,
-    // buddyZ 3.2 + iteration + σ floor: a planted cluster of k same-group
+    // buddy z 3.2 + iteration + σ floor: a planted cluster of k same-group
     // outliers caps the achievable z at sqrt(n/k) no matter how extreme
     // they are (they dominate the group σ themselves) — six on one fixture
     // host measured z_max ≈ 3.5 under n ≈ 96, iteration-proof at z=4, so
     // the threshold must sit below the cluster ceiling. The σ floor (180
-    // milli-log1p ≈ 0.18 in log1p units, the fgtSdFloor/sig2o-minimum
+    // milli-log1p ≈ 0.18 in log1p units, the fgt sdFloor/sig2o-minimum
     // analog) keeps small-σ hosts from manufacturing z ≥ 3.2 out of noise
     // (a 79-word sctout doc on a σ=0.14 host measured z 3.4 — a stolen
     // flag). The reference always iterates its spatial checks to
     // convergence (i.*=10, test/ini/ta_sct.ini:7); all three knobs are
     // pinned by the per-check F1 gate (FixtureF1Spec).
-    buddyMinN = 5, buddyZ = 3.2, buddyMaxIter = 4, buddySdFloor = 180.0,
-    sctMinN = 5, sctZ = 2.2,
-    dualMinN = 5, dualEventWords = 200, dualLoFrac = 0.1, dualHiFrac = 0.95,
-    fgtZ = 5.0, fgtSdFloor = 0.3,
+    buddyParams = Seq(graft.model.BuddyParams(5, 3.2)),
+    buddyMaxIter = 4, buddySdFloor = 180.0,
+    sctParams = Seq(graft.model.SctParams(5, 2.2)),
+    dualParams = Seq(graft.model.DualParams(5, 200, 0.1, 0.95)),
+    fgtParams = Seq(graft.model.FgtParams(5.0, 0.3)),
     maxLogPpl = 2.2,
     fgDualDigitRatio = 0.2, fgDualMinN = 5, fgDualLoFrac = 0.1, fgDualHiFrac = 0.95,
     isolationMinN = 3, isolationKeys = Seq("domain", "lang"),

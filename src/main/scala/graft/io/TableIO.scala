@@ -74,6 +74,7 @@ object TableIO {
     * partial commit.
     */
   def write(df: DataFrame, root: String, name: String): Long = {
+    requireNoSpeculation(df.sparkSession.sparkContext.getConf)
     val prev = readManifest(root, name).getOrElse(Manifest(-1L, Nil))
     val id = prev.current + 1
     // claim the id FIRST: with dir-per-snapshot data layout the loser of a
@@ -136,6 +137,19 @@ object TableIO {
     }
     id
   }
+
+  /** Refuse snapshot writes under speculative execution. [[write]] uses
+    * direct task commit, so two attempts of one task can both leave a part
+    * file in the snapshot directory, and [[footerRowCount]] would count the
+    * duplicate rows. A running context's core conf cannot change, so the
+    * check takes the conf itself and [[write]] calls it before claiming the
+    * commit marker.
+    */
+  def requireNoSpeculation(conf: org.apache.spark.SparkConf): Unit =
+    if (conf.getBoolean("spark.speculation", false))
+      throw new IllegalStateException(
+        "TableIO.write refuses to run with spark.speculation=true: direct task " +
+          "commit can leave duplicate part files from speculative attempts")
 
   /** Committed-snapshot row count from the parquet FOOTERS, read on the
     * driver — no Spark job. This is how Iceberg itself records row counts

@@ -74,7 +74,8 @@ final case class Bounds(min: Double, max: Double) {
 /** One buddy-check configuration — the reference runs a *sequence* of these
   * per check invocation (the `j` loop over radii/threshold pairs,
   * /root/reference/functions/checks/buddy.r:101 with ini pairs like
-  * test/ini/rr1_buddy.ini:16-20).
+  * test/ini/rr1_buddy.ini:16-20). A check with one configuration is a
+  * one-element list.
   */
 final case class BuddyParams(minN: Int, z: Double)
 
@@ -110,7 +111,9 @@ final case class SourceSpec(
   * TITAN parameterizes every check per (test j, provider f) with recycle
   * rules (/root/reference/functions/checks/buddy.r:30-52) merged from a
   * ~200-flag CLI (functions/IO/argparser.r:85-110). We keep a typed config
-  * tree instead; per-provider overrides are maps keyed by domain.
+  * tree instead; per-provider overrides are maps keyed by domain. Each
+  * check with a `j` loop (buddy, sct, sct_dual, fgt) is configured only by
+  * its `*Params` list, which must not be empty.
   *
   * doit semantics (argparsers/argparser_doit.r:4): 0 = provider excluded
   * entirely, 1 = rows used as references and testable, 2 = used as
@@ -148,13 +151,11 @@ final case class CascadeConfig(
     // cross-provider key (e.g. lang) makes priority rounds meaningful, as
     // in the reference where providers share the spatial neighborhoods
     buddyKeys: Seq[String] = Seq("domain"),
-    buddyMinN: Int = 5,
-    buddyZ: Double = 2.5,
     buddyMaxIter: Int = 1,
     buddyBreakAt: Long = 0L,
-    // multi-test-configuration loop (reference `j` loop, buddy.r:101);
-    // empty = single configuration from (buddyMinN, buddyZ)
-    buddyParams: Seq[BuddyParams] = Nil,
+    // (minN, z) per test configuration, applied in order (reference `j`
+    // loop, buddy.r:101); at least one
+    buddyParams: Seq[BuddyParams] = Seq(BuddyParams(5, 2.5)),
     // variance-stabilizing fixed-point log1p before the buddy z test
     // (boxcox analog, misc/statistics_util.r:101-107)
     buddyLog1p: Boolean = false,
@@ -162,31 +163,22 @@ final case class CascadeConfig(
     // buddyLog1p). A near-degenerate neighborhood (every doc the same
     // length) otherwise manufactures huge z from noise; the reference
     // floors its gaussian spreads the same way (sct's sig2o minimum,
-    // functions/checks/sct_resistant.r; cf. fgtSdFloor). 0 = off.
+    // functions/checks/sct_resistant.r; cf. FgtParams.sdFloor). 0 = off.
     buddySdFloor: Double = 0.0,
     // sct (1) — robust z via median/MAD
-    sctMinN: Int = 5,
-    sctZ: Double = 3.0,
     sctMaxIter: Int = 1,
     sctBreakAt: Long = 0L,
-    // multi-test-configuration loop for sct (reference `j` loop, the shared
-    // skeleton of all four spatial drivers); empty = single configuration
-    // from (sctMinN, sctZ)
-    sctParams: Seq[SctParams] = Nil,
-    // sct_dual (3) — binary event consistency
-    dualMinN: Int = 5,
-    dualEventWords: Int = 60,
-    dualLoFrac: Double = 0.2,
-    dualHiFrac: Double = 0.8,
-    // multi-test-configuration loop for sct_dual; empty = single
-    // configuration from the dual* scalars above
-    dualParams: Seq[DualParams] = Nil,
-    // fgt (11) — deviation vs broadcast model mean/sd, ensemble majority
-    fgtZ: Double = 4.0,
-    fgtSdFloor: Double = 0.3, // dispersion floor so near-constant corpora don't over-flag
-    // multi-test-configuration loop for fgt (fgt.r:257-267 `j` loop);
-    // empty = single configuration from (fgtZ, fgtSdFloor)
-    fgtParams: Seq[FgtParams] = Nil,
+    // (minN, z) per test configuration, applied in order (the `j` loop
+    // shared by all four spatial drivers); at least one
+    sctParams: Seq[SctParams] = Seq(SctParams(5, 3.0)),
+    // sct_dual (3) — binary event consistency: (minN, eventWords, loFrac,
+    // hiFrac) per test configuration, applied in order; at least one
+    dualParams: Seq[DualParams] = Seq(DualParams(5, 60, 0.2, 0.8)),
+    // fgt (11) — deviation vs broadcast model mean/sd, ensemble majority:
+    // (z, sdFloor) per test configuration, applied in order (fgt.r:257-267
+    // `j` loop); the sd floor keeps near-constant corpora from over-flagging.
+    // At least one
+    fgtParams: Seq[FgtParams] = Seq(FgtParams(4.0, 0.3)),
     // perplexity outlier (2) — absolute bound vs the broadcast LM
     maxLogPpl: Double = 8.0,
     // sct_fg_dual (4) — binary event vs pseudo-doc-augmented neighborhood
@@ -243,6 +235,11 @@ final case class CascadeConfig(
     payloadSplitMinBytes: Long = 256L * 1024 * 1024,
     // which checks run (TITAN: each check behind a CLI switch, titan.r:140-256)
     enabled: Set[Int] = CascadeConfig.allChecks) {
+
+  require(buddyParams.nonEmpty, "buddyParams must list at least one configuration")
+  require(sctParams.nonEmpty, "sctParams must list at least one configuration")
+  require(dualParams.nonEmpty, "dualParams must list at least one configuration")
+  require(fgtParams.nonEmpty, "fgtParams must list at least one configuration")
 
   /** Is any repetition ceiling configured? (503 runs only when so.) */
   def repetitionActive: Boolean =

@@ -143,18 +143,14 @@ object ModelChecks {
       FlagCodes.LangMismatch, flagsKeep = false)
 
   /** 11 — fgt analog: deviation of doc perplexity from the broadcast
-    * background mean beyond fgtZ·sd, voted over the LM ensemble with
+    * background mean beyond z·sd, voted over the LM ensemble with
     * majority ≥ nens/2 (functions/checks/fgt.r:267-289,336-343). Honors the
     * multi-test-configuration loop shared by all four spatial drivers
     * (fgt.r:257-267): each configuration is applied as its own sticky pass,
     * so later configurations see the flags earlier ones stamped.
     */
-  def fgt(df: DataFrame, cfg: CascadeConfig, models: Models): DataFrame = {
-    val params =
-      if (cfg.fgtParams.nonEmpty) cfg.fgtParams
-      else Seq(graft.model.FgtParams(cfg.fgtZ, cfg.fgtSdFloor))
-    params.foldLeft(df)((d, p) => fgtOnce(d, p, models))
-  }
+  def fgt(df: DataFrame, cfg: CascadeConfig, models: Models): DataFrame =
+    cfg.fgtParams.foldLeft(df)((d, p) => fgtOnce(d, p, models))
 
   private def fgtOnce(df: DataFrame, p: graft.model.FgtParams,
                       models: Models): DataFrame = {
@@ -240,28 +236,14 @@ object ModelChecks {
     val keepCols = marked.columns.toSet
     val aligned = pseudo.select(pseudo.columns.filter(keepCols).map(col): _*)
     val unioned = marked.unionByName(aligned, allowMissingColumns = true)
-    val event = (col(DigitRatio) > cfg.fgDualDigitRatio).cast("int")
     // capped mode: groupStats' fused pass measures the per-domain group
     // sizes (real eligible + pseudo rows — every pseudo row is
     // referenceEligible by construction) inside the one stats aggregation
-    val stats = Neighborhood.groupStats(unioned.withColumn("_ev", event), col("_ev"), cfg)
-      .withColumnRenamed("_s", "_evs").withColumnRenamed("_n", "_evn").drop("_q")
-    // join form chosen from the measured domain cardinality inside
-    // groupStats (Neighborhood.statsJoinForm): broadcast when the dimension
-    // is small, genuine SMJ + AQE skew split at web-scale cardinality
-    val joined = unioned.withColumn("_ev", event)
-      .join(stats, Seq(Domain), "left")
-    val selfIn = Neighborhood.selfInSample(cfg)
-    val evSelf = when(selfIn, col("_ev").cast("long")).otherwise(lit(0L))
-    val ns = when(selfIn, lit(1L)).otherwise(lit(0L))
-    val nn = (col("_evn") - ns).cast("double")
-    val frac = when(nn > 0, (col("_evs") - evSelf).cast("double") / nn)
-    val fail = (col("_evn") - ns) >= cfg.fgDualMinN &&
-      ((frac >= cfg.fgDualHiFrac && col("_ev") === 0) ||
-       (frac <= cfg.fgDualLoFrac && col("_ev") === 1))
-    Stage.sticky(joined, fail, FlagCodes.SctFgDual, flagsKeep = false)
+    Neighborhood.eventFractionCheck(unioned,
+      (col(DigitRatio) > cfg.fgDualDigitRatio).cast("int"), cfg,
+      cfg.fgDualMinN, cfg.fgDualLoFrac, cfg.fgDualHiFrac, FlagCodes.SctFgDual)
       .filter(!col("_pseudo"))
-      .drop("_pseudo", "_ev", "_evs", "_evn", "_gn")
+      .drop("_pseudo")
   }
 
   /** Backfill + re-check: rows flagged 901 with recoverable html get their

@@ -2,7 +2,7 @@ package graft.stages
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.model.{BuddyParams, CascadeConfig, DualParams, FlagCodes, SctParams}
+import graft.model.{BuddyParams, CascadeConfig, FlagCodes, SctParams}
 
 /** The neighborhood ("buddy"/SCT) check family — TITAN's core
   * (SURVEY.md §2.4). A document's neighborhood is its registered domain
@@ -27,6 +27,10 @@ import graft.model.{BuddyParams, CascadeConfig, DualParams, FlagCodes, SctParams
   * All sums are over integer features (exact in both Spark and the DuckDB
   * oracle); doubles appear only in the final z-score arithmetic, with the
   * operation order fixed so both engines produce bit-identical IEEE values.
+  *
+  * Buddy, sct and sct_dual run through one driver, [[spatialRounds]]: one
+  * pass per configuration of the check's `*Params` list and per priority
+  * class. Each check supplies only its round.
   */
 object Neighborhood {
   import Cols._
@@ -197,7 +201,7 @@ object Neighborhood {
   /** Per-row "my own value is inside the group statistics" indicator; true
     * everywhere in uncapped mode.
     */
-  private[stages] def selfInSample(cfg: CascadeConfig): Column = cfg.maxRefsPerGroup match {
+  private def selfInSample(cfg: CascadeConfig): Column = cfg.maxRefsPerGroup match {
     case None      => lit(true)
     case Some(cap) => coalesce(inSampleCond(cap, col("_gn")), lit(false))
   }
@@ -205,47 +209,41 @@ object Neighborhood {
   private def dropStatCols(df: DataFrame, names: String*): DataFrame =
     df.drop(names :+ "_gn": _*)
 
+  /** The skeleton of the reference's spatial drivers, written once: the
+    * multi-test-configuration loop (the `j` loop, buddy.r:101; fgt.r:257-267;
+    * ini pairs test/ini/rr1_buddy.ini:16-20) folds `params` in order, each
+    * configuration seeing the flags the previous one stamped; inside each
+    * configuration the priority rounds (buddy.r:112-155) run over the
+    * descending priority classes. A round's references (`refFilter`) are
+    * alive rows with prio >= the class, and its checked rows (`inClass`) are
+    * the class itself. With no priorities configured each configuration is
+    * a single round over everything.
+    */
+  private def spatialRounds[P](df: DataFrame, cfg: CascadeConfig, params: Seq[P])(
+      round: (DataFrame, P, Column, Column) => DataFrame): DataFrame = {
+    val classes = (cfg.priorities.values.toSet + 0).toSeq.sorted(Ordering[Int].reverse)
+    params.zipWithIndex.foldLeft(df) { case (d, (p, i)) =>
+      // materialize between configurations: each round's stats pass scans
+      // its input twice, and folding rounds over a lazy plan compounds
+      val in = if (i == 0) d else graft.cascade.Cascade.materialize(d)
+      if (classes.size == 1) round(in, p, Stage.referenceEligible, lit(true))
+      else classes.foldLeft(in)((dc, c) =>
+        round(dc, p, Stage.referenceEligible && col(Prio) >= c, col(Prio) === c))
+    }
+  }
+
   /** Buddy check (code 10). Reference: functions/checks/buddy.r — each
     * checked observation vs mean ± sd of its neighbors; here the per-doc
     * word count vs its domain's leave-one-out mean/sd. The titanlib-kernel
     * math (neighbors' mean/sd, self excluded) is spelled out in the legacy
-    * in-repo kernel statistics_util.r:15-98.
-    *
-    * Honors priority rounds (buddy.r:112-155): descending priority classes;
-    * a round's references are alive rows with prio >= the class, checked
-    * rows are the class itself. With no priorities configured this is a
-    * single round over everything.
-    *
-    * Honors the reference's multi-test-configuration loop (the `j` loop,
-    * buddy.r:101; ini pairs test/ini/rr1_buddy.ini:16-20): when
-    * `cfg.buddyParams` lists several (minN, z) configurations they are
-    * folded in order, each seeing the flags the previous one stamped.
+    * in-repo kernel statistics_util.r:15-98. One pass per configuration in
+    * `cfg.buddyParams` and priority class ([[spatialRounds]]).
     */
-  def buddyOnce(df: DataFrame, cfg: CascadeConfig): DataFrame = {
-    val configs =
-      if (cfg.buddyParams.nonEmpty) cfg.buddyParams
-      else Seq(BuddyParams(cfg.buddyMinN, cfg.buddyZ))
-    configs.zipWithIndex.foldLeft(df) { case (d, (p, i)) =>
-      // materialize between configurations: each round's stats pass scans
-      // its input twice, and folding rounds over a lazy plan compounds
-      val in = if (i == 0) d else graft.cascade.Cascade.materialize(d)
-      buddyConfigRound(in, cfg, p)
-    }
-  }
-
-  private def buddyConfigRound(df: DataFrame, cfg: CascadeConfig, params: BuddyParams): DataFrame = {
-    val prios = cfg.priorities.values.toSet + 0
-    if (prios.size == 1) buddyRound(df, cfg, params, None)
-    else prios.toSeq.sorted(Ordering[Int].reverse)
-      .foldLeft(df)((d, p) => buddyRound(d, cfg, params, Some(p)))
-  }
+  def buddyOnce(df: DataFrame, cfg: CascadeConfig): DataFrame =
+    spatialRounds(df, cfg, cfg.buddyParams)(buddyRound(_, cfg, _, _, _))
 
   private def buddyRound(df: DataFrame, cfg: CascadeConfig, params: BuddyParams,
-                         prioClass: Option[Int]): DataFrame = {
-    val refFilter = prioClass match {
-      case Some(p) => Stage.referenceEligible && col(Prio) >= p
-      case None    => Stage.referenceEligible
-    }
+                         refFilter: Column, inClass: Column): DataFrame = {
     // stats table: one row per buddy-key group; join form chosen from the
     // measured cardinality inside groupStats (statsJoinForm) — broadcast
     // while it fits, genuine SMJ + AQE skew split at the 10⁷–10⁸-domain
@@ -290,57 +288,11 @@ object Neighborhood {
       }
     val z = when(sd > 0, (x.cast("double") - mean) / sd)
 
-    val inClass = prioClass.map(p => col(Prio) === p).getOrElse(lit(true))
     val fail = inClass &&
       looN >= minN && sd > 0.0 && abs(z) > zThresh
     dropStatCols(
       Stage.sticky(joined, fail, FlagCodes.Buddy, flagsKeep = false),
       "_s", "_q", "_n")
-  }
-
-  /** Exact per-group central order statistics of an integral column over
-    * `alive` rows, computed scale-safely: groupBy (keys, value) counts —
-    * fully map-side combinable and skew-proof, because the grouping key is
-    * strictly finer than the group — then one pass over the per-group
-    * sorted (value, count) histogram. Per-group state is bounded by the
-    * number of DISTINCT values (word counts: ~10⁴), never by row count —
-    * unlike Spark's exact `percentile`, whose buffer grows with the group.
-    *
-    * Returns keys ++ (_m0, _m1, _m2, _n): the values at 0-based ranks
-    * L, L+1, L+2 where L = floor((n-2)/2) — exactly the three central
-    * order statistics needed for both the interpolated population median
-    * (DuckDB quantile_cont semantics) and the leave-one-out median.
-    */
-  def centralOrderStats(df: DataFrame, keys: Seq[String], x: Column,
-                        alive: Column): DataFrame = {
-    val keyCols = keys.map(col)
-    val v = when(alive, x.cast("long"))
-    val hist = df.groupBy(keyCols :+ v.as("_v"): _*).agg(count(v).as("_c"))
-      .filter(col("_c") > 0)
-    val g = hist.groupBy(keyCols: _*).agg(
-      sort_array(collect_list(struct(col("_v"), col("_c")))).as("_h"),
-      sum("_c").as("_n"))
-    // 0-based target ranks (doubles are exact for any realistic count)
-    val rank0 = floor((col("_n") - lit(2)).cast("double") / 2.0).cast("long")
-    val walked = aggregate(col("_h"),
-      struct(lit(0L).as("cum"),
-        lit(null).cast("long").as("m0"),
-        lit(null).cast("long").as("m1"),
-        lit(null).cast("long").as("m2")),
-      (acc, e) => {
-        val cum2 = acc.getField("cum") + e.getField("_c")
-        def pick(cur: Column, rk: Column) =
-          when(cur.isNull && cum2 > rk, e.getField("_v")).otherwise(cur)
-        struct(cum2.as("cum"),
-          pick(acc.getField("m0"), rank0).as("m0"),
-          pick(acc.getField("m1"), rank0 + 1).as("m1"),
-          pick(acc.getField("m2"), rank0 + 2).as("m2"))
-      })
-    g.select(keyCols ++ Seq(
-      walked.getField("m0").as("_m0"),
-      walked.getField("m1").as("_m1"),
-      walked.getField("m2").as("_m2"),
-      col("_n").as("_n")): _*)
   }
 
   /** SCT-resistant analog (code 1): robust z-score — the doc's deviation
@@ -360,30 +312,11 @@ object Neighborhood {
     * doubles — so the DuckDB oracle matches bit-for-bit. No broadcast
     * hints and no window: two histogram aggregations plus equi-joins.
     */
-  def sctOnce(df: DataFrame, cfg: CascadeConfig): DataFrame = {
-    val configs =
-      if (cfg.sctParams.nonEmpty) cfg.sctParams
-      else Seq(SctParams(cfg.sctMinN, cfg.sctZ))
-    configs.zipWithIndex.foldLeft(df) { case (d, (p, i)) =>
-      // materialize between configurations (see buddyOnce)
-      val in = if (i == 0) d else graft.cascade.Cascade.materialize(d)
-      sctConfigRound(in, cfg, p)
-    }
-  }
-
-  private def sctConfigRound(df: DataFrame, cfg: CascadeConfig, params: SctParams): DataFrame = {
-    val prios = cfg.priorities.values.toSet + 0
-    if (prios.size == 1) sctRound(df, cfg, params, None)
-    else prios.toSeq.sorted(Ordering[Int].reverse)
-      .foldLeft(df)((d, p) => sctRound(d, cfg, params, Some(p)))
-  }
+  def sctOnce(df: DataFrame, cfg: CascadeConfig): DataFrame =
+    spatialRounds(df, cfg, cfg.sctParams)(sctRound(_, cfg, _, _, _))
 
   private def sctRound(df: DataFrame, cfg: CascadeConfig, params: SctParams,
-                       prioClass: Option[Int]): DataFrame = {
-    val alive = prioClass match {
-      case Some(p) => Stage.referenceEligible && col(Prio) >= p
-      case None    => Stage.referenceEligible
-    }
+                       alive: Column, inClass: Column): DataFrame = {
     // ONE fused stats pass: the value order statistics AND the deviation
     // MAD come out of a single histogram aggregation ([[sctStats]]), so the
     // round costs one corpus scan, one checkpoint+count, one join — the
@@ -409,7 +342,6 @@ object Neighborhood {
 
     val dev  = abs(x.cast("double") - looMed)
     val z    = when(col("_mad") > 0, dev / (lit(1.4826) * col("_mad")))
-    val inClass = prioClass.map(p => col(Prio) === p).getOrElse(lit(true))
     val fail = inClass && (n - 1) >= params.minN && col("_mad") > 0.0 && z > params.z
     Stage.sticky(joined, fail, FlagCodes.Sct, flagsKeep = false)
       .drop("_m0", "_m1", "_m2", "_n", "_mad")
@@ -425,7 +357,8 @@ object Neighborhood {
     * corpus scan, no second join. All arithmetic stays on longs until the
     * final /4.0, so the result is bit-identical to the two-pass form (and
     * to the DuckDB oracle). Per-group state is bounded by the number of
-    * DISTINCT values, as in [[centralOrderStats]].
+    * DISTINCT values (word counts: ~10⁴), never by row count — unlike
+    * Spark's exact `percentile`, whose buffer grows with the group.
     */
   private[stages] def sctStats(df: DataFrame, keys: Seq[String], x: Column,
                                alive: Column): DataFrame = {
@@ -493,48 +426,39 @@ object Neighborhood {
     * statistics_util.r:77-94). Flag when the doc disagrees with a
     * near-unanimous neighborhood.
     */
-  def dualOnce(df: DataFrame, cfg: CascadeConfig): DataFrame = {
-    val configs =
-      if (cfg.dualParams.nonEmpty) cfg.dualParams
-      else Seq(DualParams(cfg.dualMinN, cfg.dualEventWords, cfg.dualLoFrac, cfg.dualHiFrac))
-    configs.zipWithIndex.foldLeft(df) { case (d, (p, i)) =>
-      // materialize between configurations (see buddyOnce)
-      val in = if (i == 0) d else graft.cascade.Cascade.materialize(d)
-      dualConfigRound(in, cfg, p)
+  def dualOnce(df: DataFrame, cfg: CascadeConfig): DataFrame =
+    spatialRounds(df, cfg, cfg.dualParams) { (d, p, refFilter, inClass) =>
+      eventFractionCheck(d, (col(NWords) > p.eventWords).cast("int"), cfg,
+        p.minN, p.loFrac, p.hiFrac, FlagCodes.SctDual, refFilter, inClass)
     }
-  }
 
-  private def dualConfigRound(df: DataFrame, cfg: CascadeConfig, params: DualParams): DataFrame = {
-    val prios = cfg.priorities.values.toSet + 0
-    if (prios.size == 1) dualRound(df, cfg, params, None)
-    else prios.toSeq.sorted(Ordering[Int].reverse)
-      .foldLeft(df)((d, p) => dualRound(d, cfg, params, Some(p)))
-  }
-
-  private def dualRound(df: DataFrame, cfg: CascadeConfig, params: DualParams,
-                        prioClass: Option[Int]): DataFrame = {
-    val refFilter = prioClass match {
-      case Some(p) => Stage.referenceEligible && col(Prio) >= p
-      case None    => Stage.referenceEligible
-    }
-    val event = (col(NWords) > params.eventWords).cast("int")
+  /** The leave-one-out event-fraction check shared by sct_dual (code 3)
+    * and sct_fg_dual (code 4): per domain, the fraction of reference rows
+    * whose binary `event` is 1, the row itself excluded (event-fraction
+    * kernel statistics_util.r:77-94). A checked row fails when at least
+    * `minN` neighbors remain and it disagrees with a near-unanimous
+    * neighborhood: no event under frac >= hiFrac, or an event under
+    * frac <= loFrac. The join form follows the measured domain cardinality
+    * inside [[groupStats]] ([[statsJoinForm]]).
+    */
+  private[stages] def eventFractionCheck(df: DataFrame, event: Column, cfg: CascadeConfig,
+      minN: Int, loFrac: Double, hiFrac: Double, code: Int,
+      refFilter: Column = Stage.referenceEligible,
+      inClass: Column = lit(true)): DataFrame = {
     val stats = groupStats(df.withColumn("_ev", event), col("_ev"), cfg, refFilter)
       .withColumnRenamed("_s", "_evs").withColumnRenamed("_n", "_evn").drop("_q")
-    // join form from measured cardinality (statsJoinForm, see buddyRound)
-    val joined = df.withColumn("_ev", event)
-      .join(stats, Seq(Domain), "left")
+    val joined = df.withColumn("_ev", event).join(stats, Seq(Domain), "left")
 
     val selfIn = selfInSample(cfg)
     val evs  = when(selfIn, col("_ev").cast("long")).otherwise(lit(0L))
     val ns   = when(selfIn, lit(1L)).otherwise(lit(0L))
     val nn   = (col("_evn") - ns).cast("double")
     val frac = when(nn > 0, (col("_evs") - evs).cast("double") / nn)
-    val inClass = prioClass.map(p => col(Prio) === p).getOrElse(lit(true))
-    val fail = inClass && (col("_evn") - ns) >= params.minN &&
-      ((frac >= params.hiFrac && col("_ev") === 0) ||
-       (frac <= params.loFrac && col("_ev") === 1))
+    val fail = inClass && (col("_evn") - ns) >= minN &&
+      ((frac >= hiFrac && col("_ev") === 0) ||
+       (frac <= loFrac && col("_ev") === 1))
     dropStatCols(
-      Stage.sticky(joined, fail, FlagCodes.SctDual, flagsKeep = false),
+      Stage.sticky(joined, fail, code, flagsKeep = false),
       "_ev", "_evs", "_evn")
   }
 

@@ -23,13 +23,14 @@ import graft.stages.{Cols, Ingest, Models}
   *    drop, read_data_to_check.r:122-143).
   *
   *  - [[microBatchCascade]]: the FULL cascade (neighborhood checks
-  *    included) via `foreachBatch` — each micro-batch is one run of the
+  *    included) via `foreachBatch`. Each micro-batch is one run of the
   *    cascade's stage loop with local checkpoints (Cascade.run), so
-  *    buddy/sct statistics are computed within the batch window. That is a documented approximation (a batch boundary is a
-  *    statistics boundary), matching how the reference processes one
-  *    observation snapshot per invocation (titan.r is a per-snapshot batch
-  *    job); at crawl scale a micro-batch of one WARC segment is exactly
-  *    the snapshot granularity a production pipeline wants.
+  *    buddy/sct statistics are computed within the batch window. This is a
+  *    documented approximation: a batch boundary is a statistics boundary.
+  *    It matches how the reference processes one observation snapshot per
+  *    invocation (titan.r is a per-snapshot batch job), and at crawl scale
+  *    a micro-batch of one WARC segment is exactly the snapshot
+  *    granularity a production pipeline wants.
   *
   * The batch cascade remains the primary surface (SURVEY.md §1.2 scopes the
   * engine as per-snapshot batch); this adapter exists because a 100 TB

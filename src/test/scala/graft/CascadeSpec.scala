@@ -91,7 +91,7 @@ class CascadeSpec extends SparkSpec {
     // dedupIngest off: this corpus deliberately reuses identical "w w w…"
     // texts, and the flagship config's ingest dedup would collapse them —
     // this test isolates priority-round semantics
-    val base = cfg.copy(buddyKeys = Seq("lang"), buddyZ = 2.5, buddyMinN = 3,
+    val base = cfg.copy(buddyKeys = Seq("lang"), buddyParams = Seq(BuddyParams(3, 2.5)),
       enabled = Set(FlagCodes.Buddy), blacklistDomains = Set.empty, keepDomains = Set.empty,
       dedupIngest = false, buddyLog1p = false)
 
@@ -103,7 +103,7 @@ class CascadeSpec extends SparkSpec {
     assert(out1.filter(col(Cols.Domain) === "a.example" &&
       col(Cols.Dqc) === FlagCodes.Buddy).count() === 0)
 
-    // B first (prio 1): B judged only by its own tiny class (below buddyMinN,
+    // B first (prio 1): B judged only by its own tiny class (below minN,
     // unjudgeable), then A judged against the B-contaminated pool — nothing
     // clears the z threshold. Order of judgement changes the verdict, which
     // is exactly the reference's priority semantics.

@@ -23,7 +23,7 @@ class FeatureSpec extends SparkSpec {
       .toDF("url", "domain", "lang", "text")
 
   private val buddyOnlyCfg = CascadeConfig(
-    buddyMinN = 5, buddyZ = 4.0,
+    buddyParams = Seq(BuddyParams(5, 4.0)),
     enabled = Set(FlagCodes.Buddy),
     blacklistDomains = Set.empty, keepDomains = Set.empty)
 
@@ -170,9 +170,10 @@ class FeatureSpec extends SparkSpec {
     // (z ≈ 1.6) and nothing is flagged.
     val geo = (0 until 15).map(k => 10 * (1 << k))
     val c = corpusOf("h.example", geo)
-    val raw = Cascade.run(c, buddyOnlyCfg.copy(buddyZ = 3.0))
+    val raw = Cascade.run(c, buddyOnlyCfg.copy(buddyParams = Seq(BuddyParams(5, 3.0))))
     assert(raw.filter(col(Cols.Dqc) === FlagCodes.Buddy).count() >= 1)
-    val logd = Cascade.run(c, buddyOnlyCfg.copy(buddyZ = 3.0, buddyLog1p = true))
+    val logd = Cascade.run(c, buddyOnlyCfg.copy(buddyParams = Seq(BuddyParams(5, 3.0)),
+      buddyLog1p = true))
     assert(logd.filter(col(Cols.Dqc) === FlagCodes.Buddy).count() === 0)
   }
 
@@ -218,7 +219,8 @@ class FeatureSpec extends SparkSpec {
     val df = (bigRows ++ rest).toDF("url", "domain", "lang", "text")
     val cfg = buddyOnlyCfg.copy(
       enabled = Set(FlagCodes.Buddy, FlagCodes.Sct, FlagCodes.SctDual, FlagCodes.Isolation),
-      buddyZ = 3.0, sctMinN = 5, sctZ = 3.0, dualMinN = 5, dualEventWords = 104,
+      buddyParams = Seq(BuddyParams(5, 3.0)), sctParams = Seq(SctParams(5, 3.0)),
+      dualParams = Seq(DualParams(5, 104, 0.2, 0.8)),
       isolationMinN = 3)
     val a = Cascade.run(df, cfg).groupBy(Cols.Dqc).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -335,7 +337,7 @@ class FeatureSpec extends SparkSpec {
   }
 
   test("sct j loop: later configs see earlier flags (shared spatial-driver skeleton)") {
-    // 6 near-inliers + one extreme on one domain, sctMinN at the boundary:
+    // 6 near-inliers + one extreme on one domain, minN at the boundary:
     // config 1 (z=20) flags the extreme; config 2 (z=0.01) would flag nearly
     // everything on the FULL group, but because it sees config 1's flag the
     // alive count drops to 6 and n−1 = 5 < minN = 6 — it must flag nothing.
@@ -370,6 +372,74 @@ class FeatureSpec extends SparkSpec {
       .select(Cols.NWords).as[Int].collect().toSeq
     assert(flagged === Seq(300),
       s"config 2 must see config 1's flag, got $flagged")
+  }
+
+  test("configurations × priority classes: two configurations label like the " +
+       "single-configuration runs composed (buddy, sct, dual)") {
+    // two providers, a.example in priority class 1 and b.example in class 0;
+    // in each check config 1 flags the extremes and config 2 either flags
+    // more or is held back by what config 1 already stamped
+    def corpus(a: Seq[Int], b: Seq[Int]): DataFrame =
+      corpusOf("a.example", a).union(corpusOf("b.example", b))
+    def labels(df: DataFrame): Map[String, Int] =
+      df.select(col(Cols.Url), coalesce(col(Cols.Dqc), lit(-1)))
+        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    def flagged(m: Map[String, Int], code: Int): Set[String] =
+      m.collect { case (u, c) if c == code => u }.toSet
+    def check[P](name: String, code: Int, df: DataFrame, cfg: CascadeConfig,
+                 withParams: (CascadeConfig, Seq[P]) => CascadeConfig, p1: P, p2: P)(
+                 once: (DataFrame, CascadeConfig) => DataFrame): Unit = {
+      val prepared = Cascade.materialize(Ingest.normalize(df, cfg), eager = true)
+      val first = labels(once(prepared, withParams(cfg, Seq(p1))))
+      val composed = labels(once(
+        once(prepared, withParams(cfg, Seq(p1))), withParams(cfg, Seq(p2))))
+      val both = labels(once(prepared, withParams(cfg, Seq(p1, p2))))
+      assert(both === composed, s"$name: the j loop must compose its configurations")
+      val f1 = flagged(first, code)
+      val f2 = flagged(both, code)
+      assert(f1.nonEmpty && f1.subsetOf(f2) && f2.size > f1.size,
+        s"$name: config 1 flags ${f1.toSeq.sorted}, both ${f2.toSeq.sorted}")
+      assert(Seq("a.example", "b.example").forall(d => f2.exists(_.contains(d))),
+        s"$name: both priority classes must be judged, got ${f2.toSeq.sorted}")
+    }
+    val base = buddyOnlyCfg.copy(priorities = Map("a.example" -> 1))
+    // buddy on the shared lang key, so class 0 is judged against class 1's
+    // survivors. Config 1 (z=3.5) flags 195 and 192, config 2 (z=2.5) adds
+    // 169 and 188. The nesting shows: class 0 under config 1 still sees a's
+    // 169, which shelters b's 138; running both configurations per class
+    // instead would flag 138 too
+    check[BuddyParams]("buddy", FlagCodes.Buddy,
+      corpus((90 to 110) ++ Seq(169, 195), Seq(99, 115, 138, 188, 192)),
+      base.copy(buddyKeys = Seq(Cols.Lang), enabled = Set(FlagCodes.Buddy)),
+      (c, ps) => c.copy(buddyParams = ps), BuddyParams(3, 3.5), BuddyParams(3, 2.5))(
+      Neighborhood.buddyOnce)
+    // sct: on a, config 2 would flag the near-inliers of the full group but
+    // config 1's flag drops n−1 below minN; on b enough rows stay alive
+    check[SctParams]("sct", FlagCodes.Sct,
+      corpus(Seq(98, 100, 102, 104, 106, 108, 300),
+        Seq(98, 100, 102, 104, 106, 108, 110, 130, 300)),
+      base.copy(enabled = Set(FlagCodes.Sct)),
+      (c, ps) => c.copy(sctParams = ps), SctParams(6, 20.0), SctParams(6, 0.01))(
+      Neighborhood.sctOnce)
+    // dual: config 1 flags a's lone long doc; on b the two long docs shelter
+    // each other from config 1, and config 2 flags b's short docs
+    check[DualParams]("dual", FlagCodes.SctDual,
+      corpus(Seq(50, 51, 52, 53, 54, 55, 300),
+        Seq(50, 51, 52, 53, 54, 55, 56, 57, 300, 310)),
+      base.copy(enabled = Set(FlagCodes.SctDual)),
+      (c, ps) => c.copy(dualParams = ps),
+      DualParams(5, 200, 0.1, 0.95), DualParams(6, 200, -1.0, 0.1))(
+      Neighborhood.dualOnce)
+  }
+
+  test("an empty parameter list is rejected when the config is built") {
+    val empty: Seq[() => CascadeConfig] = Seq(
+      () => CascadeConfig(buddyParams = Nil),
+      () => CascadeConfig(sctParams = Nil),
+      () => CascadeConfig(dualParams = Nil),
+      () => CascadeConfig(fgtParams = Nil),
+      () => buddyOnlyCfg.copy(sctParams = Nil))
+    empty.foreach(mk => intercept[IllegalArgumentException](mk()))
   }
 
   test("keeplist join variant: join-stamped 990 survives the spatial checks " +
@@ -414,7 +484,7 @@ class FeatureSpec extends SparkSpec {
       "the earliest crawl of the min url is the keeper")
   }
 
-  test("fgt j loop: fgtParams override the scalars and apply as sticky passes") {
+  test("fgt j loop: each fgtParams configuration applies as a sticky pass") {
     // fgt only reads pplStats + the ensemble size, so a stub model suffices
     val stubLm = graft.ml.NgramLMModel(2, 0,
       graft.ml.LongLongMap.fromPairs(Nil), 1L, 1L)
@@ -432,11 +502,10 @@ class FeatureSpec extends SparkSpec {
         .filter(col(Cols.Dqc) === FlagCodes.Fgt)
         .select(Cols.Url).as[String].collect().toSeq.sorted
     val base = buddyOnlyCfg
-    // scalar path still works: z=3 flags the 15-sd outlier
-    assert(flaggedUrls(base.copy(fgtZ = 3.0)) === Seq("https://h.example/c"))
-    // params override the scalars: loose scalar + strict param = nothing
-    assert(flaggedUrls(base.copy(fgtZ = 3.0,
-      fgtParams = Seq(FgtParams(50.0, 0.3)))) === Seq.empty)
+    // one configuration: z=3 flags the 15-sd outlier, z=50 flags nothing
+    assert(flaggedUrls(base.copy(fgtParams = Seq(FgtParams(3.0, 0.3)))) ===
+      Seq("https://h.example/c"))
+    assert(flaggedUrls(base.copy(fgtParams = Seq(FgtParams(50.0, 0.3)))) === Seq.empty)
     // multi-config: strict pass flags nothing, loose second pass flags the
     // outlier; the pre-flagged row is never touched (sticky)
     val multi = ModelChecks.fgt(df, base.copy(

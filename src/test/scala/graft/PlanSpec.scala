@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.model.{CascadeConfig, FlagCodes}
+import graft.model.{BuddyParams, CascadeConfig, FlagCodes, SctParams}
 import graft.stages.{Cols, Neighborhood}
 
 /** Physical-plan invariants for the neighborhood stats join-backs.
@@ -56,7 +56,7 @@ class PlanSpec extends SparkSpec {
     val cfg = CascadeConfig(
       enabled = Set(FlagCodes.Buddy),
       blacklistDomains = Set.empty, keepDomains = Set.empty,
-      buddyMinN = 5, buddyZ = 4.0,
+      buddyParams = Seq(BuddyParams(5, 4.0)),
       maxRefsPerGroup = Some(1000))
     val (fin, init) = executedPlanStrings(Neighborhood.buddyOnce(checkpointedCorpus(), cfg))
     assert(fin.contains("BroadcastHashJoin"),
@@ -73,7 +73,7 @@ class PlanSpec extends SparkSpec {
     val cfg = CascadeConfig(
       enabled = Set(FlagCodes.Sct),
       blacklistDomains = Set.empty, keepDomains = Set.empty,
-      sctMinN = 5, sctZ = 4.0)
+      sctParams = Seq(SctParams(5, 4.0)))
     val (fin, init) = executedPlanStrings(Neighborhood.sctOnce(checkpointedCorpus(), cfg))
     assert(fin.contains("BroadcastHashJoin"),
       s"order-stats join-backs should be broadcast:\n$fin")
@@ -87,7 +87,7 @@ class PlanSpec extends SparkSpec {
     val base = CascadeConfig(
       enabled = Set(FlagCodes.Buddy),
       blacklistDomains = Set.empty, keepDomains = Set.empty,
-      buddyMinN = 5, buddyZ = 4.0,
+      buddyParams = Seq(BuddyParams(5, 4.0)),
       maxRefsPerGroup = Some(1000))
     val corpus = checkpointedCorpus()
     val smjCfg = base.copy(statsBroadcastMaxGroups = 0L) // dimension "too big"

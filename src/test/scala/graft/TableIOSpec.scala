@@ -43,6 +43,16 @@ class TableIOSpec extends SparkSpec {
     assert(TableIO.read(spark, root, "t").count() === 0L)
   }
 
+  test("snapshot writes are refused under spark.speculation=true") {
+    val conf = new org.apache.spark.SparkConf(loadDefaults = false)
+    TableIO.requireNoSpeculation(conf)
+    TableIO.requireNoSpeculation(conf.clone.set("spark.speculation", "false"))
+    intercept[IllegalStateException](
+      TableIO.requireNoSpeculation(conf.clone.set("spark.speculation", "true")))
+    // the running test context has speculation off, so writes go through
+    TableIO.requireNoSpeculation(spark.sparkContext.getConf)
+  }
+
   test("uncommitted data is invisible and vacuumable") {
     import spark.implicits._
     val root = tmpRoot()
