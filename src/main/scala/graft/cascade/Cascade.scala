@@ -1,7 +1,7 @@
 package graft.cascade
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.io.TableIO
@@ -63,9 +63,10 @@ object Cascade {
     private val set = scala.collection.mutable.LinkedHashSet.empty[Int]
     def record(ids: Iterable[Int]): Unit = synchronized { set ++= ids }
     def snapshot: Set[Int] = synchronized { set.toSet }
-    /** Unpersist these blocks and stop tracking them. */
+    /** Unpersist these blocks (blocking: they are gone before the next
+      * stage stores its own) and stop tracking them. */
     def release(ids: Set[Int]): Unit = {
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = true)))
       synchronized { set --= ids }
     }
   }
@@ -93,6 +94,16 @@ object Cascade {
         c
     }
 
+  /** [[materialize]] eagerly, observing `metrics` (named aggregates) on the
+    * rows as the same Spark action stores them: the checkpoint and the
+    * metric values in order, with no second job reading the checkpoint.
+    */
+  def materializeMeasured(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+    val obs = Observation() // one per call: an Observation is filled once
+    val c = materialize(df.observe(obs, metrics.head, metrics.tail: _*), eager = true)
+    (c, scala.concurrent.Await.result(obs.future, scala.concurrent.duration.Duration.Inf))
+  }
+
   /** Run `f` with job description `desc`, then restore the enclosing one:
     * labels nest, so a stats action inside a stage never leaves the rest of
     * the stage's jobs unlabeled (UI/diagnostics only).
@@ -119,7 +130,7 @@ object Cascade {
     * outlier changes its neighbors' statistics
     * (/root/reference/functions/checks/buddy.r:97,209; bound like i.sct=10
     * in test/ini/ta_sct.ini:7). Each round is checkpointed to truncate
-    * lineage; the per-round suspect count is the driver-side action.
+    * lineage, and the checkpoint action itself counts the round's suspects.
     */
   def iterate(df: DataFrame, maxIter: Int, breakAt: Long, code: Int)
              (once: DataFrame => DataFrame): DataFrame = {
@@ -140,14 +151,15 @@ object Cascade {
         // PREVIOUS round's as soon as the new round is materialized — a
         // 4-round iteration otherwise keeps four full light-corpus
         // checkpoints pinned until the next stage-level sweep. The round
-        // checkpoint is LAZY: the suspect count below scans every
-        // partition and materializes it in the same Spark action (one job
-        // per round instead of two); the previous round's blocks are only
-        // unpersisted AFTER that count, since the lazy compute reads them.
+        // checkpoint is EAGER and observes its own suspect count, so the
+        // round costs one Spark action; the previous round's blocks are
+        // only unpersisted after it, since its compute reads them.
         val before = tracker.snapshot
-        cur = materialize(once(cur), eager = false)
+        val (c, m) = materializeMeasured(once(cur),
+          count(when(col(Dqc) === code, 1)).as("flagged"))
+        cur = c
         val added = tracker.snapshot.diff(before)
-        val flagged = cur.filter(col(Dqc) === code).count()
+        val flagged = m.getLong(0)
         tracker.release(prevIds)
         prevIds = added
         val fresh = flagged - prevFlagged
@@ -240,9 +252,9 @@ object Cascade {
     * consumer (metadata, backfill, scrub, model features, cross-field,
     * repetition) is row-local and runs in the prefix BEFORE the first
     * self-join stage; the neighborhood family reads only the configured
-    * group keys, the row state (doit, prio, dqc), the url HASH (salting and
-    * the deterministic neighbor-cap sample — the url string itself is
-    * payload from here on) and the specific numeric features it consumes:
+    * group keys, the row state (doit, prio, dqc), the url HASH (the
+    * deterministic neighbor-cap sample — the url string itself is payload
+    * from here on) and the specific numeric features it consumes:
     * `f_nwords` (buddy/sct and the dual event), `f_digr` (sctFgDual) and
     * the per-member perplexities (fgt/sctFg). Everything else the prefix
     * derived — the `f_stats` struct, the row-local ratio features, the
@@ -354,7 +366,7 @@ object Cascade {
       // per row; see Ingest.normalizeCore).
       def ingested: DataFrame = Ingest.stampLists(
         if (cfg.dedupIngest)
-          Ingest.features(Ingest.dropDuplicatePages(m.dedupInput(Ingest.normalizeCore(pages, cfg))))
+          Ingest.features(Ingest.dropDuplicatePages(Ingest.normalizeCore(pages, cfg), m.dedupInput))
         else Ingest.normalize(pages, cfg), cfg)
       split match {
         case None => m.finish(fold(ingested, 0, stageList.length), finalDecision)
@@ -387,8 +399,8 @@ object Cascade {
       * stage over the full frame.
       */
     def splitAt(firstSelf: Int, nStages: Int, pages: DataFrame, cfg: CascadeConfig): Option[Int]
-    /** The normalized input of the ingest duplicate drop, which scans it
-      * three times (keeper aggregate, semi-join, union).
+    /** The fingerprinted input of the ingest duplicate drop, which scans
+      * it three times (keeper aggregate, semi-join, union).
       */
     def dedupInput(df: DataFrame): DataFrame
     /** The prefix output, full width with the [[RowId]]. By name: a resumed

@@ -209,11 +209,9 @@ final case class CascadeConfig(
     // bound how many rows a giant group contributes to its own statistics
     // via deterministic hash-proportional sampling
     maxRefsPerGroup: Option[Int] = None,
-    // skew handling: #salt buckets for two-level aggregation of group stats
-    saltBuckets: Int = 8,
     // stats join-back form (Neighborhood.statsJoinForm): the per-group
-    // stats table's cardinality is MEASURED at run time (one count over an
-    // already-checkpointed frame) and the physical join is chosen
+    // stats table's cardinality is MEASURED at run time (observed by the
+    // action that checkpoints the table) and the physical join is chosen
     // statically — broadcast at or below this many groups, genuine
     // sort-merge (plus AQE skew split) above it. 2M groups ≈ ~100 MB of
     // (key, 4×long) rows: comfortably broadcastable on executors sized for

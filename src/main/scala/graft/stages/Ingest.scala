@@ -166,17 +166,20 @@ object Ingest {
     * crawl survives. Rows identical in all three of (fingerprint, url,
     * warc_ts) are collapsed to one by the final dropDuplicates (they are
     * interchangeable modulo raw html bytes — the normalized text is equal
-    * by construction).
+    * by construction). `materialize` may make the fingerprinted frame,
+    * which all three branches read, durable: one fingerprint per row.
     */
-  def dropDuplicatePages(df: DataFrame): DataFrame = {
+  def dropDuplicatePages(df: DataFrame,
+                         materialize: DataFrame => DataFrame = identity): DataFrame = {
     val keyCols = if (df.columns.contains(WarcTs)) Seq(Url, WarcTs) else Seq(Url)
     // Blank text is NOT deduplicable content: those rows carry their payload
     // in html (pending backfill) or are metadata-check fodder — collapsing
     // every empty-text row to one "keeper" would silently delete them. They
     // bypass via a null fingerprint (null keys never match a semi-join).
     val hasContent = col(Text).isNotNull && length(trim(col(Text))) > 0
-    val withFp = df.withColumn("_fp",
-      when(hasContent, TextFeatures.fingerprint(col(Text))))
+    // the 16 md5 bytes, not their 32 hex chars: `materialize` may store it
+    val withFp = materialize(df.withColumn("_fp",
+      when(hasContent, unhex(TextFeatures.fingerprint(col(Text))))))
     val keepers = withFp.filter(col("_fp").isNotNull).groupBy(col("_fp"))
       .agg(min(struct(keyCols.map(col): _*)).as("_k"))
       .select(col("_fp") +: keyCols.map(k => col("_k")(k).as(k)): _*)

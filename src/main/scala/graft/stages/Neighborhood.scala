@@ -12,14 +12,14 @@ import graft.model.{BuddyParams, CascadeConfig, FlagCodes, SctParams}
   * /root/reference/functions/misc/statistics_util.r:15-98).
   *
   * Scale design — deliberately NOT `Window.partitionBy(domain)`:
-  * neighborhood statistics are computed with a two-level (salted)
-  * `groupBy` — partial sums per (domain, salt(url)) then merge per domain —
-  * and joined back with an equi-join whose physical form is chosen from
-  * the MEASURED group cardinality ([[statsJoinForm]]): broadcast while the
-  * dimension fits (no corpus shuffle at all), genuine sort-merge + AQE
+  * neighborhood statistics are one `groupBy(domain)` of (sum, sumsq,
+  * count), joined back with an equi-join whose physical form is chosen
+  * from the MEASURED group cardinality ([[statsJoinForm]]): broadcast while
+  * the dimension fits (no corpus shuffle at all), genuine sort-merge + AQE
   * skew split at the 10⁷–10⁸-domain scale where broadcast is impossible.
-  * Map-side combine plus the salt level means a giant host domain (50% of
-  * a 100 TB corpus on one key) never lands on a single reducer, which
+  * The aggregates combine map-side (partial HashAggregate), so a giant host
+  * domain (50% of a 100 TB corpus on one key) reaches its reducer as one
+  * partial row per map task, never as rows on a single reducer, which
   * `Window.partitionBy(domain)` would force. Leave-one-out aggregates are
   * recovered algebraically from (sum, sumsq, count), so no per-row window
   * pass is ever needed.
@@ -36,7 +36,7 @@ object Neighborhood {
   import Cols._
 
   /** Exact per-domain (sum, sumsq, count) of `x` (an integral column) over
-    * reference-eligible rows, via two-level salted aggregation.
+    * reference-eligible rows, via one map-side-combined aggregation.
     *
     * `maxRefs` (the reference's neighbor cap, `num_max_outer`,
     * /root/reference/functions/checks/buddy.r:46,154-167) bounds how many
@@ -45,27 +45,18 @@ object Neighborhood {
     * min(1, cap/n) thins it, so a 10M-doc host is judged against a
     * fixed-size, reproducible subsample instead of all 10M rows.
     *
-    * FUSED capped mode (optimization round 6): the old shape always paid
-    * TWO corpus passes — a count pass for the per-group sizes, then the
-    * stats pass over the sampled corpus (plus a join of the corpus against
-    * the cap table and a join of the stats against it). But sampling only
-    * CHANGES anything when some group actually exceeds the cap; below it,
-    * `inSampleCond` is vacuously true and the sampled corpus IS the corpus.
-    * So one fused two-level aggregation over the eligible rows now yields
-    * the stats (_s,_q,_n) AND the pre-cap group sizes (_gn) together; a
-    * driver-side max over the (checkpointed, group-sized) result decides
-    * whether any group binds the cap. If none does — every oracle SF, and
-    * any corpus whose largest host sits under the cap — the fused frame is
-    * the exact answer (bit-identical: same integer sums over the same
-    * rows). Only when the cap genuinely binds does the sampling pass run,
-    * reusing the counts already in hand — same two-pass cost as before,
-    * in the regime that actually needs it.
+    * Capped mode runs ONE aggregation over the eligible rows for the stats
+    * (_s,_q,_n) AND the pre-cap group sizes (_gn); the max _gn, observed by
+    * the action that checkpoints the group-sized result, decides whether
+    * any group binds the cap. If none does — every oracle SF, and any corpus
+    * whose largest host sits under the cap — `inSampleCond` is vacuously
+    * true and the fused frame is the exact answer. Only when the cap binds
+    * does the sampling pass run, reusing the counts already in hand.
     */
   def groupStats(df: DataFrame, x: Column, cfg: CascadeConfig,
                  refFilter: Column = Stage.referenceEligible,
                  keys: Seq[String] = Seq(Domain)): DataFrame = {
     val keyCols = keys.map(col)
-    def saltCol = pmod(col(UrlHash), lit(cfg.saltBuckets.max(1))).as("_salt")
     // _n == 0 groups (present in df but with no reference-eligible row, or
     // eligible rows whose x is null) are dropped: the left join back yields
     // nulls for them, which every consumer's null-guarded math treats
@@ -75,11 +66,8 @@ object Neighborhood {
     // heavily-flagged corpus can have far more domains than
     // reference-eligible domains).
     def mergedStats(base: DataFrame, xl: Column): DataFrame =
-      base
-        .groupBy(keyCols :+ saltCol: _*)
-        .agg(sum(xl).as("_ps"), sum(xl * xl).as("_pq"), count(xl).as("_pn"))
-        .groupBy(keyCols: _*)
-        .agg(sum("_ps").as("_s"), sum("_pq").as("_q"), sum("_pn").as("_n"))
+      base.groupBy(keyCols: _*)
+        .agg(sum(xl).as("_s"), sum(xl * xl).as("_q"), count(xl).as("_n"))
         .filter(col("_n") > 0)
     cfg.maxRefsPerGroup match {
       case None =>
@@ -89,21 +77,18 @@ object Neighborhood {
         // (x may be null on an eligible row — _n counts non-null x only,
         // _gn counts every eligible row, exactly like the old count pass)
         val xl = x.cast("long")
-        val fused = graft.cascade.Cascade.materialize(
-          df.filter(refFilter)
-            .groupBy(keyCols :+ saltCol: _*)
-            .agg(sum(xl).as("_ps"), sum(xl * xl).as("_pq"),
-              count(xl).as("_pn"), count(lit(1)).as("_pg"))
-            .groupBy(keyCols: _*)
-            .agg(sum("_ps").as("_s"), sum("_pq").as("_q"),
-              sum("_pn").as("_n"), sum("_pg").as("_gn")))
-        // one driver action measures the group cardinality (drives the join
-        // form) AND whether any group exceeds the cap
-        val head = graft.cascade.Cascade.labeled(df.sparkSession.sparkContext,
+        // one driver action checkpoints the stats and measures the group
+        // cardinality (drives the join form) AND whether any group exceeds
+        // the cap
+        val (fused, m) = graft.cascade.Cascade.labeled(df.sparkSession.sparkContext,
           s"stats: fused agg+ckpt (${keys.mkString(",")})")(
-          fused.agg(count(lit(1)), max("_gn")).head())
-        val nGroups = head.getLong(0)
-        val maxGn = if (nGroups == 0 || head.isNullAt(1)) 0L else head.getLong(1)
+          graft.cascade.Cascade.materializeMeasured(
+            df.filter(refFilter).groupBy(keyCols: _*)
+              .agg(sum(xl).as("_s"), sum(xl * xl).as("_q"),
+                count(xl).as("_n"), count(lit(1)).as("_gn")),
+            count(lit(1)).as("groups"), max("_gn").as("max_gn")))
+        val nGroups = m.getLong(0)
+        val maxGn = if (nGroups == 0 || m.isNullAt(1)) 0L else m.getLong(1)
         if (maxGn <= cap) {
           // no group binds the cap: the unsampled stats ARE the capped
           // stats, and _gn (carried so consumers can re-derive per-row
@@ -159,16 +144,16 @@ object Neighborhood {
     else sizeDiscovered(stats)
 
   /** [[statsJoinForm]] for a stats frame whose cardinality is not yet
-    * known: checkpoint it (so the measuring count and the join read one
-    * computation) and count it. The checkpoint blocks are registered while
-    * the enclosing stage builds, so the cascade run's sweep releases them
-    * with the stage's own materialization.
+    * known: checkpoint it, counting its rows in the same action. The
+    * checkpoint blocks are registered while the enclosing stage builds, so
+    * the cascade run's sweep releases them with the stage's own
+    * materialization.
     */
   private[stages] def joinReady(stats: DataFrame, cfg: CascadeConfig): DataFrame = {
-    val ck = graft.cascade.Cascade.materialize(stats)
-    val n = graft.cascade.Cascade.labeled(stats.sparkSession.sparkContext,
-      "stats: ckpt+count")(ck.count())
-    statsJoinForm(ck, n, cfg)
+    val (ck, m) = graft.cascade.Cascade.labeled(stats.sparkSession.sparkContext,
+      "stats: ckpt+count")(
+      graft.cascade.Cascade.materializeMeasured(stats, count(lit(1)).as("groups")))
+    statsJoinForm(ck, m.getLong(0), cfg)
   }
 
   /** SMJ-regime half of [[statsJoinForm]]: materialize the stats table as
@@ -253,7 +238,7 @@ object Neighborhood {
     // the reference boxcoxes values before its gaussian checks
     // (misc/statistics_util.r:101-107 used in checks/buddy.r:87-93). A
     // fixed-point log1p (×1000, rounded) keeps the statistic integral so the
-    // exact two-level aggregation machinery applies unchanged.
+    // exact integer aggregation applies unchanged.
     val xv: Column =
       if (cfg.buddyLog1p) round(log1p(col(NWords).cast("double")) * 1000.0).cast("long")
       else col(NWords).cast("long")

@@ -19,9 +19,9 @@ object Cols {
 
   // derived feature columns (computed once, spatconv-style)
   val UrlHash = "f_uh"  // xxhash64(url): the only form of the url the
-                        // post-prefix stages need (salting + neighbor-cap
-                        // sampling) — 8 bytes instead of the url string in
-                        // every light checkpoint/snapshot
+                        // post-prefix stages need (neighbor-cap sampling) —
+                        // 8 bytes instead of the url string in every light
+                        // checkpoint/snapshot
   val Stats  = "f_stats" // single-pass char-class counts (TextStatsExpr)
   val NChars = "f_nchars"
   val NWords = "f_nwords"

@@ -184,4 +184,84 @@ class CascadeSpec extends SparkSpec {
       assert(descs.get("joinReady") === "cascade: stage 10")
     } finally sc.removeSparkListener(listener)
   }
+
+  /** A neighborhood-shaped frame over `n` rows (7 domains), already
+    * materialized like a stage input; `dqc` stamps every row, or none.
+    */
+  private def statsInput(n: Int, dqc: Option[Int] = None): DataFrame =
+    spark.range(n).select(
+      xxhash64(col("id")).as(Cols.UrlHash),
+      concat(lit("host"), (col("id") % 7).cast("string")).as(Cols.Domain),
+      lit(dqc.orNull).cast("int").as(Cols.Dqc),
+      lit(1).as(Cols.Doit),
+      lit(0).as(Cols.Prio),
+      (col("id") % 50).cast("int").as(Cols.NWords),
+      (col("id") % 50).as("x"))
+      .localCheckpoint(true)
+
+  test("a capped groupStats over a materialized frame runs two Spark jobs") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.probe") == "stats"))
+          jobs.incrementAndGet()
+    }
+    val df = statsInput(400)
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.probe", "stats")
+      // the aggregate's map stage, then the checkpoint that observes the
+      // group count and the largest group: no second job reads it back
+      try Neighborhood.groupStats(df, col("x"), CascadeConfig(maxRefsPerGroup = Some(1000)))
+      finally sc.setLocalProperty("graft.test.probe", null)
+      org.apache.spark.ListenerDrain.drain(sc)
+      assert(jobs.get === 2)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("groupStats, joinReady and iterate return on an empty frame and on a " +
+       "frame with no reference-eligible row") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.{Seconds, Span}
+    implicit val signaler: Signaler = ThreadSignaler
+    val buddyCfg = CascadeConfig(buddyParams = Seq(BuddyParams(2, 0.5)))
+    for ((name, df) <- Seq("empty" -> statsInput(0),
+                           "no eligible row" -> statsInput(400, Some(FlagCodes.Blacklist))))
+      TimeLimits.failAfter(Span(120, Seconds)) {
+        // capped (fused, observed max of a possibly empty table) and
+        // uncapped (joinReady) stats: no group
+        assert(Neighborhood.groupStats(df, col("x"),
+          buddyCfg.copy(maxRefsPerGroup = Some(3))).count() === 0, name)
+        assert(Neighborhood.groupStats(df, col("x"), buddyCfg).count() === 0, name)
+        // the observed per-round count reads 0 and the iteration stops
+        // after one round, flagging nothing
+        val out = Cascade.iterate(df, 3, 0L, FlagCodes.Buddy)(Neighborhood.buddyOnce(_, buddyCfg))
+        val before = df.select(Cols.UrlHash, Cols.Dqc).collect().map(r => r.getLong(0) -> r.get(1)).toMap
+        val after = out.select(Cols.UrlHash, Cols.Dqc).collect().map(r => r.getLong(0) -> r.get(1)).toMap
+        assert(after === before, name)
+      }
+  }
+
+  test("iterate's observed round counts stop it where a count() loop stops") {
+    val df = statsInput(400)
+    val buddyCfg = CascadeConfig(buddyParams = Seq(BuddyParams(2, 0.5)))
+    def labels(d: DataFrame) =
+      d.select(Cols.UrlHash, Cols.Dqc).collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    // the same convergence rule driven by a separate count per round
+    var cur = df
+    var prev = 0L
+    var rounds = 0
+    var converged = false
+    while (rounds < 10 && !converged) {
+      cur = Neighborhood.buddyOnce(cur, buddyCfg).localCheckpoint(true)
+      val flagged = cur.filter(col(Cols.Dqc) === FlagCodes.Buddy).count()
+      converged = flagged - prev <= 0
+      prev = flagged
+      rounds += 1
+    }
+    assert(rounds > 1 && prev > 0, "the fixture must iterate")
+    val iter = Cascade.iterate(df, 10, 0L, FlagCodes.Buddy)(Neighborhood.buddyOnce(_, buddyCfg))
+    assert(labels(iter) === labels(cur))
+  }
 }

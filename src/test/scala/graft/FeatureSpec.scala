@@ -208,7 +208,7 @@ class FeatureSpec extends SparkSpec {
   }
 
   test("skewed corpus (one domain >= 50% of rows): neighborhood family completes " +
-       "deterministically with salted aggregation") {
+       "deterministically with map-side-combined aggregation") {
     val bigRows = (0 until 1200).map(i =>
       (s"https://bighost.example/$i", "bighost.example", "en",
         Seq.fill(100 + (i % 7))("w").mkString(" ")))

@@ -105,4 +105,54 @@ class PlanSpec extends SparkSpec {
       .select("url", Cols.Dqc).collect().map(r => r.getString(0) -> r.get(1)).toMap
     assert(a == b, "join form changed the flags")
   }
+
+  test("groupStats aggregates once, combined map-side: one exchange on the " +
+       "group keys, over a partial HashAggregate") {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def below(p: SparkPlan): SparkPlan = p match {
+      case w: WholeStageCodegenExec => below(w.child)
+      case i: InputAdapter => below(i.child)
+      case other => other
+    }
+    val corpus = checkpointedCorpus()
+    for (cfg <- Seq(CascadeConfig(maxRefsPerGroup = Some(1000)), CascadeConfig())) {
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      plans.clear()
+      spark.listenerManager.register(listener)
+      try {
+        Neighborhood.groupStats(corpus, col(Cols.NWords), cfg)
+        org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      val exchanges = plans.asScala.toSeq.flatMap(p =>
+        Plans.collect(p) { case e: ShuffleExchangeExec => e })
+      assert(exchanges.size === 1, s"one aggregation exchange expected:\n${plans.asScala.mkString("\n")}")
+      val e = exchanges.head
+      val partKeys = e.outputPartitioning match {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+          h.references.map(_.name).toSet
+        case other => fail(s"expected a hash exchange:\n$other")
+      }
+      assert(partKeys === Set(Cols.Domain), s"partitioned on the group key alone:\n$e")
+      below(e.child) match {
+        case a: HashAggregateExec =>
+          assert(a.aggregateExpressions.nonEmpty && a.aggregateExpressions.forall(_.mode == Partial),
+            s"map-side aggregation must be partial:\n$a")
+        case other => fail(s"no partial HashAggregate below the exchange:\n$other")
+      }
+    }
+  }
 }

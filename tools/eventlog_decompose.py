@@ -1,29 +1,90 @@
 #!/usr/bin/env python3
 """Decompose a Spark event log into job wall-time vs driver gaps.
 
-Usage: eventlog_decompose.py <events_file.zstd> [--jobs]
+Usage: eventlog_decompose.py <event log> [--jobs] [--batches]
+
+The log may be zstd-compressed (`.zstd`/`.zst`, read through the `zstd`
+binary) or uncompressed (any other name, `.inprogress` included), and either
+one file or a rolling-log directory (`eventlog_v2_*`, whose `events_<n>_*`
+files are read in order).
 
 Prints total app span, sum of job spans, sum of inter-job gaps (driver-side
 fixed cost: planning, collect-side model training, parquet commits, etc),
 and with --jobs a per-job table (start-offset, duration, gap-before,
 description) so the core-count-invariant term of a scaling pair can be
 attributed to specific stages.
+
+With --batches, jobs are grouped by their `streaming.sql.batchId` job
+property, and each streaming micro-batch gets one line: its jobs, its
+distinct SQL executions (`spark.sql.execution.id`), its job time (wall time
+covered by at least one job) and its gap time (the rest of the span from its
+first job's submission to its last job's end: driver planning and commits).
+
+To get an uncompressed log from a benchmark run without editing the
+benchmark, pass Spark the settings through the JVM environment:
+
+    JAVA_TOOL_OPTIONS="-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=<dir> \\
+      -Dspark.eventLog.compress=false" python3 perfbench/run.py --workload segment_stream ...
+
+(`<dir>` must exist; the log is the newest `eventlog_v2_local-*` directory
+in it, since Spark 4 rolls event logs by default.)
 """
-import json, subprocess, sys
+import json, os, re, subprocess, sys
 
 def load(path):
-    out = subprocess.run(["zstd", "-dc", path], capture_output=True, check=True)
-    for line in out.stdout.splitlines():
+    if os.path.isdir(path):
+        parts = [f for f in os.listdir(path) if f.startswith("events_")]
+        for f in sorted(parts, key=lambda f: int(re.match(r"events_(\d+)_", f).group(1))):
+            yield from load(os.path.join(path, f))
+        return
+    if path.endswith((".zstd", ".zst")):
+        lines = subprocess.run(["zstd", "-dc", path], capture_output=True,
+                               check=True).stdout.splitlines()
+    else:
+        lines = open(path, "rb")
+    for line in lines:
         try:
             yield json.loads(line)
         except json.JSONDecodeError:
             pass
 
+def covered_ms(intervals):
+    """Wall time covered by at least one of the (start, end) intervals."""
+    merged = []
+    for s, e in sorted(intervals):
+        if merged and s <= merged[-1][1]:
+            merged[-1][1] = max(merged[-1][1], e)
+        else:
+            merged.append([s, e])
+    return sum(e - s for s, e in merged)
+
+def print_batches(jobs):
+    """One line per streaming micro-batch, from the jobs' batch ids."""
+    batches = {}
+    outside = 0
+    for s, e, _d, _sids, props in jobs:
+        bid = props.get("streaming.sql.batchId")
+        if bid is None:
+            outside += 1
+            continue
+        batches.setdefault(int(bid), []).append((s, e, props.get("spark.sql.execution.id")))
+    print(f"\n{'batch':>5} {'jobs':>5} {'sqlexec':>7} {'span(s)':>8} "
+          f"{'job(s)':>7} {'gap(s)':>7}")
+    for bid in sorted(batches):
+        b = batches[bid]
+        span = max(e for _, e, _ in b) - min(s for s, _, _ in b)
+        job = covered_ms([(s, e) for s, e, _ in b])
+        execs = len({x for _, _, x in b if x is not None})
+        print(f"{bid:5d} {len(b):5d} {execs:7d} {span/1000.0:8.2f} "
+              f"{job/1000.0:7.2f} {(span-job)/1000.0:7.2f}")
+    print(f"jobs outside any micro-batch: {outside}")
+
 def main():
     path = sys.argv[1]
     show_jobs = "--jobs" in sys.argv
+    show_batches = "--batches" in sys.argv
     app_start = app_end = None
-    jobs = {}          # id -> [start, end, desc, stage_ids]
+    jobs = {}          # id -> [start, end, desc, stage_ids, properties]
     stage_task = {}    # stage id -> [task_time_ms, n_tasks, max_task_ms]
     for ev in load(path):
         e = ev.get("Event")
@@ -32,10 +93,11 @@ def main():
         elif e == "SparkListenerApplicationEnd":
             app_end = ev["Timestamp"]
         elif e == "SparkListenerJobStart":
-            desc = ev.get("Properties", {}).get("spark.job.description", "") or \
-                   ev.get("Properties", {}).get("callSite.short", "")
+            props = ev.get("Properties", {}) or {}
+            desc = props.get("spark.job.description", "") or \
+                   props.get("callSite.short", "")
             jobs[ev["Job ID"]] = [ev["Submission Time"], None, desc[:70],
-                                  ev.get("Stage IDs", [])]
+                                  ev.get("Stage IDs", []), props]
         elif e == "SparkListenerJobEnd":
             if ev["Job ID"] in jobs:
                 jobs[ev["Job ID"]][1] = ev["Completion Time"]
@@ -52,16 +114,10 @@ def main():
     tN = app_end or ordered[-1][1]
     job_sum = sum(e - s for s, e, *_ in ordered) / 1000.0
     # gaps: time not covered by any job interval (merge overlaps)
-    merged = []
-    for s, e, *_ in ordered:
-        if merged and s <= merged[-1][1]:
-            merged[-1][1] = max(merged[-1][1], e)
-        else:
-            merged.append([s, e])
-    covered = sum(e - s for s, e in merged) / 1000.0
+    covered = covered_ms([(s, e) for s, e, *_ in ordered]) / 1000.0
     span = (tN - t0) / 1000.0
     head_gap = (ordered[0][0] - t0) / 1000.0
-    tail_gap = (tN - merged[-1][1]) / 1000.0
+    tail_gap = (tN - max(e for _, e, *_ in ordered)) / 1000.0
     inner_gap = span - covered - head_gap - tail_gap
     print(f"app span            {span:9.1f} s")
     print(f"job-covered time    {covered:9.1f} s   (sum of job spans {job_sum:.1f} s)")
@@ -72,7 +128,7 @@ def main():
         print(f"\n{'off(s)':>7} {'dur(s)':>7} {'gap(s)':>6} {'task(s)':>8} "
               f"{'ntask':>5} {'maxt(s)':>7} {'par':>5}  description")
         prev_end = t0
-        for s, e, d, sids in ordered:
+        for s, e, d, sids, _props in ordered:
             gap = (s - prev_end) / 1000.0
             tt = sum(stage_task.get(i, [0, 0, 0])[0] for i in sids) / 1000.0
             nt = sum(stage_task.get(i, [0, 0, 0])[1] for i in sids)
@@ -81,6 +137,8 @@ def main():
             print(f"{(s-t0)/1000.0:7.1f} {(e-s)/1000.0:7.1f} {max(gap,0):6.2f} "
                   f"{tt:8.1f} {nt:5d} {mx:7.1f} {par:5.2f}  {d}")
             prev_end = max(prev_end, e)
+    if show_batches:
+        print_batches(ordered)
 
 if __name__ == "__main__":
     main()
