@@ -369,25 +369,6 @@ object OracleSql {
        |WHERE a.doc_id < b.doc_id ORDER BY id_a, id_b""".stripMargin
   }
 
-  def qSimhash16: String = {
-    val hexCase = (pos: Int) => "0123456789abcdef".zipWithIndex
-      .map { case (c, v) => s"WHEN '$c' THEN $v" }
-      .mkString(s"(CASE substring(h, ${pos + 1}, 1) ", " ", " ELSE 0 END)")
-    val nibs = (0 until 4).map(j => s"${hexCase(j)} AS nib$j").mkString(", ")
-    val sums = (0 until 16).map { b =>
-      val div = math.pow(2, b % 4).toInt
-      s"CAST(SUM((CAST(floor(nib${b / 4} / $div) AS INT) % 2) * 2 - 1) AS BIGINT) AS s$b"
-    }.mkString(", ")
-    val hash = (0 until 16)
-      .map(b => s"CASE WHEN s$b > 0 THEN ${1 << b} ELSE 0 END").mkString(" + ")
-    s"""WITH tok AS (SELECT doc_id, md5(w) AS h FROM
-       |  (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-       |  WHERE length(w) > 0),
-       |nib AS (SELECT doc_id, $nibs FROM tok),
-       |s AS (SELECT doc_id, $sums FROM nib GROUP BY doc_id)
-       |SELECT doc_id, ($hash) AS simhash FROM s ORDER BY doc_id""".stripMargin
-  }
-
   private def hexNibCase(str: String, pos: Int): String =
     "0123456789abcdef".zipWithIndex
       .map { case (c, v) => s"WHEN '$c' THEN $v" }

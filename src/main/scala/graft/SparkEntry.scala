@@ -44,8 +44,8 @@ object SparkEntry {
     // num_max_outer is never unset in its inis, test/ini/ta_sct.ini:19; and
     // values are boxcoxed before the gaussian checks, statistics_util.r:
     // 101-107). The neighbor cap is a no-op at oracle SFs (every group is
-    // far below it — the capped-mode algebra is then provably identical to
-    // the uncapped oracle SQL) but bounds giant hosts at corpus scale.
+    // far below it, so every row's leave-one-out statistics use its whole
+    // group, as the oracle SQL does) but bounds giant hosts at corpus scale.
     dedupIngest = true,
     maxRefsPerGroup = Some(100000),
     buddyLog1p = true,

@@ -207,7 +207,8 @@ final case class CascadeConfig(
     dedupIngest: Boolean = false,
     // neighbor cap (num_max_outer analog, checks/buddy.r:46,154-167):
     // bound how many rows a giant group contributes to its own statistics
-    // via deterministic hash-proportional sampling
+    // via deterministic hash-proportional sampling. None is a cap that no
+    // group ever binds; it runs the same stats pass as any other cap
     maxRefsPerGroup: Option[Int] = None,
     // stats join-back form (Neighborhood.statsJoinForm): the per-group
     // stats table's cardinality is MEASURED at run time (observed by the

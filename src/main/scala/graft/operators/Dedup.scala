@@ -253,34 +253,6 @@ object Dedup {
       .select("id_a", "id_b").distinct()
   }
 
-  /** Portable 16-bit SimHash over whitespace tokens: each token's md5 first
-    * 4 hex nibbles give 16 bits; per bit, sum (2·bit − 1) over tokens; the
-    * sign picks the output bit. Pure integer arithmetic, bit-identical in
-    * the SQL oracle. (A 64-bit variant is a constant change; 16 bits keeps
-    * the oracle SQL readable.)
-    */
-  def simhash16(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val tok = df.select(col(idCol), explode(split(col(textCol), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .withColumn("h", md5(col("w")))
-    def nibble(pos: Int): Column =
-      (0 until 16).foldLeft(lit(0)) { (acc, v) =>
-        when(substring(col("h"), pos + 1, 1) === "0123456789abcdef".charAt(v).toString,
-          lit(v)).otherwise(acc)
-      }
-    val withBits = (0 until 4).foldLeft(tok)((d, j) => d.withColumn(s"nib$j", nibble(j)))
-    val sums = (0 until 16).map { b =>
-      val nib = col(s"nib${b / 4}")
-      val bit = floor(nib / math.pow(2, b % 4).toInt).cast("int") % 2
-      sum(bit * 2 - 1).as(s"s$b")
-    }
-    val agg = withBits.groupBy(col(idCol)).agg(sums.head, sums.tail: _*)
-    val hash = (0 until 16).map { b =>
-      when(col(s"s$b") > 0, lit(1 << b)).otherwise(lit(0))
-    }.reduce(_ + _)
-    agg.select(col(idCol), hash.as("simhash"))
-  }
-
   /** Embedding-cosine near-dup dedup: LSH-bucketed candidate pairs
     * confirmed by exact cosine (Similarity.annPairs), then greedy keeper
     * selection — every id that appears as the larger member of a confirmed
@@ -296,23 +268,13 @@ object Dedup {
     df.join(drops, Seq(idCol), "left_anti")
   }
 
-  /** SimHash near-dup candidate pairs: equal-bucket join (id_a < id_b).
-    * 16-bit form — only 65 536 buckets, so the within-bucket join goes
-    * quadratic on a real corpus; `simhashPairs64` below is the scale form.
-    */
-  def simhashPairs(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val h = simhash16(df, textCol, idCol)
-    val l = h.select(col("simhash"), col(idCol).as("id_a"))
-    val r = h.select(col("simhash"), col(idCol).as("id_b"))
-    l.join(r, Seq("simhash")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "simhash")
-  }
-
-  /** Portable 64-bit SimHash, exposed as four 16-bit words sh0..sh3 (word j
-    * = bits 16j..16j+15; four ints sidestep BIGINT sign pitfalls in the SQL
-    * oracle while carrying the full 64 bits). Same md5-nibble construction
-    * as simhash16, over the first 16 nibbles of each token's md5 — but
-    * computed by ONE native single-pass expression per row
+  /** Portable 64-bit SimHash over whitespace tokens, exposed as four 16-bit
+    * words sh0..sh3 (word j = bits 16j..16j+15; four ints sidestep BIGINT
+    * sign pitfalls in the SQL oracle while carrying the full 64 bits). Each
+    * token's md5 first 16 hex nibbles give 64 bits (bit b is bit b mod 4 of
+    * nibble ⌊b/4⌋); per bit, sum (2·bit − 1) over tokens; the sign picks
+    * the output bit. Pure integer arithmetic, bit-identical in the SQL
+    * oracle — computed by ONE native single-pass expression per row
     * (functions/SimHash64Expr): no token explode, no 64-aggregate shuffle.
     * Docs with zero non-empty tokens produce no row (exploded-form parity).
     */

@@ -200,10 +200,9 @@ object ModelChecks {
     val marked = df.withColumn("_pseudo", lit(false))
     // The pseudo-doc domain dimension: distinct domains with at least one
     // eligible row (a domain with no alive row has nothing flaggable, and
-    // its pseudo neighborhood could never be consulted). The per-domain cap
-    // counts that used to be derived here are gone: groupStats' fused
-    // capped mode now measures group sizes inside its own single stats
-    // pass over the unioned frame, so supplying them saved nothing.
+    // its pseudo neighborhood could never be consulted). Group sizes for
+    // the neighbor cap are not derived here: groupStats measures them
+    // inside its own single stats pass over the unioned frame.
     val domains = graft.cascade.Cascade.materialize(
       df.filter(Stage.referenceEligible).select(col(Domain)).distinct())
     val pseudoBase = domains.crossJoin(
@@ -236,9 +235,9 @@ object ModelChecks {
     val keepCols = marked.columns.toSet
     val aligned = pseudo.select(pseudo.columns.filter(keepCols).map(col): _*)
     val unioned = marked.unionByName(aligned, allowMissingColumns = true)
-    // capped mode: groupStats' fused pass measures the per-domain group
-    // sizes (real eligible + pseudo rows — every pseudo row is
-    // referenceEligible by construction) inside the one stats aggregation
+    // groupStats' fused pass measures the per-domain group sizes (real
+    // eligible + pseudo rows — every pseudo row is referenceEligible by
+    // construction) inside the one stats aggregation
     Neighborhood.eventFractionCheck(unioned,
       (col(DigitRatio) > cfg.fgDualDigitRatio).cast("int"), cfg,
       cfg.fgDualMinN, cfg.fgDualLoFrac, cfg.fgDualHiFrac, FlagCodes.SctFgDual)

@@ -38,74 +38,67 @@ object Neighborhood {
   /** Exact per-domain (sum, sumsq, count) of `x` (an integral column) over
     * reference-eligible rows, via one map-side-combined aggregation.
     *
-    * `maxRefs` (the reference's neighbor cap, `num_max_outer`,
+    * `cfg.maxRefsPerGroup` (the reference's neighbor cap, `num_max_outer`,
     * /root/reference/functions/checks/buddy.r:46,154-167) bounds how many
     * rows a giant group contributes to its own statistics: when some group
     * exceeds the cap, a per-group deterministic hash-sampling rate
     * min(1, cap/n) thins it, so a 10M-doc host is judged against a
     * fixed-size, reproducible subsample instead of all 10M rows.
     *
-    * Capped mode runs ONE aggregation over the eligible rows for the stats
-    * (_s,_q,_n) AND the pre-cap group sizes (_gn); the max _gn, observed by
-    * the action that checkpoints the group-sized result, decides whether
-    * any group binds the cap. If none does — every oracle SF, and any corpus
-    * whose largest host sits under the cap — `inSampleCond` is vacuously
-    * true and the fused frame is the exact answer. Only when the cap binds
-    * does the sampling pass run, reusing the counts already in hand.
+    * ONE aggregation over the eligible rows yields the stats (_s,_q,_n)
+    * AND the pre-cap group sizes (_gn); the max _gn, observed by the action
+    * that checkpoints the group-sized result, decides whether any group
+    * binds the cap. An unset cap never binds, and neither does a cap above
+    * the largest group (every oracle SF, and any corpus whose largest host
+    * sits under it): `inSampleCond` is then vacuously true and the fused
+    * frame is the exact answer. Only when the cap binds does the sampling
+    * pass run, reusing the counts already in hand.
     */
   def groupStats(df: DataFrame, x: Column, cfg: CascadeConfig,
                  refFilter: Column = Stage.referenceEligible,
                  keys: Seq[String] = Seq(Domain)): DataFrame = {
     val keyCols = keys.map(col)
-    // _n == 0 groups (present in df but with no reference-eligible row, or
+    // ONE pass: stats and pre-cap group sizes from the same aggregation
+    // (x may be null on an eligible row — _n counts non-null x only, _gn
+    // counts every eligible row)
+    val xl = x.cast("long")
+    // one driver action checkpoints the stats and measures the group
+    // cardinality (drives the join form) AND the largest group
+    val (fused, m) = graft.cascade.Cascade.labeled(df.sparkSession.sparkContext,
+      s"stats: fused agg+ckpt (${keys.mkString(",")})")(
+      graft.cascade.Cascade.materializeMeasured(
+        df.filter(refFilter).groupBy(keyCols: _*)
+          .agg(sum(xl).as("_s"), sum(xl * xl).as("_q"),
+            count(xl).as("_n"), count(lit(1)).as("_gn")),
+        count(lit(1)).as("groups"), max("_gn").as("max_gn")))
+    val nGroups = m.getLong(0)
+    val maxGn = if (nGroups == 0 || m.isNullAt(1)) 0L else m.getLong(1)
+    // _n == 0 groups (no reference-eligible row left in the frame, or only
     // eligible rows whose x is null) are dropped: the left join back yields
     // nulls for them, which every consumer's null-guarded math treats
     // exactly like a present-but-empty stats row — and keeping them would
-    // let the broadcast table silently outgrow the measured ELIGIBLE-group
-    // cardinality that statsJoinForm's driver-OOM guard is based on (a
-    // heavily-flagged corpus can have far more domains than
-    // reference-eligible domains).
-    def mergedStats(base: DataFrame, xl: Column): DataFrame =
-      base.groupBy(keyCols: _*)
-        .agg(sum(xl).as("_s"), sum(xl * xl).as("_q"), count(xl).as("_n"))
-        .filter(col("_n") > 0)
-    cfg.maxRefsPerGroup match {
+    // let the broadcast table outgrow the measured eligible-group
+    // cardinality that statsJoinForm's driver-OOM guard is based on
+    cfg.maxRefsPerGroup.filter(maxGn > _) match {
       case None =>
-        joinReady(mergedStats(df, when(refFilter, x.cast("long"))), cfg)
+        // no group binds the cap: the unsampled stats ARE the capped stats,
+        // and _gn (carried so consumers can re-derive per-row sample
+        // membership for the LOO terms) rides along for free
+        statsJoinForm(fused.filter(col("_n") > 0), nGroups, cfg)
       case Some(cap) =>
-        // ONE pass: stats and pre-cap group sizes from the same aggregation
-        // (x may be null on an eligible row — _n counts non-null x only,
-        // _gn counts every eligible row, exactly like the old count pass)
-        val xl = x.cast("long")
-        // one driver action checkpoints the stats and measures the group
-        // cardinality (drives the join form) AND whether any group exceeds
-        // the cap
-        val (fused, m) = graft.cascade.Cascade.labeled(df.sparkSession.sparkContext,
-          s"stats: fused agg+ckpt (${keys.mkString(",")})")(
-          graft.cascade.Cascade.materializeMeasured(
-            df.filter(refFilter).groupBy(keyCols: _*)
-              .agg(sum(xl).as("_s"), sum(xl * xl).as("_q"),
-                count(xl).as("_n"), count(lit(1)).as("_gn")),
-            count(lit(1)).as("groups"), max("_gn").as("max_gn")))
-        val nGroups = m.getLong(0)
-        val maxGn = if (nGroups == 0 || m.isNullAt(1)) 0L else m.getLong(1)
-        if (maxGn <= cap) {
-          // no group binds the cap: the unsampled stats ARE the capped
-          // stats, and _gn (carried so consumers can re-derive per-row
-          // sample membership for the LOO terms) rides along for free
-          statsJoinForm(fused.filter(col("_n") > 0), nGroups, cfg)
-        } else {
-          // the cap binds somewhere: deterministic proportional thinning —
-          // keep row iff its url hash falls under cap/n of the hash space
-          // (exact at any parallelism) — reusing the counts already in hand
-          val capReady = statsJoinForm(fused.select(keyCols :+ col("_gn"): _*),
-            nGroups, cfg)
-          val sampled = df.join(capReady, keys, "left")
-            .filter(col("_gn").isNull || inSampleCond(cap, col("_gn")))
-            .drop("_gn")
-          val merged = mergedStats(sampled, when(refFilter, x.cast("long")))
-          statsJoinForm(merged.join(capReady, keys, "left"), nGroups, cfg)
-        }
+        // the cap binds somewhere: deterministic proportional thinning —
+        // keep row iff its url hash falls under cap/n of the hash space
+        // (exact at any parallelism) — reusing the counts already in hand
+        val capReady = statsJoinForm(fused.select(keyCols :+ col("_gn"): _*),
+          nGroups, cfg)
+        val sampled = df.join(capReady, keys, "left")
+          .filter(col("_gn").isNull || inSampleCond(cap, col("_gn")))
+          .drop("_gn")
+        val xe = when(refFilter, xl)
+        val merged = sampled.groupBy(keyCols: _*)
+          .agg(sum(xe).as("_s"), sum(xe * xe).as("_q"), count(xe).as("_n"))
+          .filter(col("_n") > 0)
+        statsJoinForm(merged.join(capReady, keys, "left"), nGroups, cfg)
     }
   }
 
@@ -183,13 +176,13 @@ object Neighborhood {
     gn <= cap ||
       pmod(xxhash64(col(UrlHash), lit("refcap")), lit(SampleMod)) * gn < lit(cap.toLong) * lit(SampleMod)
 
-  /** Per-row "my own value is inside the group statistics" indicator; true
-    * everywhere in uncapped mode.
+  /** Per-row "my own value is inside the group statistics" indicator: false
+    * where the row's group has no stats row (null `_gn`, e.g. a null key);
+    * otherwise the cap's sample membership, which an unset cap (one that
+    * never binds) grants every row.
     */
-  private def selfInSample(cfg: CascadeConfig): Column = cfg.maxRefsPerGroup match {
-    case None      => lit(true)
-    case Some(cap) => coalesce(inSampleCond(cap, col("_gn")), lit(false))
-  }
+  private def selfInSample(cfg: CascadeConfig): Column =
+    coalesce(cfg.maxRefsPerGroup.fold(col("_gn") > 0)(inSampleCond(_, col("_gn"))), lit(false))
 
   private def dropStatCols(df: DataFrame, names: String*): DataFrame =
     df.drop(names :+ "_gn": _*)
@@ -247,30 +240,20 @@ object Neighborhood {
 
     val x = xv
     val (minN, zThresh) = (lit(params.minN), lit(params.z))
+    // only subtract self if self was sampled into the group statistics
+    // (otherwise the LOO algebra double-corrects)
+    val selfIn = selfInSample(cfg)
+    val xs = when(selfIn, x).otherwise(lit(0L))
+    val ns = when(selfIn, lit(1L)).otherwise(lit(0L))
+    val m    = (col("_n") - ns).cast("double")           // leave-one-out count
+    val mean = when(m > 0, (col("_s") - xs).cast("double") / m)
+    val vr   = when(m > 1,
+      ((col("_q") - xs * xs).cast("double") - m * mean * mean) / (m - 1.0))
+    val looSd = sqrt(greatest(vr, lit(0.0)))
     // σ floor (see CascadeConfig.buddySdFloor); applied after the LOO sd so
     // a near-degenerate group can't manufacture z from noise
-    def floored(sd: Column): Column =
-      if (cfg.buddySdFloor > 0) greatest(sd, lit(cfg.buddySdFloor)) else sd
-    val (mean, sd, looN) =
-      if (cfg.maxRefsPerGroup.isEmpty) {
-        val nn   = (col("_n") - lit(1)).cast("double")        // leave-one-out count
-        val mean = when(nn > 0, (col("_s") - x).cast("double") / nn)
-        val vr   = when(col("_n") > 2,
-          ((col("_q") - x * x).cast("double") - nn * mean * mean) /
-            (col("_n") - lit(2)).cast("double"))
-        (mean, floored(sqrt(greatest(vr, lit(0.0)))), col("_n") - lit(1))
-      } else {
-        // neighbor-cap mode: only subtract self if self was sampled into
-        // the group statistics (otherwise the LOO algebra double-corrects)
-        val selfIn = selfInSample(cfg)
-        val xs = when(selfIn, x).otherwise(lit(0L))
-        val ns = when(selfIn, lit(1L)).otherwise(lit(0L))
-        val m    = (col("_n") - ns).cast("double")
-        val mean = when(m > 0, (col("_s") - xs).cast("double") / m)
-        val vr   = when(m > 1,
-          ((col("_q") - xs * xs).cast("double") - m * mean * mean) / (m - 1.0))
-        (mean, floored(sqrt(greatest(vr, lit(0.0)))), (col("_n") - ns).cast("int"))
-      }
+    val sd   = if (cfg.buddySdFloor > 0) greatest(looSd, lit(cfg.buddySdFloor)) else looSd
+    val looN = (col("_n") - ns).cast("int")
     val z = when(sd > 0, (x.cast("double") - mean) / sd)
 
     val fail = inClass &&
@@ -455,12 +438,8 @@ object Neighborhood {
     */
   def isolationOnce(df: DataFrame, cfg: CascadeConfig): DataFrame = {
     val keys = cfg.isolationKeys
-    val statCols = keys.map(col) :+ col("_n")
-    val stats0 = groupStats(df, lit(1), cfg, keys = keys)
-    val stats = cfg.maxRefsPerGroup match {
-      case None    => stats0.select(statCols: _*)
-      case Some(_) => stats0.select(statCols :+ col("_gn"): _*)
-    }
+    val stats = groupStats(df, lit(1), cfg, keys = keys)
+      .select(keys.map(col) ++ Seq(col("_n"), col("_gn")): _*)
     // join form from measured cardinality (statsJoinForm, see buddyRound)
     val joined = df.join(stats, keys, "left")
     val ns = when(selfInSample(cfg), lit(1L)).otherwise(lit(0L))

@@ -163,15 +163,20 @@ class CascadeSpec extends SparkSpec {
       concat(lit("host"), (col("id") % 7).cast("string")).as(Cols.Domain),
       lit(null).cast("int").as(Cols.Dqc),
       lit(1).as(Cols.Doit),
+      (col("id") % 50).cast("int").as(Cols.NWords),
       (col("id") % 50).as("x"))
     sc.addSparkListener(listener)
     try {
-      // the fused capped-stats action and the joinReady count action
-      for ((path, c) <- Seq("fused" -> CascadeConfig(maxRefsPerGroup = Some(1000)),
-                            "joinReady" -> CascadeConfig())) {
+      // the fused stats action, capped and uncapped, and sct's joinReady
+      // count action
+      for ((path, stats) <- Seq[(String, () => DataFrame)](
+             "fused" -> (() => Neighborhood.groupStats(df, col("x"),
+               CascadeConfig(maxRefsPerGroup = Some(1000)))),
+             "uncapped" -> (() => Neighborhood.groupStats(df, col("x"), CascadeConfig())),
+             "joinReady" -> (() => Neighborhood.sctOnce(df, CascadeConfig())))) {
         sc.setJobDescription("cascade: stage 10")
         try {
-          Neighborhood.groupStats(df, col("x"), c)
+          stats()
           sc.setLocalProperty("graft.test.probe", path)
           df.count()
         } finally {
@@ -181,6 +186,7 @@ class CascadeSpec extends SparkSpec {
       }
       org.apache.spark.ListenerDrain.drain(sc)
       assert(descs.get("fused") === "cascade: stage 10")
+      assert(descs.get("uncapped") === "cascade: stage 10")
       assert(descs.get("joinReady") === "cascade: stage 10")
     } finally sc.removeSparkListener(listener)
   }
@@ -229,17 +235,21 @@ class CascadeSpec extends SparkSpec {
     for ((name, df) <- Seq("empty" -> statsInput(0),
                            "no eligible row" -> statsInput(400, Some(FlagCodes.Blacklist))))
       TimeLimits.failAfter(Span(120, Seconds)) {
-        // capped (fused, observed max of a possibly empty table) and
-        // uncapped (joinReady) stats: no group
+        def labels(d: DataFrame) =
+          d.select(Cols.UrlHash, Cols.Dqc).collect().map(r => r.getLong(0) -> r.get(1)).toMap
+        val before = labels(df)
+        // capped and uncapped stats (fused, observed max of a possibly
+        // empty table): no group
         assert(Neighborhood.groupStats(df, col("x"),
           buddyCfg.copy(maxRefsPerGroup = Some(3))).count() === 0, name)
         assert(Neighborhood.groupStats(df, col("x"), buddyCfg).count() === 0, name)
+        // sct's stats (joinReady's observed count of an empty table):
+        // nothing flagged
+        assert(labels(Neighborhood.sctOnce(df, buddyCfg)) === before, name)
         // the observed per-round count reads 0 and the iteration stops
         // after one round, flagging nothing
         val out = Cascade.iterate(df, 3, 0L, FlagCodes.Buddy)(Neighborhood.buddyOnce(_, buddyCfg))
-        val before = df.select(Cols.UrlHash, Cols.Dqc).collect().map(r => r.getLong(0) -> r.get(1)).toMap
-        val after = out.select(Cols.UrlHash, Cols.Dqc).collect().map(r => r.getLong(0) -> r.get(1)).toMap
-        assert(after === before, name)
+        assert(labels(out) === before, name)
       }
   }
 

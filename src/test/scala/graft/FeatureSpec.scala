@@ -164,6 +164,49 @@ class FeatureSpec extends SparkSpec {
       s"only the planted outlier is flagged, got $f1")
   }
 
+  test("an unset neighbor cap labels exactly like a cap no group reaches") {
+    // every neighbour check (buddy, sct, sct_dual, sct_fg_dual with its
+    // pseudo-docs, isolation) under the fixture config, once as shipped,
+    // once with a priority class and once with two buddy configurations
+    val corpus = io.PagesGen.generate(spark, 3000).localCheckpoint()
+    val base = io.PagesGen.matchingConfig
+    def labels(cfg: CascadeConfig): Seq[(String, Int, Boolean)] =
+      Cascade.run(corpus, cfg, None, io.PagesGen.exemplarTexts())
+        .select(Cols.Url, Cols.Dqc, Cols.KeepCol).collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getBoolean(2))).toSeq.sortBy(_._1)
+    val neighbourCodes = Set(FlagCodes.Buddy, FlagCodes.Sct, FlagCodes.SctDual,
+      FlagCodes.SctFgDual, FlagCodes.Isolation)
+    for ((name, cfg) <- Seq(
+           "matchingConfig" -> base,
+           "priority class" -> base.copy(priorities = Map("bighost.example" -> 1)),
+           "two buddy configurations" -> base.copy(
+             buddyParams = Seq(BuddyParams(5, 4.0), BuddyParams(5, 3.2))))) {
+      val uncapped = labels(cfg.copy(maxRefsPerGroup = None))
+      val neverBinds = labels(cfg.copy(maxRefsPerGroup = Some(1 << 30)))
+      assert(uncapped === neverBinds, name)
+      val fired = uncapped.map(_._2).toSet.intersect(neighbourCodes)
+      assert(fired.contains(FlagCodes.Buddy) && fired.contains(FlagCodes.Isolation),
+        s"$name: the neighbour checks must fire, got $fired")
+    }
+  }
+
+  test("isolation never counts a row without a neighbourhood as -1 neighbours") {
+    // a null lang puts the row in no isolation group: zero neighbours, not
+    // minus one, in both cap regimes — so isolationMinN = 0 flags nothing
+    val rows = (0 until 4).map(i =>
+      (s"https://h.example/p/$i", "h.example", if (i == 0) null else "en",
+        Seq.fill(20)("w").mkString(" ")))
+    val cfg = CascadeConfig(enabled = Set(FlagCodes.Isolation), isolationMinN = 0,
+      blacklistDomains = Set.empty, keepDomains = Set.empty)
+    val df = Ingest.stampLists(
+      Ingest.normalize(rows.toDF("url", "domain", "lang", "text"), cfg), cfg)
+    for (cap <- Seq(None, Some(1000))) {
+      val flagged = Neighborhood.isolationOnce(df, cfg.copy(maxRefsPerGroup = cap))
+        .filter(col(Cols.Dqc) === FlagCodes.Isolation).count()
+      assert(flagged === 0, s"maxRefsPerGroup = $cap")
+    }
+  }
+
   test("log1p variance stabilization: heavy tail stops z false-positives") {
     // geometric word counts (heavy tail): on the raw scale the max looks
     // like an outlier (z ≈ 7); after log1p the same data is a uniform ramp

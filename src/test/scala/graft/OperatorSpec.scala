@@ -37,15 +37,6 @@ class OperatorSpec extends SparkSpec {
     assert(pairs.contains((1L, 2L)))
   }
 
-  test("simhash: identical text = identical hash; bucket pairs include dup") {
-    val h = Dedup.simhash16(docs, "text", "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(h(1L) === h(2L))
-    val pairs = Dedup.simhashPairs(docs, "text", "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 2L)))
-  }
-
   test("cosine top-k is exact and deterministic on embeddings") {
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val topk = Similarity.cosineTopK(e, "embedding", "vec_id", Seq(0L), k = 3).collect()

@@ -2,6 +2,7 @@
 """Decompose a Spark event log into job wall-time vs driver gaps.
 
 Usage: eventlog_decompose.py <event log> [--jobs] [--batches]
+                             [--stages [--cores N]] [--task-metrics [--cut S]]
 
 The log may be zstd-compressed (`.zstd`/`.zst`, read through the `zstd`
 binary) or uncompressed (any other name, `.inprogress` included), and either
@@ -20,6 +21,19 @@ distinct SQL executions (`spark.sql.execution.id`), its job time (wall time
 covered by at least one job) and its gap time (the rest of the span from its
 first job's submission to its last job's end: driver planning and commits).
 
+With --stages, the parallel task work against the job-covered time: the sum
+of task executor run time, its occupancy of the covered time at `--cores`
+slots (default 32), the GC time in tasks, and the top 12 stage attempts by
+task time and by wall time, each with its own occupancy.
+
+With --task-metrics, executor run/CPU/GC/deserialize/shuffle-write/fetch-wait
+time and input/shuffle-read/spill bytes summed over every task launched at
+least `--cut` seconds after application start (default 0; a cut excludes,
+say, the untimed warm-up pass of a ScalingBench leg). If inter-job gaps are
+small and parallelism is high but run/CPU time inflates with thread count on
+identical input, the term is per-task memory-subsystem contention, not fixed
+cost or stragglers.
+
 To get an uncompressed log from a benchmark run without editing the
 benchmark, pass Spark the settings through the JVM environment:
 
@@ -29,7 +43,7 @@ benchmark, pass Spark the settings through the JVM environment:
 (`<dir>` must exist; the log is the newest `eventlog_v2_local-*` directory
 in it, since Spark 4 rolls event logs by default.)
 """
-import json, os, re, subprocess, sys
+import argparse, json, math, os, re, subprocess
 
 def load(path):
     if os.path.isdir(path):
@@ -79,14 +93,81 @@ def print_batches(jobs):
               f"{job/1000.0:7.2f} {(span-job)/1000.0:7.2f}")
     print(f"jobs outside any micro-batch: {outside}")
 
+def print_stages(stages, covered, cores):
+    """Task work vs job-covered time, then the top stage attempts."""
+    task_ms = sum(st["task_ms"] for st in stages.values())
+    gc_ms = sum(st["gc_ms"] for st in stages.values())
+    print(f"\nsum task run time   {task_ms/1e3:9.1f} s   "
+          f"(= {task_ms/1e3/cores:.1f} s at {cores} cores if perfectly packed)")
+    print(f"occupancy of covered time {task_ms/(covered*cores)*100:5.1f} %")
+    print(f"sum GC time in tasks {gc_ms/1e3:8.1f} s")
+
+    def wall_s(st):
+        s, e = st["wall"]
+        return (e - s) / 1e3 if s and e else float("nan")
+
+    def line(sid, st):
+        sw = wall_s(st)
+        occ = st["task_ms"] / (sw * 1e3 * cores) * 100 if sw > 0 else float("nan")
+        return (f"  stage {sid:>4} tasks={st['tasks']:>4} task={st['task_ms']/1e3:>7.1f}s "
+                f"wall={sw:>6.1f}s occ={occ:>5.1f}% gc={st['gc_ms']/1e3:>5.1f}s  "
+                f"{st['name'][:60]}")
+    print("\ntop 12 stages by task time:")
+    for (sid, _att), st in sorted(stages.items(), key=lambda kv: -kv[1]["task_ms"])[:12]:
+        print(line(sid, st))
+    print("\ntop 12 stages by wall time:")
+    timed = [kv for kv in stages.items() if not math.isnan(wall_s(kv[1]))]
+    for (sid, _att), st in sorted(timed, key=lambda kv: -wall_s(kv[1]))[:12]:
+        print(line(sid, st))
+
+TIME_KEYS = ["run_ms", "cpu_ms", "gc_ms", "deser_ms", "shufw_ms", "fetch_ms"]
+BYTE_KEYS = ["input_b", "shufr_b", "spill_b"]
+
+def add_task_metrics(agg, m):
+    """Accumulate one task's metrics into the --task-metrics sums."""
+    sw = m.get("Shuffle Write Metrics") or {}
+    sr = m.get("Shuffle Read Metrics") or {}
+    inm = m.get("Input Metrics") or {}
+    for k, v in (("run_ms", m.get("Executor Run Time", 0)),
+                 ("cpu_ms", m.get("Executor CPU Time", 0) / 1e6),
+                 ("gc_ms", m.get("JVM GC Time", 0)),
+                 ("deser_ms", m.get("Executor Deserialize Time", 0)),
+                 ("shufw_ms", sw.get("Shuffle Write Time", 0) / 1e6),
+                 ("fetch_ms", sr.get("Fetch Wait Time", 0)),
+                 ("shufr_b", sr.get("Local Bytes Read", 0) + sr.get("Remote Bytes Read", 0)),
+                 ("input_b", inm.get("Bytes Read", 0)),
+                 ("spill_b", m.get("Memory Bytes Spilled", 0))):
+        agg[k] = agg.get(k, 0) + v
+
+def print_task_metrics(agg, n, cut_ms):
+    print(f"\ntasks={n}  (window: launch >= {cut_ms/1000:.0f}s after app start)")
+    for k in TIME_KEYS:
+        print(f"  {k:9s} {agg.get(k, 0) / 1000.0:10.1f} s")
+    for k in BYTE_KEYS:
+        print(f"  {k:9s} {agg.get(k, 0) / 1e9:10.2f} GB")
+
 def main():
-    path = sys.argv[1]
-    show_jobs = "--jobs" in sys.argv
-    show_batches = "--batches" in sys.argv
+    ap = argparse.ArgumentParser(description="Decompose a Spark event log.")
+    ap.add_argument("path")
+    ap.add_argument("--jobs", action="store_true")
+    ap.add_argument("--batches", action="store_true")
+    ap.add_argument("--stages", action="store_true")
+    ap.add_argument("--cores", type=int, default=32)
+    ap.add_argument("--task-metrics", action="store_true")
+    ap.add_argument("--cut", type=float, default=0.0)
+    args = ap.parse_args()
+    cut_ms = args.cut * 1000.0
     app_start = app_end = None
     jobs = {}          # id -> [start, end, desc, stage_ids, properties]
     stage_task = {}    # stage id -> [task_time_ms, n_tasks, max_task_ms]
-    for ev in load(path):
+    # (stage id, attempt) -> executor run/GC time, tasks, name, wall
+    stages = {}
+    window = {}        # --task-metrics sums over the launch window
+    n_window = 0
+    def stage(sid, att):
+        return stages.setdefault((sid, att), {"task_ms": 0, "gc_ms": 0, "tasks": 0,
+                                              "wall": [None, None], "name": ""})
+    for ev in load(args.path):
         e = ev.get("Event")
         if e == "SparkListenerApplicationStart":
             app_start = ev["Timestamp"]
@@ -101,11 +182,24 @@ def main():
         elif e == "SparkListenerJobEnd":
             if ev["Job ID"] in jobs:
                 jobs[ev["Job ID"]][1] = ev["Completion Time"]
+        elif e == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            st = stage(si["Stage ID"], si["Stage Attempt ID"])
+            st["name"] = si["Stage Name"]
+            st["wall"] = [si.get("Submission Time"), si.get("Completion Time")]
         elif e == "SparkListenerTaskEnd":
             ti = ev.get("Task Info", {})
             dur = ti.get("Finish Time", 0) - ti.get("Launch Time", 0)
             st = stage_task.setdefault(ev["Stage ID"], [0, 0, 0])
             st[0] += dur; st[1] += 1; st[2] = max(st[2], dur)
+            m = ev.get("Task Metrics") or {}
+            sa = stage(ev["Stage ID"], ev["Stage Attempt ID"])
+            sa["task_ms"] += m.get("Executor Run Time", 0)
+            sa["gc_ms"] += m.get("JVM GC Time", 0)
+            sa["tasks"] += 1
+            if app_start is not None and ti.get("Launch Time", 0) - app_start >= cut_ms:
+                n_window += 1
+                add_task_metrics(window, m)
 
     ordered = sorted((v for v in jobs.values() if v[1]), key=lambda v: v[0])
     if not ordered:
@@ -124,7 +218,7 @@ def main():
     print(f"gap before 1st job  {head_gap:9.1f} s")
     print(f"inter-job gaps      {inner_gap:9.1f} s")
     print(f"gap after last job  {tail_gap:9.1f} s")
-    if show_jobs:
+    if args.jobs:
         print(f"\n{'off(s)':>7} {'dur(s)':>7} {'gap(s)':>6} {'task(s)':>8} "
               f"{'ntask':>5} {'maxt(s)':>7} {'par':>5}  description")
         prev_end = t0
@@ -137,8 +231,12 @@ def main():
             print(f"{(s-t0)/1000.0:7.1f} {(e-s)/1000.0:7.1f} {max(gap,0):6.2f} "
                   f"{tt:8.1f} {nt:5d} {mx:7.1f} {par:5.2f}  {d}")
             prev_end = max(prev_end, e)
-    if show_batches:
+    if args.batches:
         print_batches(ordered)
+    if args.stages:
+        print_stages(stages, covered * 1000.0, args.cores)
+    if args.task_metrics:
+        print_task_metrics(window, n_window, cut_ms)
 
 if __name__ == "__main__":
     main()
