@@ -45,11 +45,6 @@ object TextFeatures {
   def nDigits(t: Column): Column =
     length(regexp_replace(t, "[^0-9]", ""))
 
-  /** Line count: newlines + 1 (blank text → 0). */
-  def nLines(t: Column): Column =
-    when(length(t) === 0, lit(0))
-      .otherwise(length(t) - length(replace(t, lit("\n"), lit(""))) + lit(1))
-
   /** Division guarded against zero/negative denominators (Spark and DuckDB
     * disagree on x/0; both agree on CASE WHEN).
     */
@@ -101,8 +96,9 @@ object TextFeatures {
 
   // ---- single-pass variants over the TextStatsExpr struct ----
   // Numerically identical to the formulas above (see TextStatsExpr's parity
-  // contract); the struct is computed once per row by one native expression
-  // and the features become integer arithmetic on its fields.
+  // contract, pinned by FeatureSpec's TextStatsExpr parity test); the struct
+  // is computed once per row by one native expression and the features
+  // become integer arithmetic on its fields.
 
   /** The seven counts in one native pass (struct column). */
   def textStats(t: Column, stopwords: Seq[String] = EnStopwords): Column =
@@ -122,19 +118,10 @@ object TextFeatures {
 
   def digitRatioOf(st: Column): Column = safeDiv(st("ndigits"), st("nchars"))
 
-  /** Stopword ratio with the word count supplied (avoids recomputing it). */
-  def stopwordRatioOver(t: Column, stopwords: Seq[String], nw: Column): Column = {
-    val hits = stopwords.map(w => wordOccurrences(t, w)).reduce(_ + _)
-    when(nw > 0, hits / nw.cast("double"))
-  }
-
-  def distinctWordRatioOver(t: Column, nw: Column): Column =
-    when(nw > 0, size(array_distinct(split(t, " "))).cast("double") / nw.cast("double"))
-
   /** Stopword ratio from the native stats struct. Each per-word hit count is
     * an exactly-integral double in the built-in formula, and summing exact
     * small integers as doubles is exact, so nstophits/nw is bit-identical to
-    * `stopwordRatioOver` (and to the oracle's replace-chain form).
+    * `stopwordRatio` (and to the oracle's replace-chain form).
     */
   def stopwordRatioOf(st: Column, nw: Column): Column =
     when(nw > 0, st("nstophits").cast("double") / nw.cast("double"))

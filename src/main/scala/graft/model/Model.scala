@@ -30,9 +30,6 @@ object FlagCodes {
   val LangMismatch= 902 // declared vs detected language disagree (checks/check_z_against_dem.r analog)
   val Keep        = 990 // keep-listed: force-keep, usable as reference (read_data_to_check.r:108-119)
   val Blacklist   = 999 // block-listed: force-drop (read_data_to_check.r:95-106)
-
-  /** Codes counted as "kept" in the final decision. */
-  def isKeep(code: Int): Boolean = code == Good || code == Keep
 }
 
 /** One web page — the engine's single relation, per BASELINE.json input_hint:

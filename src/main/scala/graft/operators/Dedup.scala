@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.cascade.Cascade
 import graft.functions.TextFeatures
 
 /** Deduplication operators for a large-scale training-data pipeline:
@@ -14,9 +15,15 @@ import graft.functions.TextFeatures
   *
   * Scale notes: every operator is groupBy/join-shaped (map-side combinable,
   * AQE-skew-splittable); none uses windows over unbounded key groups. The
-  * shingle self-join prunes frequent shingles (stop-shingles) with a
-  * configurable document-frequency cap, which bounds the candidate-pair
-  * blowup the same way stopword removal bounds an inverted index.
+  * candidate-pair operators (ngramJaccard, minhashLsh, simhashPairs64 and
+  * Similarity.annPairs) share one skeleton. [[bucketed]] takes one row per
+  * (row, bucket key), drops the buckets above the operator's size cap, if
+  * it has one, and checkpoints the kept rows; the cap bounds the
+  * candidate-pair blowup the same way stopword removal bounds an inverted
+  * index. (simhashPairs64 has no cap and skips it: its keys are cheaper to
+  * recompute than to store.) [[bucketPairs]] is the one self-join: it
+  * emits one row per pair and shared bucket, carrying the columns the
+  * confirm needs, so every confirm runs on the pair row with no join back.
   */
 object Dedup {
 
@@ -27,6 +34,36 @@ object Dedup {
     val withFp = df.withColumn("_fp", TextFeatures.fingerprint(col(textCol)))
     val keepers = withFp.groupBy("_fp").agg(min(col(idCol)).as(idCol))
     withFp.join(keepers, Seq("_fp", idCol), "left_semi").drop("_fp")
+  }
+
+  /** Keyed rows of a candidate-pair operator, ready for [[bucketPairs]]:
+    * with a cap, only the buckets of at most `cap` rows are kept (a bucket
+    * of B rows yields B·(B−1)/2 pairs), and `keyed` is materialized first
+    * because the size aggregate and the semi-join both read it. The kept
+    * rows are checkpointed, since both self-join sides (and the caller's
+    * own aggregates) read them. No pre-partition: the self-join plans one
+    * exchange on the bucket keys, and its other side reuses it.
+    */
+  private[operators] def bucketed(keyed: DataFrame, bucket: Seq[String],
+                                  cap: Option[Int]): DataFrame =
+    Cascade.materialize(cap.fold(keyed) { c =>
+      val k = Cascade.materialize(keyed)
+      k.join(k.groupBy(bucket.map(col): _*).agg(count(lit(1)).as("_bsz"))
+          .filter(col("_bsz") <= c).select(bucket.map(col): _*),
+        bucket, "left_semi")
+    })
+
+  /** The self-join of keyed rows (a [[bucketed]] frame, or simhashPairs64's
+    * band keys) on their bucket keys: one row per (bucket…, id_a, id_b)
+    * with id_a < id_b, plus each `carry` column c as c_a and c_b. A pair
+    * sharing k buckets appears k times. Both sides are the same projection
+    * up to aliases, so their exchanges are one.
+    */
+  private[operators] def bucketPairs(b: DataFrame, bucket: Seq[String], idCol: String,
+                                     carry: Seq[String] = Nil): DataFrame = {
+    def side(s: String) = b.select(bucket.map(col) ++
+      (col(idCol).as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s"))): _*)
+    side("a").join(side("b"), bucket).filter(col("id_a") < col("id_b"))
   }
 
   /** Distinct word n-gram shingles per doc: (id, shingle). The token array
@@ -55,32 +92,9 @@ object Dedup {
   def ngramJaccard(df: DataFrame, textCol: String, idCol: String,
                    n: Int = 3, threshold: Double = 0.6,
                    maxShingleDf: Int = 1000): DataFrame = {
-    // materialize the shingle frame once (lazy local checkpoint): it feeds
-    // the df-cap aggregate and the semi-join probe side — two scans that
-    // would otherwise each re-run the explode
-    val sh = shingles(df, textCol, idCol, n).localCheckpoint(false)
-    // materialize the PRUNED frame too: it feeds both self-join sides and
-    // the per-doc cardinalities (and the cards frame feeds two join sides),
-    // so without a checkpoint the whole df-cap aggregation + its broadcast
-    // build re-runs once per consumer — the measured plan had the
-    // Scan→HashAggregate→Exchange→HashAggregate→BroadcastExchange subtree
-    // FOUR times with zero exchange reuse
-    // pre-partitioned by the self-join key BEFORE the checkpoint: a local
-    // checkpoint preserves its plan's output partitioning, so both sides
-    // of the shingle equi-join below read already-co-partitioned blocks
-    // and the join plans with NO exchange — one shuffle of the shingle
-    // frame here instead of two at the join (df-capped, so no hot key)
-    val pruned = sh.join(
-      sh.groupBy("shingle").agg(count(lit(1)).as("_df"))
-        .filter(col("_df") <= maxShingleDf).select("shingle"),
-      Seq("shingle"), "left_semi")
-      .repartition(col("shingle")).localCheckpoint(false)
-    val cards = pruned.groupBy(col(idCol)).agg(count(lit(1)).as("card"))
-
-    val a = pruned.select(col(idCol).as("id_a"), col("shingle"))
-    val b = pruned.select(col(idCol).as("id_b"), col("shingle"))
-    val inter = a.join(b, Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
+    val kept = bucketed(shingles(df, textCol, idCol, n), Seq("shingle"), Some(maxShingleDf))
+    val cards = kept.groupBy(col(idCol)).agg(count(lit(1)).as("card"))
+    val inter = bucketPairs(kept, Seq("shingle"), idCol)
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
 
     inter
@@ -130,9 +144,8 @@ object Dedup {
                 wordsPerLine: Int = 10): DataFrame = {
     // materialized once: feeds the keeper aggregate and the keeper-mark
     // join probe side
-    val ln = lines(df, textCol, idCol, wordsPerLine)
-      .withColumn("_lfp", md5(col("line")))
-      .localCheckpoint(false)
+    val ln = Cascade.materialize(lines(df, textCol, idCol, wordsPerLine)
+      .withColumn("_lfp", md5(col("line"))))
     val keep = ln.groupBy("_lfp")
       .agg(min(struct(col(idCol), col("line_no"))).as("_k"))
       .select(col("_lfp"), col(s"_k.$idCol").as(idCol),
@@ -214,42 +227,27 @@ object Dedup {
     * B docs contributes B·(B−1)/2 candidate pairs, so ONE popular bucket —
     * template/boilerplate pages all sharing a minimum shingle-hash,
     * especially at rowsPerBand = 1 where a band key is a single min-hash —
-    * goes quadratic at corpus scale. Buckets above the cap are dropped
-    * before the self-join (the same stop-key move as ngramJaccard's
-    * `maxShingleDf`): a bucket that big is boilerplate, not near-dup
-    * signal, and exact-confirm downstream would reject its pairs anyway.
+    * goes quadratic at corpus scale. [[bucketed]] drops the buckets above
+    * the cap before the [[bucketPairs]] self-join (the same stop-key move as
+    * ngramJaccard's `maxShingleDf`): a bucket that big is boilerplate, not
+    * near-dup signal, and exact-confirm downstream would reject its pairs
+    * anyway. A pair agreeing on several bands is emitted once.
     * RECALL CONTRACT: pairs whose every agreeing band lands in a dropped
     * bucket are missed; pass Int.MaxValue for the exact uncapped variant.
     */
   def minhashLsh(df: DataFrame, textCol: String, idCol: String,
                  n: Int = 3, bands: Int = 4, rowsPerBand: Int = 2,
                  maxBucketSize: Int = 1000): DataFrame = {
-    // Materialize the signature once (lazy local checkpoint: computed at the
-    // first action, reused by the cap aggregate and both join sides), then
-    // explode all band keys in ONE pass and bucket-join once on (band, key)
-    // — the per-band-join form recomputed the whole shingle aggregation
-    // 2×bands times.
-    val sig = minhashSignature(df, textCol, idCol, n, bands * rowsPerBand)
-      .localCheckpoint(false)
+    // all band keys exploded in ONE pass and bucket-joined once on
+    // (band, key): the per-band-join form recomputed the whole shingle
+    // aggregation 2×bands times
     val bandKeys = (0 until bands).map { b =>
       concat_ws("#", (0 until rowsPerBand).map(r => col(s"mh${b * rowsPerBand + r}")): _*)
     }
-    val keyed = sig.select(col(idCol),
-      posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
-    val small = keyed.groupBy("band", "bkey").agg(count(lit(1)).as("_bsz"))
-      .filter(col("_bsz") <= maxBucketSize).select("band", "bkey")
-    // checkpointed: both self-join sides read it, and without this the
-    // hot-bucket aggregation + its broadcast build run once per side
-    // (same duplicated-subtree shape as ngramJaccard's pruned frame).
-    // NOT pre-partitioned by the band key (unlike ngramJaccard's pruned):
-    // the banded frame is rowsPerBand-fold smaller than the shingle frame
-    // and its self-join broadcasts, so a pre-shuffle adds an exchange
-    // without removing one (measured: a small regression)
-    val pruned = keyed.join(small, Seq("band", "bkey"), "left_semi")
-      .localCheckpoint(false)
-    val l = pruned.select(col("band"), col("bkey"), col(idCol).as("id_a"))
-    val r = pruned.select(col("band"), col("bkey"), col(idCol).as("id_b"))
-    l.join(r, Seq("band", "bkey")).filter(col("id_a") < col("id_b"))
+    val keyed = minhashSignature(df, textCol, idCol, n, bands * rowsPerBand)
+      .select(col(idCol), posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
+    val bucket = Seq("band", "bkey")
+    bucketPairs(bucketed(keyed, bucket, Some(maxBucketSize)), bucket, idCol)
       .select("id_a", "id_b").distinct()
   }
 
@@ -289,11 +287,13 @@ object Dedup {
   }
 
   /** Banded 64-bit SimHash near-dup pairs — the 100 TB shape: explode the
-    * four 16-bit bands, bucket-equi-join on (band, key) (pigeonhole: two
-    * hashes within hamming distance 3 must agree on at least one of 4
-    * bands), dedup candidates, then confirm with the exact hamming distance
-    * over the full 64 bits. 4×65 536 buckets per band and candidates bounded
-    * by true near-dups + band-collisions — never all-pairs.
+    * four 16-bit bands (no cap), self-join on (band, key) in
+    * [[bucketPairs]] carrying the four words (pigeonhole: two hashes within
+    * hamming distance 3 must agree on at least one of 4 bands), confirm
+    * with the exact hamming distance over the full 64 bits on the pair row,
+    * then dedup the pairs that agree on several bands. 4×65 536 buckets per
+    * band and candidates bounded by true near-dups + band-collisions —
+    * never all-pairs.
     *
     * RECALL CONTRACT: with 4 bands the pigeonhole guarantee only covers
     * hamming ≤ 3 — a pair at distance 4..6 differing in all four bands
@@ -305,22 +305,19 @@ object Dedup {
                      maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3,
       s"maxHamming=$maxHamming exceeds the 4-band pigeonhole recall guarantee (<= 3)")
-    // materialize the signature once: it feeds both join sides + the confirm
-    val h = simhash64(df, textCol, idCol).localCheckpoint(false)
-    val keyed = h.select(col(idCol),
-      posexplode(array((0 until 4).map(j => col(s"sh$j")): _*)).as(Seq("band", "bkey")))
-    val l = keyed.select(col("band"), col("bkey"), col(idCol).as("id_a"))
-    val r = keyed.select(col("band"), col("bkey"), col(idCol).as("id_b"))
-    val cands = l.join(r, Seq("band", "bkey")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val ha = h.select(col(idCol).as("id_a") +: (0 until 4).map(j => col(s"sh$j").as(s"_a$j")): _*)
-    val hb = h.select(col(idCol).as("id_b") +: (0 until 4).map(j => col(s"sh$j").as(s"_b$j")): _*)
-    val hamming = (0 until 4).map(j =>
-      call_function("bit_count", col(s"_a$j").bitwiseXOR(col(s"_b$j"))).cast("int"))
+    val words = (0 until 4).map(j => s"sh$j")
+    val keyed = simhash64(df, textCol, idCol).select(col(idCol) +: words.map(col) :+
+      posexplode(array(words.map(col): _*)).as(Seq("band", "bkey")): _*)
+    val hamming = words.map(w =>
+      call_function("bit_count", col(s"${w}_a").bitwiseXOR(col(s"${w}_b"))).cast("int"))
       .reduce(_ + _)
-    cands.join(ha, Seq("id_a")).join(hb, Seq("id_b"))
-      .withColumn("hamming", hamming)
+    // not checkpointed: recomputing one native signature per row for the
+    // other join side is cheaper than storing four keyed rows per doc
+    // (measured on near_dup: +6 % stored bytes, no time saved)
+    val bucket = Seq("band", "bkey")
+    bucketPairs(keyed, bucket, idCol, carry = words)
+      .select(col("id_a"), col("id_b"), hamming.as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
+      .distinct()
   }
 }

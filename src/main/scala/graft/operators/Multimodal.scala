@@ -45,15 +45,6 @@ object Multimodal {
       .otherwise(lit("unknown"))
   }
 
-  /** Typed metadata struct for an opaque payload: format, size, content
-    * fingerprint of the head (cheap identity without scanning huge blobs).
-    */
-  def mmMeta(bin: Column): Column =
-    struct(
-      sniffFormat(bin).as("format"),
-      length(bin).as("n_bytes"),
-      md5(hex(substring(bin, 1, 64))).as("head_fp"))
-
   /** Frame/chunk sampling: `n` fixed-width slices at evenly-spaced offsets —
     * the video-frame-sample / audio-window plumbing (a real decoder would
     * replace "slice bytes" with "decode frame at timestamp"). Returns
@@ -100,25 +91,6 @@ object Multimodal {
     })
   }
 
-  /** STUB "resize": average-pool a feature vector down to `outDims`
-    * (the real op would resize pixels before feature extraction).
-    */
-  def poolFeatures(features: Column, outDims: Int): Column =
-    transform(sequence(lit(0), lit(outDims - 1)), o => {
-      val inDims = size(features)
-      val lo = (o * inDims / lit(outDims)).cast("int")
-      val hi = ((o + 1) * inDims / lit(outDims)).cast("int")
-      val window = slice(features, lo + 1, greatest(hi - lo, lit(1)))
-      aggregate(window, lit(0.0), (acc, x) => acc + x) / size(window).cast("double")
-    })
-
-  /** End-to-end multimodal feature table: metadata + sampled frames +
-    * (stubbed) per-frame features pooled to a document embedding. The shape
-    * a training-data pipeline needs: one scan, per-row slicing, explode for
-    * per-frame parallelism, groupBy to reassemble — at scale the explode is
-    * what lets 1 000 executors share the decode of a skewed shard of huge
-    * videos instead of one task pinning on the biggest file.
-    */
   /** REAL image decode → pooled embedding: each payload goes through the
     * JDK's actual PNG/BMP/GIF codec ([[PngCodec.decodeBands]]) and the
     * decoded pixels are pooled into `nBands` horizontal-band features,
@@ -147,6 +119,13 @@ object Multimodal {
       .select(col(idCol) +: col("width") +: col("height") +: bands: _*)
   }
 
+  /** End-to-end multimodal feature table: sampled frames + (stubbed)
+    * per-frame features averaged to a document embedding. The shape a
+    * training-data pipeline needs: one scan, per-row slicing, explode for
+    * per-frame parallelism, groupBy to reassemble — at scale the explode is
+    * what lets 1 000 executors share the decode of a skewed shard of huge
+    * videos instead of one task pinning on the biggest file.
+    */
   def mmFeatures(df: DataFrame, binCol: String, idCol: String,
                  nFrames: Int = 4, frameBytes: Int = 32, dims: Int = 8): DataFrame = {
     val frames = df

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.cascade.Cascade
 
 /** Similarity search over an embedding column (Array[Float]) — brute-force
   * cosine top-k as the exact baseline and a random-hyperplane-LSH bucketed
@@ -37,8 +38,8 @@ object Similarity {
     // three 64-dim folds per comparison and triple the expression tree.
     // Checkpointed: the normed corpus feeds both the query-side filter and
     // the cross-score scan (two scans sharing one norm pass, as in ivfTopK)
-    val corpus = df.select(col(idCol), col(vecCol), norm(col(vecCol)).as("_nv"))
-      .localCheckpoint(false)
+    val corpus = Cascade.materialize(
+      df.select(col(idCol), col(vecCol), norm(col(vecCol)).as("_nv")))
     val queries = corpus.filter(col(idCol).isin(queryIds: _*))
       .select(col(idCol).as("query_id"), col(vecCol).as("_qv"), col("_nv").as("_qn"))
     val scored = corpus.crossJoin(broadcast(queries))
@@ -98,8 +99,8 @@ object Similarity {
     // the normed base feeds the centroid hash-sample collect, the corpus
     // assignment pass and the query probes — three scans that would each
     // re-run the interpreted norm fold over every vector
-    val base = df.select(col(idCol), col(vecCol), norm(col(vecCol)).as("_nv"))
-      .localCheckpoint(false)
+    val base = Cascade.materialize(
+      df.select(col(idCol), col(vecCol), norm(col(vecCol)).as("_nv")))
     // deterministic hash sample (not lowest-N ids: recall would depend on
     // corpus order); tiny driver-side collect, ascending id for tie-breaks
     val centRows = base
@@ -108,6 +109,9 @@ object Similarity {
       .sortBy(_.getLong(0))
     val centIds = centRows.map(_.getLong(0))
     val nC = centRows.length
+    // an empty corpus has no centroid to assign to, and no neighbour
+    if (nC == 0) return base.select(col(idCol).as("query_id"),
+      col(idCol).as("neighbor_id"), col("_nv").as("cos"), lit(1).as("rank"))
 
     // per-centroid cosine columns against a row's (vector, norm): literal
     // centroid arrays compile straight into codegen (broadcast-equivalent)
@@ -160,26 +164,19 @@ object Similarity {
       .select(col("query_id"), col(idCol).as("neighbor_id"), col("cos"), col("rank"))
   }
 
-  /** Bucketed approximate near-duplicate pairs: same LSH bucket, then exact
-    * cosine confirmation (id_a < id_b, cosine >= threshold).
+  /** Bucketed approximate near-duplicate pairs: same LSH bucket
+    * (Dedup.bucketed, no cap), then exact cosine confirmation on the
+    * Dedup.bucketPairs row (id_a < id_b, cosine >= threshold).
     */
   def annPairs(df: DataFrame, vecCol: String, idCol: String,
                nPlanes: Int = 8, threshold: Double = 0.9): DataFrame = {
-    // checkpointed: both self-join sides read the bucketed frame, and the
-    // bucket assignment is nPlanes interpreted higher-order-function folds
-    // per row (plus the norm fold) — without the checkpoint every row pays
-    // that twice, once per join side
-    val bucketed = df.select(col(idCol), col(vecCol),
-        norm(col(vecCol)).as("_nv"))
-      .withColumn("bucket", lshBucket(col(vecCol), nPlanes))
-      .localCheckpoint(false)
-    val l = bucketed.select(col("bucket"), col(idCol).as("id_a"),
-      col(vecCol).as("_va"), col("_nv").as("_na"))
-    val r = bucketed.select(col("bucket"), col(idCol).as("id_b"),
-      col(vecCol).as("_vb"), col("_nv").as("_nb"))
-    l.join(r, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos", dot(col("_va"), col("_vb")) / (col("_na") * col("_nb")))
+    // the bucket assignment is nPlanes interpreted higher-order-function
+    // folds per row (plus the norm fold): bucketed runs them once
+    val b = Dedup.bucketed(df.select(col(idCol), col(vecCol), norm(col(vecCol)).as("_nv"),
+      lshBucket(col(vecCol), nPlanes).as("bucket")), Seq("bucket"), None)
+    Dedup.bucketPairs(b, Seq("bucket"), idCol, carry = Seq(vecCol, "_nv"))
+      .withColumn("cos", dot(col(s"${vecCol}_a"), col(s"${vecCol}_b")) /
+        (col("_nv_a") * col("_nv_b")))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b", "bucket", "cos")
   }

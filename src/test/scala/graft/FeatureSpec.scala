@@ -785,6 +785,23 @@ class FeatureSpec extends SparkSpec {
     assert(rep(0).getAs[Double]("intercept") === -5.0)
   }
 
+  test("native text features == the built-in Column formulas (TextStatsExpr parity)") {
+    import graft.functions.TextFeatures._
+    val edges = Seq("", " ", "a  b", "  lead and trail  ", "the the the", "one\ntwo\n",
+      "tab\there", "na\u00efve caf\u00e9 \u6771\u4eac", "?!.,;:", null)
+    val corpus = io.PagesGen.generate(spark, 300).select("url", "text")
+      .union(edges.zipWithIndex.map { case (t, i) => (s"edge$i", t) }.toDF("url", "text"))
+    val t = col(Cols.Text)
+    val reference = Seq(
+      Cols.NChars -> nChars(t), Cols.NWords -> nWords(t), Cols.MeanWordLen -> meanWordLen(t),
+      Cols.SymbolRatio -> symbolRatio(t), Cols.StopRatio -> stopwordRatio(t, EnStopwords),
+      Cols.DistinctWordRatio -> distinctWordRatio(t), Cols.DigitRatio -> digitRatio(t))
+    val mismatches = Ingest.features(corpus).select(reference.map { case (c, ref) =>
+      sum(when(col(c) <=> ref, 0).otherwise(1)).as(c) }: _*).head()
+    assert(reference.forall { case (c, _) => mismatches.getAs[Long](c) == 0L },
+      s"rows differing from the built-in formula, per feature: $mismatches")
+  }
+
   test("withCols resolves names like withColumn under either case sensitivity") {
     val df = Seq((1, 2)).toDF("a", "b")
     def check(): Unit = {

@@ -37,6 +37,45 @@ class OperatorSpec extends SparkSpec {
     assert(pairs.contains((1L, 2L)))
   }
 
+  test("a bucket above the hot-bucket cap is dropped, one at the cap is kept") {
+    val same = (1L to 3L).map(i => (i, "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "text")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val all3 = Set((1L, 2L), (1L, 3L), (2L, 3L))
+    // every band key of the three identical docs is one bucket of size 3
+    assert(pairs(Dedup.minhashLsh(same, "text", "doc_id", maxBucketSize = 2)).isEmpty)
+    assert(pairs(Dedup.minhashLsh(same, "text", "doc_id", maxBucketSize = 3)) === all3)
+    // every shingle has document frequency 3
+    assert(pairs(Dedup.ngramJaccard(same, "text", "doc_id", maxShingleDf = 2)).isEmpty)
+    assert(pairs(Dedup.ngramJaccard(same, "text", "doc_id", maxShingleDf = 3)) === all3)
+  }
+
+  test("every near-dup operator returns no rows and its documented columns on an empty input") {
+    val noDocs = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val noVecs = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    val cases = Seq(
+      "ngramJaccard" -> (Dedup.ngramJaccard(noDocs, "text", "doc_id"),
+        Seq("id_a", "id_b", "inter", "card_a", "card_b", "jaccard")),
+      "minhashLsh" -> (Dedup.minhashLsh(noDocs, "text", "doc_id"), Seq("id_a", "id_b")),
+      "simhashPairs64" -> (Dedup.simhashPairs64(noDocs, "text", "doc_id"),
+        Seq("id_a", "id_b", "hamming")),
+      "lineDedup" -> (Dedup.lineDedup(noDocs, "text", "doc_id"),
+        Seq("doc_id", "n_lines", "n_kept", "kept_fp")),
+      "annPairs" -> (Similarity.annPairs(noVecs, "embedding", "vec_id"),
+        Seq("id_a", "id_b", "bucket", "cos")),
+      "cosineTopK" -> (Similarity.cosineTopK(noVecs, "embedding", "vec_id", Seq(0L), k = 3),
+        Seq("query_id", "neighbor_id", "cos", "rank")),
+      "ivfTopK" -> (Similarity.ivfTopK(noVecs, "embedding", "vec_id", Seq(0L), k = 3),
+        Seq("query_id", "neighbor_id", "cos", "rank")),
+      "embeddingNearDup" -> (Dedup.embeddingNearDup(noVecs, "embedding", "vec_id"),
+        Seq("vec_id", "embedding")))
+    for ((name, (df, cols)) <- cases) {
+      assert(df.columns.toSeq === cols, name)
+      assert(df.collect().isEmpty, name)
+    }
+  }
+
   test("cosine top-k is exact and deterministic on embeddings") {
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val topk = Similarity.cosineTopK(e, "embedding", "vec_id", Seq(0L), k = 3).collect()

@@ -155,4 +155,48 @@ class PlanSpec extends SparkSpec {
       }
     }
   }
+
+  test("each near-dup self-join shuffles its bucket frame once, and simhash " +
+       "joins nothing after it") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import graft.operators.{Dedup, Similarity}
+    object Plans extends AdaptiveSparkPlanHelper
+    def hashKeys(p: SparkPlan): Set[String] = p.outputPartitioning match {
+      case h: HashPartitioning => h.references.map(_.name).toSet
+      case _ => Set.empty
+    }
+    // spread over several partitions, as a corpus is: a one-partition input
+    // satisfies any distribution and would plan no exchange at all
+    val docs = graft.io.Docs.read(spark, sfDir).repartition(4)
+    val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet").repartition(4)
+    val ops: Seq[(String, () => DataFrame, Set[String])] = Seq(
+      ("ngramJaccard", () => Dedup.ngramJaccard(docs, "text", "doc_id", threshold = 0.2),
+        Set("shingle")),
+      ("minhashLsh", () => Dedup.minhashLsh(docs, "text", "doc_id"), Set("band", "bkey")),
+      ("simhashPairs64", () => Dedup.simhashPairs64(docs, "text", "doc_id"),
+        Set("band", "bkey")),
+      ("annPairs", () => Similarity.annPairs(vecs, "embedding", "vec_id", threshold = 0.25),
+        Set("bucket")))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1") // the sort-merge regime: each join side is an exchange
+    try for ((name, op, bucket) <- ops) {
+      val df = op()
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      assert(plan.toString.contains("isFinalPlan=true"), s"$name: AQE did not finalize:\n$plan")
+      val shuffles = Plans.collect(plan) { case e: ShuffleExchangeExec if hashKeys(e) == bucket => e }
+      val reused = Plans.collect(plan) { case r: ReusedExchangeExec if hashKeys(r.child) == bucket => r }
+      assert(shuffles.size === 1 && reused.size === 1,
+        s"$name: one bucket exchange, the other self-join side reusing it:\n$plan")
+      if (name == "simhashPairs64")
+        assert(Plans.collect(plan) { case j: SortMergeJoinExec => j }.size === 1,
+          s"the hamming confirm reads the pair row, not a join back:\n$plan")
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
