@@ -76,22 +76,8 @@ object StreamingFilter {
                         models: Option[Models] = None,
                         pseudoTexts: Seq[String] = Nil)
                        (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    // Codegen-cache alignment: Spark keys its generated-class cache per
-    // session classloader, and every StreamingQuery start clones the
-    // session — so every micro-batch cascade executed under the clone
-    // recompiles generated code the original session has long since cached
-    // (measured: 74 janino compilations ≈ 1.2 s per streaming run whose
-    // generated source is byte-identical to the batch plans). Re-binding
-    // the batch's analyzed plan onto the ORIGINAL session (the standard
-    // foreachBatch re-binding move, also used for temp-view access) makes
-    // those lookups hit. A long-lived production query amortizes the
-    // compiles either way; this removes the fixed per-query-start cost.
-    // Same plan, same data, same results — only the owning session (and
-    // with it the codegen cache key) changes.
-    val session = pages.sparkSession
     pages.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val rebound = org.apache.spark.sql.GraftColumns.rebind(session, batch)
-      sink(Cascade.run(rebound, cfg, models, pseudoTexts), batchId)
+      sink(Cascade.run(batch, cfg, models, pseudoTexts), batchId)
     }
   }
 }

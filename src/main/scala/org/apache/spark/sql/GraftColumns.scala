@@ -8,18 +8,4 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftColumns {
   def of(e: Expression): Column = classic.ExpressionUtils.column(e)
   def exprOf(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** Re-bind a DataFrame's (analyzed, self-contained) logical plan onto
-    * another session of the same SparkContext. Used by the streaming
-    * micro-batch sink: every StreamingQuery start clones the session, and
-    * Spark's generated-class cache is keyed per session classloader, so
-    * plans executed under the clone recompile code the original session
-    * already holds; executing the batch under the original session makes
-    * those lookups hit (see StreamingFilter.microBatchCascade). The plan,
-    * the data and the results are identical — only the owning session (and
-    * with it the codegen cache key) changes.
-    */
-  def rebind(spark: SparkSession, df: DataFrame): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
-      df.queryExecution.logical)
 }

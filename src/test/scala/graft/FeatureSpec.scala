@@ -527,6 +527,22 @@ class FeatureSpec extends SparkSpec {
       "the earliest crawl of the min url is the keeper")
   }
 
+  test("ingest dedup keeps one of several rows equal in fingerprint, url and warc_ts") {
+    val ts = (k: Int) => new java.sql.Timestamp(1700000000000L + k * 1000L)
+    val text = "same content here"
+    val htmls = Seq("<p>same content here</p>", "<div>same content here</div>",
+      "<span>same content here</span>")
+    val rows = (htmls.map(h => ("https://h.example/a", ts(1), "en", text, h)) :+
+        ("https://h.example/a", ts(3), "en", text, htmls.head)) // later recrawl
+      .map { case (u, t, l, x, h) => (u, t, l, x, h.getBytes("UTF-8")) }
+      .toDF("url", "warc_ts", "lang", "text", "html")
+    val out = Ingest.dropDuplicatePages(
+      Ingest.normalize(rows, buddyOnlyCfg)).collect()
+    assert(out.length === 1, s"one keeper of the triple, got ${out.length}")
+    assert(out.head.getAs[java.sql.Timestamp]("warc_ts") === ts(1))
+    assert(htmls.contains(new String(out.head.getAs[Array[Byte]]("html"), "UTF-8")))
+  }
+
   test("fgt j loop: each fgtParams configuration applies as a sticky pass") {
     // fgt only reads pplStats + the ensemble size, so a stub model suffices
     val stubLm = graft.ml.NgramLMModel(2, 0,

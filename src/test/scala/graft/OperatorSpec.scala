@@ -7,13 +7,13 @@ import graft.ml.Scrubber
 class OperatorSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val docs = Seq(
+  private val docRows = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
     (2L, "the quick brown fox jumps over the lazy dog"),        // exact dup of 1
     (3L, "the quick brown fox jumps over the sleepy dog"),      // near dup of 1
     (4L, "completely different content about spark and data"),
-    (5L, "another unrelated document with its own words here")
-  ).toDF("doc_id", "text")
+    (5L, "another unrelated document with its own words here"))
+  private lazy val docs = docRows.toDF("doc_id", "text")
 
   test("exact dedup keeps the min-id representative") {
     val kept = Dedup.exact(docs, "text", "doc_id")
@@ -49,6 +49,19 @@ class OperatorSpec extends SparkSpec {
     // every shingle has document frequency 3
     assert(pairs(Dedup.ngramJaccard(same, "text", "doc_id", maxShingleDf = 2)).isEmpty)
     assert(pairs(Dedup.ngramJaccard(same, "text", "doc_id", maxShingleDf = 3)) === all3)
+  }
+
+  test("a fresh session reuses the generated classes of an earlier one") {
+    // each near-dup pass and each streaming query start runs in a fresh
+    // session; its whole-stage classes must hit the codegen cache
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    def pairsInFreshSession(): Long = Dedup.ngramJaccard(
+      spark.newSession().createDataFrame(docRows).toDF("doc_id", "text"),
+      "text", "doc_id", n = 3, threshold = 0.3).count()
+    val first = pairsInFreshSession()
+    val before = compiles.getCount
+    assert(pairsInFreshSession() === first)
+    assert(compiles.getCount - before === 0L, "janino compiles in the second session")
   }
 
   test("every near-dup operator returns no rows and its documented columns on an empty input") {

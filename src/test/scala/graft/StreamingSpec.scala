@@ -86,6 +86,24 @@ class StreamingSpec extends SparkSpec {
     assert(got.nonEmpty && got.sortBy(_._1) === want.sortBy(_._1))
   }
 
+  test("an empty stream slice runs the full cascade once over no rows") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("empty_slice").toString
+    val empty = Seq.empty[Page].toDS()
+    empty.write.mode("overwrite").parquet(dir)
+    var calls = 0
+    var rows = -1L
+    val q = StreamingFilter.microBatchCascade(
+        spark.readStream.schema(empty.schema).parquet(dir),
+        Fixture.cfg, None, PagesGen.exemplarTexts()) { (labeled, _) =>
+      calls += 1
+      rows = labeled.count()
+    }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(q.exception.isEmpty)
+    assert(calls === 1 && rows === 0L)
+  }
+
   test("q_stream_batches: a doc_id parity with no rows leaves the other slice intact") {
     val dir = java.nio.file.Files.createTempDirectory("one_parity").toString
     graft.io.Docs.read(spark, sfDir).filter(col("doc_id") % 2 === 0)

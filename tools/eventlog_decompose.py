@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Decompose a Spark event log into job wall-time vs driver gaps.
 
-Usage: eventlog_decompose.py <event log> [--jobs] [--batches]
+Usage: eventlog_decompose.py <event log> [--jobs] [--batches] [--execs]
                              [--stages [--cores N]] [--task-metrics [--cut S]]
 
 The log may be zstd-compressed (`.zstd`/`.zst`, read through the `zstd`
@@ -20,6 +20,16 @@ property, and each streaming micro-batch gets one line: its jobs, its
 distinct SQL executions (`spark.sql.execution.id`), its job time (wall time
 covered by at least one job) and its gap time (the rest of the span from its
 first job's submission to its last job's end: driver planning and commits).
+
+With --execs, each micro-batch's SQL executions: every execution whose id
+lies between the batch's first and last job-bearing one (job-less ones
+included, counted apart), its jobs, and its span (first execution start to
+last execution end) split into five parts that sum to it: job time (covered
+by a job), planning (inside an execution before its first job, or all of a
+job-less one), between jobs (inside an execution, between two of its jobs),
+tail (inside an execution after its last job) and between executions
+(covered by none). Time inside nested executions counts for the innermost
+one. A last row holds the mean over the batches.
 
 With --stages, the parallel task work against the job-covered time: the sum
 of task executor run time, its occupancy of the covered time at `--cores`
@@ -72,8 +82,9 @@ def covered_ms(intervals):
             merged.append([s, e])
     return sum(e - s for s, e in merged)
 
-def print_batches(jobs):
-    """One line per streaming micro-batch, from the jobs' batch ids."""
+def by_batch(jobs):
+    """Micro-batch id -> its jobs as (start, end, SQL execution id), and the
+    number of jobs outside any micro-batch."""
     batches = {}
     outside = 0
     for s, e, _d, _sids, props in jobs:
@@ -81,7 +92,13 @@ def print_batches(jobs):
         if bid is None:
             outside += 1
             continue
-        batches.setdefault(int(bid), []).append((s, e, props.get("spark.sql.execution.id")))
+        x = props.get("spark.sql.execution.id")
+        batches.setdefault(int(bid), []).append((s, e, None if x is None else int(x)))
+    return batches, outside
+
+def print_batches(jobs):
+    """One line per streaming micro-batch, from the jobs' batch ids."""
+    batches, outside = by_batch(jobs)
     print(f"\n{'batch':>5} {'jobs':>5} {'sqlexec':>7} {'span(s)':>8} "
           f"{'job(s)':>7} {'gap(s)':>7}")
     for bid in sorted(batches):
@@ -92,6 +109,57 @@ def print_batches(jobs):
         print(f"{bid:5d} {len(b):5d} {execs:7d} {span/1000.0:8.2f} "
               f"{job/1000.0:7.2f} {(span-job)/1000.0:7.2f}")
     print(f"jobs outside any micro-batch: {outside}")
+
+EXEC_PARTS = ["job", "plan", "in_exec", "tail", "between"]
+
+def split_span(jobs, execs):
+    """Milliseconds of each EXEC_PARTS part over the executions' span.
+
+    `jobs` are (start, end, execution id) and `execs` id -> (start, end)."""
+    by_exec = {}
+    for s, e, x in jobs:
+        by_exec.setdefault(x, []).append((s, e))
+    points = sorted({t for s, e, _ in jobs for t in (s, e)} |
+                    {t for s, e in execs.values() for t in (s, e)})
+    parts = dict.fromkeys(EXEC_PARTS, 0)
+    for a, b in zip(points, points[1:]):
+        if any(s <= a and b <= e for s, e, _ in jobs):
+            part = "job"
+        else:
+            inside = [(s, x) for x, (s, e) in execs.items() if s <= a and b <= e]
+            if not inside:
+                part = "between"
+            else:
+                own = by_exec.get(max(inside)[1])
+                if not own or b <= min(s for s, _ in own):
+                    part = "plan"
+                elif a >= max(e for _, e in own):
+                    part = "tail"
+                else:
+                    part = "in_exec"
+        parts[part] += b - a
+    return parts
+
+def print_execs(jobs, execs):
+    """Per micro-batch: SQL executions, jobs, and the span split."""
+    batches, _ = by_batch(jobs)
+    print(f"\n{'batch':>5} {'sqlexec':>7} {'jobless':>7} {'jobs':>5} {'span(s)':>8} "
+          + " ".join(f"{p + '(s)':>10}" for p in EXEC_PARTS))
+    rows = []
+    for bid in sorted(batches):
+        b = batches[bid]
+        ids = [x for _, _, x in b if x is not None]
+        mine = {x: t for x, t in execs.items() if ids and min(ids) <= x <= max(ids)}
+        parts = split_span(b, mine)
+        row = [len(mine), len(mine.keys() - set(ids)), len(b), sum(parts.values()) / 1e3] + \
+              [parts[p] / 1e3 for p in EXEC_PARTS]
+        rows.append(row)
+        print(f"{bid:5d} {row[0]:7d} {row[1]:7d} {row[2]:5d} {row[3]:8.3f} "
+              + " ".join(f"{v:10.3f}" for v in row[4:]))
+    if rows:
+        mean = [sum(c) / len(rows) for c in zip(*rows)]
+        print(f"{'mean':>5} {mean[0]:7.1f} {mean[1]:7.1f} {mean[2]:5.1f} {mean[3]:8.3f} "
+              + " ".join(f"{v:10.3f}" for v in mean[4:]))
 
 def print_stages(stages, covered, cores):
     """Task work vs job-covered time, then the top stage attempts."""
@@ -151,6 +219,7 @@ def main():
     ap.add_argument("path")
     ap.add_argument("--jobs", action="store_true")
     ap.add_argument("--batches", action="store_true")
+    ap.add_argument("--execs", action="store_true")
     ap.add_argument("--stages", action="store_true")
     ap.add_argument("--cores", type=int, default=32)
     ap.add_argument("--task-metrics", action="store_true")
@@ -159,6 +228,7 @@ def main():
     cut_ms = args.cut * 1000.0
     app_start = app_end = None
     jobs = {}          # id -> [start, end, desc, stage_ids, properties]
+    execs = {}         # SQL execution id -> [start, end]
     stage_task = {}    # stage id -> [task_time_ms, n_tasks, max_task_ms]
     # (stage id, attempt) -> executor run/GC time, tasks, name, wall
     stages = {}
@@ -168,7 +238,7 @@ def main():
         return stages.setdefault((sid, att), {"task_ms": 0, "gc_ms": 0, "tasks": 0,
                                               "wall": [None, None], "name": ""})
     for ev in load(args.path):
-        e = ev.get("Event")
+        e = ev.get("Event", "")
         if e == "SparkListenerApplicationStart":
             app_start = ev["Timestamp"]
         elif e == "SparkListenerApplicationEnd":
@@ -182,6 +252,11 @@ def main():
         elif e == "SparkListenerJobEnd":
             if ev["Job ID"] in jobs:
                 jobs[ev["Job ID"]][1] = ev["Completion Time"]
+        elif e.endswith("SparkListenerSQLExecutionStart"):
+            execs[ev["executionId"]] = [ev["time"], None]
+        elif e.endswith("SparkListenerSQLExecutionEnd"):
+            if ev["executionId"] in execs:
+                execs[ev["executionId"]][1] = ev["time"]
         elif e == "SparkListenerStageCompleted":
             si = ev["Stage Info"]
             st = stage(si["Stage ID"], si["Stage Attempt ID"])
@@ -233,6 +308,8 @@ def main():
             prev_end = max(prev_end, e)
     if args.batches:
         print_batches(ordered)
+    if args.execs:
+        print_execs(ordered, {x: t for x, t in execs.items() if t[1] is not None})
     if args.stages:
         print_stages(stages, covered * 1000.0, args.cores)
     if args.task_metrics:
