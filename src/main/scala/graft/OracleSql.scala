@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.CascadeConfig
-import graft.stages.Ingest
+import graft.functions.TextFeatures
 
 /** DuckDB-dialect SQL equivalents of the engine's checks, generated from the
   * same config the Spark side uses so thresholds can never drift. Every
@@ -26,7 +26,7 @@ object OracleSql {
     val n = w.length + 2
     s"(CAST(length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' $w ', '')) AS DOUBLE) / $n.0)"
   }
-  val stopHits: String = Ingest.EnStopwords.map(wordOcc).mkString("(", " + ", ")")
+  val stopHits: String = TextFeatures.EnStopwords.map(wordOcc).mkString("(", " + ", ")")
   val stopr: String    = s"(CASE WHEN $nw > 0 THEN $stopHits / CAST($nw AS DOUBLE) END)"
 
   val normText    = "lower(trim(regexp_replace(text, '[ \\t\\n\\r]+', ' ', 'g')))"

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.cascade.Cascade
-import graft.io.PagesGen
+import graft.io.{PagesGen, TableIO}
 import graft.stages.Models
 
 /** Two-cluster-size scaling evidence (BASELINE.json north_rule): run the
@@ -85,14 +85,6 @@ object ScalingBench {
     labeled.filter(org.apache.spark.sql.functions.col("keep")).count()
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val it = Files.list(p).iterator()
-      while (it.hasNext) deleteRecursively(it.next())
-    }
-    Files.deleteIfExists(p)
-  }
-
   /** The SNAPSHOT form of the same job: the full cascade through
     * Cascade.runResumable — every stage committed as a payload-pruned TableIO
     * snapshot on real disk, final labels re-joined and committed. This is
@@ -118,7 +110,7 @@ object ScalingBench {
       val labeled = Cascade.runResumable(pages,
         PagesGen.matchingConfig, root.toString, Some(models), PagesGen.exemplarTexts())
       labeled.filter(org.apache.spark.sql.functions.col("keep")).count()
-    } finally deleteRecursively(root)
+    } finally TableIO.deleteRecursively(root)
   }
 
   /** Resume-equivalence at bench scale: a killed-after-2-stages run resumed
@@ -142,7 +134,7 @@ object ScalingBench {
       val b = resumed.select("url", "dqc", "keep")
       val diff = a.exceptAll(b).count() + b.exceptAll(a).count()
       (diff == 0L, a.count())
-    } finally { deleteRecursively(rootA); deleteRecursively(rootB) }
+    } finally { TableIO.deleteRecursively(rootA); TableIO.deleteRecursively(rootB) }
   }
 
   /** Free checkpoint blocks left by a completed run — measurement hygiene:

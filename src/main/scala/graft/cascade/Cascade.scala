@@ -22,7 +22,7 @@ import graft.stages._
   * ONE stage loop ([[runWith]]) folds the stage list for both forms of a
   * run. They differ only in how a stage output is made durable — the
   * [[Materializer]], chosen by the entry point:
-  *  - [[run]] (local): the input of every self-join stage is a lazy local
+  *  - [[run]] (local): the input of every self-join stage is a local
   *    checkpoint, and the blocks a stage supersedes are swept as it runs.
   *    The in-memory batch form, also run on every streaming micro-batch
   *    (graft.streaming.StreamingFilter.microBatchCascade).
@@ -343,19 +343,21 @@ object Cascade {
     * the [[RowId]] and split: the checks fold over the light projection,
     * and the payload is reattached 1:1 by [[RowId]] at the end. Consumers
     * that never read the payload (e.g. a keep-count) pay only a pruned
-    * id-join. The materializer decides whether to split
-    * ([[Materializer.splitAt]]).
+    * id-join. The split point is a property of the stage list alone — the
+    * first self-join stage — and the same for both materializers; a stage
+    * list without one has nothing to fold over the light set and runs as
+    * one fused projection.
     */
   private def runWith(pages: DataFrame, cfg: CascadeConfig, models: Option[Models],
                       pseudoTexts: Seq[String], m: Materializer): DataFrame =
     runTracker.withValue(Some(m.tracker)) {
       val sc = pages.sparkSession.sparkContext
       val stageList = stages(cfg, models, pseudoTexts)
-      val split = m.splitAt(stageList.indexWhere(_.selfRef), stageList.length, pages, cfg)
+      val split = Some(stageList.indexWhere(_.selfRef)).filter(_ >= 0)
       def fold(start: DataFrame, from: Int, until: Int): DataFrame =
         (from until until).foldLeft(start) { (d, i) =>
           val s = stageList(i)
-          if (split.exists(i < _)) s.f(d) // row-local prefix: one fused projection
+          if (split.forall(i < _)) s.f(d) // row-local prefix: one fused projection
           else labeled(sc, s"cascade: stage ${s.code}")(m.stage(d, s, i, split.contains(i)))
         }
       // ingest-time duplicate drop BEFORE any check (read_data_to_check.r:
@@ -388,17 +390,15 @@ object Cascade {
     }
 
   /** How the stage loop makes its outputs durable — the one difference
-    * between the local and the snapshot form. Each run gets a fresh
-    * instance; its [[RunTracker]] scopes every sweep of checkpoint blocks to
-    * the ones this run created.
+    * between the local and the snapshot form. Where the payload splits is
+    * not its choice ([[runWith]] splits at the first self-join stage); it
+    * only makes the prefix output, the light working set and each later
+    * stage output durable in its own way. Each run gets a fresh instance;
+    * its [[RunTracker]] scopes every sweep of checkpoint blocks to the ones
+    * this run created.
     */
   private sealed abstract class Materializer(spark: SparkSession) {
     val tracker = new RunTracker(spark.sparkContext)
-    /** Index of the first stage folded over the light working set (the
-      * stages before it are the row-local prefix), or None to fold every
-      * stage over the full frame.
-      */
-    def splitAt(firstSelf: Int, nStages: Int, pages: DataFrame, cfg: CascadeConfig): Option[Int]
     /** The fingerprinted input of the ingest duplicate drop, which scans
       * it three times (keeper aggregate, semi-join, union).
       */
@@ -419,9 +419,10 @@ object Cascade {
     def finish(checked: DataFrame, label: DataFrame => DataFrame): DataFrame
   }
 
-  /** Local checkpoints. Each selfRef stage's input is checkpointed (so its
-    * scans share one computation), and everything this run created that
-    * the new checkpoint supersedes — the previous stage's checkpoint,
+  /** Local checkpoints. The prefix output and the light working set are
+    * eager checkpoints, the input of every later selfRef stage a lazy one
+    * (so its scans share one computation). Everything this run created
+    * that a new checkpoint supersedes — the previous stage's checkpoint,
     * iterate-round leftovers, the per-group stats checkpoints
     * groupStats/joinReady created while the stage plan was BUILT — is
     * unpersisted right after the stage ran. Without this, blocks stay
@@ -442,18 +443,10 @@ object Cascade {
     private def sweepExcept(keep: Set[Int]): Unit =
       tracker.release(tracker.snapshot.diff(keep).diff(protectedIds))
 
-    // Catalyst's input-size estimate (exact file bytes for a parquet scan)
-    // gates the split: the savings scale with corpus size, the cost is fixed
-    def splitAt(firstSelf: Int, nStages: Int, pages: DataFrame, cfg: CascadeConfig): Option[Int] =
-      if (firstSelf >= 0 &&
-          pages.queryExecution.optimizedPlan.stats.sizeInBytes >= cfg.payloadSplitMinBytes)
-        Some(firstSelf)
-      else None
-
-    // LAZY: the first downstream action (the first selfRef stage's stats
-    // pass, or the prefix checkpoint) computes and pins it inside that same
-    // Spark action; the next sweep reaps it, by which point both are
-    // materialized
+    // LAZY: the first downstream action (the prefix checkpoint, or the
+    // caller's action for a stage list without a self-join stage) computes
+    // and pins it inside that same Spark action; the prefix sweep reaps it,
+    // by which point both are materialized
     def dedupInput(df: DataFrame): DataFrame = materialize(df, eager = false)
 
     def prefix(df: => DataFrame): DataFrame = {
@@ -514,9 +507,10 @@ object Cascade {
     * stats-pass re-read — the dominant I/O term of a 10^12-doc cascade.
     * Re-reading each committed stage truncates lineage (which the
     * iterate-to-convergence checks need, SURVEY.md §4) and guarantees the
-    * next stage consumes exactly what a restart would consume. Always
-    * splits; the stats checkpoints a stage registers while its plan is
-    * built are reaped once its snapshot is committed.
+    * next stage consumes exactly what a restart would consume. The stats
+    * checkpoints a stage registers while its plan is built are reaped once
+    * its snapshot is committed. A stage list without a self-join stage
+    * commits only `pages_labeled` and `metrics`.
     */
   private final class Snapshot(spark: SparkSession, root: String, stopAfterStages: Int)
       extends Materializer(spark) {
@@ -524,10 +518,8 @@ object Cascade {
     private def stopped = committed >= stopAfterStages
     private def reap(): Unit = tracker.release(tracker.snapshot)
 
-    def splitAt(firstSelf: Int, nStages: Int, pages: DataFrame, cfg: CascadeConfig): Option[Int] =
-      Some(if (firstSelf < 0) nStages else firstSelf)
-
-    // a lazy re-read of the source: the prefix commit is the durable form
+    // a lazy re-read of the source: the prefix commit (or, for a stage list
+    // without a self-join stage, the label commit) is the durable form
     def dedupInput(df: DataFrame): DataFrame = df
 
     def prefix(df: => DataFrame): DataFrame = {

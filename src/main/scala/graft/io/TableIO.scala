@@ -229,19 +229,19 @@ object TableIO {
     val committed = m.snapshots.map(s => s"s${s.id}").toSet
     val dd = tableDir(root, name).resolve("data")
     if (Files.exists(dd)) {
-      Files.list(dd).iterator().asScala
+      entries(dd)
         .filterNot(p => committed.contains(p.getFileName.toString))
         .foreach(deleteRecursively)
     }
     val cd = tableDir(root, name).resolve("commits")
     if (Files.exists(cd)) {
-      Files.list(cd).iterator().asScala
+      entries(cd)
         .filterNot(p => committed.contains(p.getFileName.toString))
         .foreach(p => Files.deleteIfExists(p))
     }
     val td = tableDir(root, name)
     if (Files.exists(td)) {
-      Files.list(td).iterator().asScala
+      entries(td)
         .filter(_.getFileName.toString.startsWith("schema_s"))
         .filterNot(p => committed.contains(
           p.getFileName.toString.stripPrefix("schema_").stripSuffix(".json")))
@@ -281,9 +281,16 @@ object TableIO {
       }
     }
 
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.foreach(deleteRecursively)
+  /** The entries of `dir`. The listing stream is closed before they are
+    * returned: an unclosed Files.list leaks a directory file descriptor.
+    */
+  private def entries(dir: Path): List[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.toList finally s.close()
+  }
+
+  private[graft] def deleteRecursively(p: Path): Unit = {
+    if (Files.isDirectory(p)) entries(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
 }

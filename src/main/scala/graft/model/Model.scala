@@ -45,24 +45,6 @@ final case class Page(
     text: String,
     lang: String)
 
-/** Page plus the working columns the cascade maintains. */
-final case class LabeledPage(
-    url: String,
-    warc_ts: Timestamp,
-    text: String,
-    lang: String,
-    domain: String,
-    dqc: Option[Int],
-    keep: Boolean)
-
-/** Ground-truth companion row for fixtures (reference: the planted `ge`
-  * column carried as a passthrough, test/ini/ta_test_titan.ini:18).
-  * ge = 1 iff the row carries a planted defect; geCheck = the code of the
-  * check that should fire first; expectedText = byte-exact expected
-  * extracted/scrubbed text (input_hint invariant).
-  */
-final case class PageTruth(url: String, ge: Int, geCheck: Int, expectedText: String)
-
 /** Closed numeric interval. */
 final case class Bounds(min: Double, max: Double) {
   def contains(v: Double): Boolean = v >= min && v <= max
@@ -223,12 +205,6 @@ final case class CascadeConfig(
     // two 54.5 s single-straggler buddy-iteration jobs at 4M docs that
     // were the whole 2→8-core scaling deficit)
     statsBroadcastMaxGroups: Long = 2000000L,
-    // payload split (Cascade.run): below this estimated input size the
-    // fixed cost of the extra light/full materializations cannot repay the
-    // checkpoint-traffic savings (measured at sf0.1: +4 s on a 5k-doc
-    // corpus vs a wash at 2M docs), so small inputs keep the single-frame
-    // path. 0 forces the split (specs); Long.MaxValue disables it.
-    payloadSplitMinBytes: Long = 256L * 1024 * 1024,
     // which checks run (TITAN: each check behind a CLI switch, titan.r:140-256)
     enabled: Set[Int] = CascadeConfig.allChecks) {
 

@@ -15,12 +15,6 @@ import graft.model.{CascadeConfig, FlagCodes}
 object Ingest {
   import Cols._
 
-  /** English stopwords used by the stopword-ratio feature (owned by
-    * TextFeatures so the native stats expression can fold the hit count
-    * into its single scan).
-    */
-  val EnStopwords: Seq[String] = TextFeatures.EnStopwords
-
   /** Registered-domain from url — the "provider" key (TITAN prid,
     * read_data_to_check.r:91). Pure string ops, portable to the oracle.
     */

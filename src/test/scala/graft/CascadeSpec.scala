@@ -13,6 +13,11 @@ import graft.io.{Docs, PagesGen}
 class CascadeSpec extends SparkSpec {
   private def cfg = SparkEntry.docCfg
 
+  /** (url, dqc, keep) per row, sorted by url. */
+  private def urlLabels(df: DataFrame): Seq[(String, Int, Boolean)] =
+    df.select("url", Cols.Dqc, Cols.KeepCol).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getBoolean(2))).toSeq.sortBy(_._1)
+
   test("entry returns labeled rows with a total keep/drop decision") {
     val out = SparkEntry.entry(spark).cache()
     assert(out.count() > 0)
@@ -139,15 +144,25 @@ class CascadeSpec extends SparkSpec {
   test("local and snapshot materializers label the fixture identically") {
     val fixtureCfg = Fixture.cfg
     val pages = PagesGen.generate(spark, 600L)
-    def labels(df: DataFrame): Seq[(String, Int, Boolean)] =
-      df.select("url", Cols.Dqc, Cols.KeepCol).collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getBoolean(2))).toSeq.sortBy(_._1)
     val root = java.nio.file.Files.createTempDirectory("parity").toString
-    val snapshot = labels(Cascade.runResumable(pages, fixtureCfg, root))
+    val snapshot = urlLabels(Cascade.runResumable(pages, fixtureCfg, root))
     assert(snapshot.nonEmpty)
-    // the local form both below and above the payload-split size gate
-    assert(labels(Cascade.run(pages, fixtureCfg)) === snapshot)
-    assert(labels(Cascade.run(pages, fixtureCfg.copy(payloadSplitMinBytes = 0L))) === snapshot)
+    assert(urlLabels(Cascade.run(pages, fixtureCfg)) === snapshot)
+  }
+
+  test("a stage list without a self-join stage labels alike in every form and commits no stage") {
+    val rowLocal = Fixture.cfg.copy(
+      enabled = Set(FlagCodes.Metadata, FlagCodes.Plausibility, FlagCodes.LangBounds))
+    assert(!Cascade.stages(rowLocal).exists(_.selfRef))
+    val pages = PagesGen.generate(spark, 600L)
+    val root = java.nio.file.Files.createTempDirectory("rowlocal").toString
+    val snapshot = urlLabels(Cascade.runResumable(pages, rowLocal, root))
+    assert(snapshot.nonEmpty)
+    assert(urlLabels(Cascade.run(pages, rowLocal)) === snapshot)
+    assert(urlLabels(streaming.StreamingFilter.rowLocalPrefix(pages, rowLocal)) === snapshot)
+    val tables = new java.io.File(root).list().toSet
+    assert(tables === Set("pages_labeled", "metrics"),
+      s"only the final labels and metrics are committed, got $tables")
   }
 
   test("job labels nest: a job after a stats action keeps the enclosing stage label") {

@@ -22,6 +22,23 @@ class FeatureSpec extends SparkSpec {
       .map { case (k, i) => (s"https://$domain/p/$i", domain, "en", textOf(k)) }
       .toDF("url", "domain", "lang", "text")
 
+  /** The cascade folded over one string-keyed frame, without the payload
+    * split: ingest, then every stage (each selfRef stage's input locally
+    * checkpointed, as CascadeSpec's sticky test folds), then the final
+    * decision — the reference the payload-split parity tests compare
+    * Cascade.run against.
+    */
+  private def unsplitRun(pages: DataFrame, cfg: CascadeConfig,
+                         models: Option[Models] = None,
+                         pseudoTexts: Seq[String] = Nil): DataFrame = {
+    val ingested = Ingest.stampLists(
+      if (cfg.dedupIngest)
+        Ingest.features(Ingest.dropDuplicatePages(Ingest.normalizeCore(pages, cfg)))
+      else Ingest.normalize(pages, cfg), cfg)
+    Cascade.finalDecision(Cascade.stages(cfg, models, pseudoTexts).foldLeft(ingested)(
+      (d, s) => s.f(if (s.selfRef) d.localCheckpoint(true) else d)))
+  }
+
   private val buddyOnlyCfg = CascadeConfig(
     buddyParams = Seq(BuddyParams(5, 4.0)),
     enabled = Set(FlagCodes.Buddy),
@@ -640,8 +657,8 @@ class FeatureSpec extends SparkSpec {
   test("payload split: identical output to the single-frame path") {
     // heterogeneous corpus (two domains, an outlier, a passthrough column)
     // through a config with several self-join stages + ingest dedup + caps;
-    // payloadSplitMinBytes = 0 forces the split, MaxValue forbids it — the
-    // labeled output (rows, values, schema, column order) must be identical
+    // Cascade.run splits at the first self-join stage, the reference folds
+    // one frame — the labeled output (rows, values, columns) must be identical
     val rows = corpusOf("h.example", (0 until 10).map(98 + _) ++ Seq(300, 300))
       .unionByName(corpusOf("k.example", (0 until 8).map(60 + _)))
       .withColumn("extra_payload", concat(col(Cols.Url), lit("#x")))
@@ -649,9 +666,9 @@ class FeatureSpec extends SparkSpec {
       enabled = Set(FlagCodes.Buddy, FlagCodes.SctDual, FlagCodes.Isolation,
         FlagCodes.Plausibility),
       dedupIngest = true, maxRefsPerGroup = Some(9))
-    val split = Cascade.run(rows, cfg.copy(payloadSplitMinBytes = 0L))
-    val plain = Cascade.run(rows, cfg.copy(payloadSplitMinBytes = Long.MaxValue))
-    // column ORDER is not part of the contract (the single-frame path's
+    val split = Cascade.run(rows, cfg)
+    val plain = unsplitRun(rows, cfg)
+    // column ORDER is not part of the contract (the single-frame fold's
     // using-joins move join keys to the front); the column SET and every
     // value are
     assert(split.columns.toSet === plain.columns.toSet, "schema parity")
@@ -668,16 +685,14 @@ class FeatureSpec extends SparkSpec {
     // this parity run exercises every encoded consumer the small test above
     // cannot: fgt's per-language background lookup (hashed literals), sctFg,
     // and sctFgDual's pseudo-doc union on the encoded light schema — all
-    // with models, against the identical single-frame (string-keyed) run
+    // with models, against the unsplit single-frame (string-keyed) fold
     val corpus = io.PagesGen.generate(spark, 3000)
     val train = io.PagesGen.generateWithClass(spark, 3000)
       .filter(col("clazz") === "clean").select("text", "lang")
     val models = Models.train(spark, train)
     val cfg = io.PagesGen.matchingConfig
-    val split = Cascade.run(corpus, cfg.copy(payloadSplitMinBytes = 0L),
-      Some(models), io.PagesGen.exemplarTexts())
-    val plain = Cascade.run(corpus, cfg.copy(payloadSplitMinBytes = Long.MaxValue),
-      Some(models), io.PagesGen.exemplarTexts())
+    val split = Cascade.run(corpus, cfg, Some(models), io.PagesGen.exemplarTexts())
+    val plain = unsplitRun(corpus, cfg, Some(models), io.PagesGen.exemplarTexts())
     assert(split.columns.toSet === plain.columns.toSet, "schema parity")
     val keyCols = Seq(Cols.Url, Cols.Domain, Cols.Lang, Cols.Dqc, Cols.KeepCol).map(col)
     val a = split.select(keyCols: _*).orderBy(Cols.Url).collect().toSeq

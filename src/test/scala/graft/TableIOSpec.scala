@@ -67,6 +67,26 @@ class TableIOSpec extends SparkSpec {
     assert(TableIO.read(spark, root, "t").count() === 1)
   }
 
+  test("vacuum closes every directory listing it opens") {
+    import spark.implicits._
+    val root = tmpRoot()
+    TableIO.write(Seq((1, "a")).toDF("id", "v"), root, "t")
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    val orphan = java.nio.file.Paths.get(root, "t", "data", "s99", "part")
+    val before = os.getOpenFileDescriptorCount
+    for (_ <- 1 to 200) {
+      // an uncommitted nested dir, so each vacuum also deletes recursively
+      Files.createDirectories(orphan)
+      Files.write(orphan.resolve("f.parquet"), Array[Byte](1))
+      TableIO.vacuum(root, "t")
+    }
+    val grown = os.getOpenFileDescriptorCount - before
+    assert(!Files.exists(orphan.getParent))
+    assert(grown <= 10, s"$grown file descriptors leaked over 200 vacuum calls")
+    assert(TableIO.read(spark, root, "t").count() === 1)
+  }
+
   test("concurrent commit: the second writer of one snapshot id is rejected") {
     import spark.implicits._
     val root = tmpRoot()
