@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns}
 import org.apache.spark.sql.functions._
 import graft.cascade.Cascade
-import graft.functions.TextFeatures
+import graft.functions.{ShinglesExpr, TextFeatures}
 
 /** Deduplication operators for a large-scale training-data pipeline:
   * exact (hash groupBy), word-n-gram Jaccard, MinHash+LSH banding, and
@@ -66,23 +66,13 @@ object Dedup {
     side("a").join(side("b"), bucket).filter(col("id_a") < col("id_b"))
   }
 
-  /** Distinct word n-gram shingles per doc: (id, shingle). The token array
-    * is bound to its own projection first: a lambda that referenced the
-    * `split` expression directly would re-evaluate it once per element
-    * (higher-order functions get no common-subexpression elimination),
-    * turning an O(words) explode into O(words²) string splitting.
+  /** Distinct word n-gram shingles per doc: (id, shingle). The windows
+    * come from one native scan of the text (functions/ShinglesExpr); a doc
+    * shorter than n words has none.
     */
   def shingles(df: DataFrame, textCol: String, idCol: String, n: Int): DataFrame = {
-    val w = col("_w")
-    // sliding n-grams via transform over 0-based start indices; guarded so
-    // a doc shorter than n words yields an empty list (Spark's `sequence`
-    // would otherwise generate a DESCENDING range)
-    val grams = when(size(w) >= n,
-      transform(sequence(lit(0), size(w) - n),
-        i => concat_ws(" ", slice(w, i + 1, lit(n)))))
-      .otherwise(array().cast("array<string>"))
-    df.select(col(idCol), split(col(textCol), " ").as("_w"))
-      .select(col(idCol), explode(array_distinct(grams)).as("shingle"))
+    val grams = GraftColumns.of(ShinglesExpr(GraftColumns.exprOf(col(textCol)), n))
+    df.select(col(idCol), explode(array_distinct(grams)).as("shingle"))
   }
 
   /** Candidate near-dup pairs with exact n-gram Jaccard >= threshold.
@@ -277,9 +267,8 @@ object Dedup {
     * Docs with zero non-empty tokens produce no row (exploded-form parity).
     */
   def simhash64(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val sig = org.apache.spark.sql.GraftColumns.of(
-      graft.functions.SimHash64Expr(
-        org.apache.spark.sql.GraftColumns.exprOf(col(textCol))))
+    val sig = GraftColumns.of(
+      graft.functions.SimHash64Expr(GraftColumns.exprOf(col(textCol))))
     df.select(col(idCol), sig.as("_sig"))
       .filter(col("_sig.ntok") > 0)
       .select(col(idCol), col("_sig.sh0").as("sh0"), col("_sig.sh1").as("sh1"),

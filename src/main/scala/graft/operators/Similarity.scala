@@ -1,26 +1,27 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns}
 import org.apache.spark.sql.functions._
 import graft.cascade.Cascade
+import graft.functions.{DotExpr, LshBucketExpr}
 
 /** Similarity search over an embedding column (Array[Float]) — brute-force
   * cosine top-k as the exact baseline and a random-hyperplane-LSH bucketed
   * variant as the 100 TB scale path.
   *
   * Determinism/portability: the dot product is a *sequential left fold* in
-  * index order (Spark `aggregate` over `zip_with`; DuckDB `list_reduce`),
+  * index order (the native functions/DotExpr kernel; DuckDB `list_reduce`),
   * products are float×float exact in double, so the oracle matches
   * bit-for-bit. The LSH hyperplanes are small-integer-valued (pure function
   * of (plane, dim)), so bucket assignment is exact in both engines.
   */
 object Similarity {
 
-  /** Sequential-fold dot product of two float-array columns (exact). */
+  /** Sequential-fold dot product of two float-array columns (exact; null
+    * when the lengths differ or an element is null).
+    */
   def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
+    GraftColumns.of(DotExpr(GraftColumns.exprOf(a), GraftColumns.exprOf(b)))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -35,7 +36,7 @@ object Similarity {
   def cosineTopK(df: DataFrame, vecCol: String, idCol: String,
                  queryIds: Seq[Long], k: Int): DataFrame = {
     // precompute each side's norm once: inlining cosine() would evaluate
-    // three 64-dim folds per comparison and triple the expression tree.
+    // three dot products per comparison.
     // Checkpointed: the normed corpus feeds both the query-side filter and
     // the cross-score scan (two scans sharing one norm pass, as in ivfTopK)
     val corpus = Cascade.materialize(
@@ -53,27 +54,12 @@ object Similarity {
       .select(col("query_id"), col(idCol).as("neighbor_id"), col("cos"), col("rank"))
   }
 
-  /** Deterministic small-integer hyperplane component for (plane, dim):
-    * values in {-3..3}, exact in any engine.
-    */
-  def planeComponent(p: Int, j: Column): Column =
-    pmod(lit(p * 31) + j * 17, lit(7)) - lit(3)
-
   /** Random-hyperplane LSH bucket id: one sign bit per plane over the
-    * integer-valued hyperplanes — the scale path: equal-bucket join
-    * replaces the quadratic cross join.
+    * small-integer hyperplanes of functions/LshBucketExpr — the scale path:
+    * equal-bucket join replaces the quadratic cross join.
     */
-  def lshBucket(vec: Column, nPlanes: Int): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(vec, transform(sequence(lit(0), size(vec) - 1),
-          j => planeComponent(p, j).cast("double")),
-          (x, h) => x.cast("double") * h),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1 << p)).otherwise(lit(0))
-    }
-    bits.reduce(_ + _)
-  }
+  def lshBucket(vec: Column, nPlanes: Int): Column =
+    GraftColumns.of(LshBucketExpr(GraftColumns.exprOf(vec), nPlanes))
 
   /** IVF (inverted-file) top-k: coarse-quantize every vector to its nearest
     * centroid, probe only the query's `nProbe` closest centroid buckets,
@@ -98,7 +84,7 @@ object Similarity {
     // norms precomputed once per side (see cosineTopK) and checkpointed:
     // the normed base feeds the centroid hash-sample collect, the corpus
     // assignment pass and the query probes — three scans that would each
-    // re-run the interpreted norm fold over every vector
+    // recompute the norm of every vector
     val base = Cascade.materialize(
       df.select(col(idCol), col(vecCol), norm(col(vecCol)).as("_nv")))
     // deterministic hash sample (not lowest-N ids: recall would depend on
@@ -170,8 +156,8 @@ object Similarity {
     */
   def annPairs(df: DataFrame, vecCol: String, idCol: String,
                nPlanes: Int = 8, threshold: Double = 0.9): DataFrame = {
-    // the bucket assignment is nPlanes interpreted higher-order-function
-    // folds per row (plus the norm fold): bucketed runs them once
+    // the bucket and the norm are one pass each over the vector: bucketed
+    // stores them, so the two self-join sides do not recompute them
     val b = Dedup.bucketed(df.select(col(idCol), col(vecCol), norm(col(vecCol)).as("_nv"),
       lshBucket(col(vecCol), nPlanes).as("bucket")), Seq("bucket"), None)
     Dedup.bucketPairs(b, Seq("bucket"), idCol, carry = Seq(vecCol, "_nv"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, GraftColumns}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Multimodal, Similarity}
 import graft.ml.Scrubber
@@ -55,13 +56,152 @@ class OperatorSpec extends SparkSpec {
     // each near-dup pass and each streaming query start runs in a fresh
     // session; its whole-stage classes must hit the codegen cache
     val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-    def pairsInFreshSession(): Long = Dedup.ngramJaccard(
-      spark.newSession().createDataFrame(docRows).toDF("doc_id", "text"),
-      "text", "doc_id", n = 3, threshold = 0.3).count()
+    def pairsInFreshSession(): (Long, Long) = {
+      val s = spark.newSession()
+      (Dedup.ngramJaccard(s.createDataFrame(docRows).toDF("doc_id", "text"),
+        "text", "doc_id", n = 3, threshold = 0.3).count(),
+       Similarity.annPairs(s.read.parquet(s"$sfDir/embeddings.parquet"),
+         "embedding", "vec_id", nPlanes = 8, threshold = 0.25).count())
+    }
     val first = pairsInFreshSession()
     val before = compiles.getCount
     assert(pairsInFreshSession() === first)
     assert(compiles.getCount - before === 0L, "janino compiles in the second session")
+  }
+
+  /** The higher-order-function forms the native kernels replaced, kept as
+    * their executable specification: Spark evaluates these element by
+    * element through `eval`.
+    */
+  private object HofReference {
+    def dot(a: Column, b: Column): Column =
+      aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+        lit(0.0), (acc, x) => acc + x)
+
+    def lshBucket(vec: Column, nPlanes: Int): Column = (0 until nPlanes).map { p =>
+      val proj = aggregate(
+        zip_with(vec, transform(sequence(lit(0), size(vec) - 1),
+          j => (pmod(lit(p * 31) + j * 17, lit(7)) - lit(3)).cast("double")),
+          (x, h) => x.cast("double") * h),
+        lit(0.0), (acc, x) => acc + x)
+      when(proj >= 0, lit(1 << p)).otherwise(lit(0))
+    }.reduce(_ + _)
+
+    /** Over a column `w` bound to `split(text, " ")` in its own projection. */
+    def shingles(w: Column, n: Int): Column =
+      when(size(w) >= n,
+        transform(sequence(lit(0), size(w) - n), i => concat_ws(" ", slice(w, i + 1, lit(n)))))
+        .otherwise(array().cast("array<string>"))
+  }
+
+  /** Run `body` with whole-stage codegen (the generated kernels) and again
+    * with every projection interpreted (their `eval` path).
+    */
+  private def inBothPaths(body: String => Unit): Unit =
+    for ((path, confs) <- Seq("codegen" -> Nil, "interpreted" -> Seq(
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))) {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body(path) finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+
+  test("native dot, LSH bucket and shingles equal their higher-order-function reference") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(20261020L)
+    // NaN, ±0.0, ±Inf, subnormals and the extremes, as float and as double
+    val specials = Seq(Float.NaN, 0.0f, -0.0f, Float.PositiveInfinity, Float.NegativeInfinity,
+      Float.MinPositiveValue, 1e-40f, Float.MaxValue, -Float.MaxValue)
+    val dSpecials = Seq(Double.NaN, 0.0, -0.0, Double.PositiveInfinity,
+      Double.NegativeInfinity, Double.MinPositiveValue, 1e-310, Double.MaxValue)
+    def element(dbl: Boolean): Any = rnd.nextInt(20) match {
+      case 0 => null
+      case 1 | 2 => if (dbl) dSpecials(rnd.nextInt(dSpecials.size)) else specials(rnd.nextInt(specials.size))
+      case 3 => if (dbl) rnd.nextInt(7) - 3.0 else rnd.nextInt(7) - 3.0f
+      case _ => if (dbl) rnd.nextGaussian() else rnd.nextGaussian().toFloat
+    }
+    def vector(len: Int, dbl: Boolean): Seq[Any] =
+      if (rnd.nextInt(15) == 0) null else Seq.fill(len)(element(dbl))
+    val vecRows = (0 until 1500).map { i =>
+      val la = rnd.nextInt(7)
+      val lb = if (rnd.nextInt(4) == 0) rnd.nextInt(7) else la
+      Row(i.toLong, vector(la, dbl = false), vector(lb, dbl = false),
+        vector(la, dbl = true), vector(lb, dbl = true))
+    }
+    val vecSchema = StructType(Seq(StructField("id", LongType)) ++
+      Seq("a" -> FloatType, "b" -> FloatType, "da" -> DoubleType, "db" -> DoubleType).map {
+        case (c, t) => StructField(c, ArrayType(t, containsNull = true))
+      })
+    // an RDD-backed frame: a local relation would be folded by the optimizer
+    val vecs = spark.createDataFrame(spark.sparkContext.parallelize(vecRows, 4), vecSchema)
+    val planes = Seq(1, 8, 32)
+
+    val tokens = Seq("a", "bb", "the", "", "é", "日本語", "😀x", "ÿ-z", "42")
+    def text(): String = rnd.nextInt(12) match {
+      case 0 => null
+      case 1 => ""
+      case _ =>
+        val toks = Seq.fill(rnd.nextInt(8))(tokens(rnd.nextInt(tokens.size)))
+        val body = toks.map(t => if (rnd.nextInt(6) == 0) t + " " else t).mkString(" ")
+        (if (rnd.nextInt(5) == 0) " " else "") + body + (if (rnd.nextInt(5) == 0) " " else "")
+    }
+    def kernelShingles(t: Column, n: Int): Column =
+      GraftColumns.of(graft.functions.ShinglesExpr(GraftColumns.exprOf(t), n))
+    val textRows = (0 until 1500).map(i => Row(i.toLong, text()))
+    val texts = spark.createDataFrame(spark.sparkContext.parallelize(textRows, 4),
+      StructType(Seq(StructField("id", LongType), StructField("text", StringType))))
+
+    def bits(r: Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(i)))
+
+    inBothPaths { path =>
+      val dots = Seq(("a", "b"), ("da", "db"), ("a", "a"), ("a", "db"))
+      val cols = dots.flatMap { case (x, y) =>
+        Seq(Similarity.dot(col(x), col(y)), HofReference.dot(col(x), col(y)))
+      } ++ planes.flatMap(p => Seq(Similarity.lshBucket(col("a"), p),
+        HofReference.lshBucket(col("a"), p), Similarity.lshBucket(col("da"), p),
+        HofReference.lshBucket(col("da"), p)))
+      val rows = vecs.select(Seq(col("id"), col("a"), col("da")) ++ cols: _*).collect()
+      assert(rows.length === vecRows.length)
+      for (r <- rows) {
+        for (k <- dots.indices)
+          assert(bits(r, 3 + 2 * k) === bits(r, 4 + 2 * k),
+            s"$path: dot${dots(k)} of row ${r.getLong(0)}")
+        for ((p, k) <- planes.zipWithIndex; side <- 0 to 1) {
+          val at = 3 + 2 * dots.size + 4 * k + 2 * side
+          // the one intended difference: the HOF's sequence(0, -1) counts
+          // down for an empty vector, so its bucket was 0; the kernel
+          // projects to 0.0 on every plane, as the SQL oracle does
+          val empty = !r.isNullAt(1 + side) && r.getSeq[Any](1 + side).isEmpty
+          val expected = if (empty) ((1L << p) - 1).toInt else r.getInt(at + 1)
+          assert(r.getInt(at) === expected, s"$path: lshBucket($p) of row ${r.getLong(0)}")
+        }
+      }
+
+      val bound = texts.select(col("id"), col("text"), split(col("text"), " ").as("_w"))
+      val sh = bound.select(col("id"), col("text"),
+        kernelShingles(col("text"), 3), HofReference.shingles(col("_w"), 3),
+        kernelShingles(col("text"), 1), HofReference.shingles(col("_w"), 1)).collect()
+      assert(sh.length === textRows.length)
+      for (r <- sh; k <- Seq(2, 4))
+        assert(r.getSeq[String](k) === r.getSeq[String](k + 1),
+          s"$path: shingles of ${Option(r.getString(1)).map(t => s"'$t'")}")
+    }
+  }
+
+  test("an empty vector is in LSH bucket 2^nPlanes - 1, a null vector in bucket 0") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("v", ArrayType(FloatType, containsNull = true))))
+    val rows = Seq(Row(0L, Seq.empty[Float]), Row(1L, null), Row(2L, Seq(1.0f, null)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    inBothPaths { path =>
+      val got = df.select(col("id"), Similarity.lshBucket(col("v"), 8),
+          Similarity.lshBucket(col("v"), 3))
+        .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2))).toMap
+      assert(got === Map(0L -> (255, 7), 1L -> (0, 0), 2L -> (0, 0)), path)
+    }
   }
 
   test("every near-dup operator returns no rows and its documented columns on an empty input") {

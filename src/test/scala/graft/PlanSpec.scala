@@ -199,4 +199,53 @@ class PlanSpec extends SparkSpec {
           s"the hamming confirm reads the pair row, not a join back:\n$plan")
     } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  test("the vector and shingle operators run no higher-order function, and " +
+       "their native kernels run inside whole-stage codegen") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform, Expression, ZipWith}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.functions.{DotExpr, LshBucketExpr, ShinglesExpr}
+    import graft.operators.{Dedup, Similarity}
+    import scala.jdk.CollectionConverters._
+    object Plans extends AdaptiveSparkPlanHelper
+    // every executed plan, the checkpoints' included: a lazy checkpoint
+    // runs its plan as its own SQL execution
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def exprs(p: SparkPlan): Seq[Expression] = p.expressions.flatMap(_.collect { case e => e })
+    val docs = graft.io.Docs.read(spark, sfDir)
+    val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val ops = Seq(
+      "annPairs" -> (() => Similarity.annPairs(vecs, "embedding", "vec_id", threshold = 0.25)),
+      "ivfTopK" -> (() => Similarity.ivfTopK(vecs, "embedding", "vec_id", Seq(0L, 1L), k = 5)),
+      "cosineTopK" -> (() => Similarity.cosineTopK(vecs, "embedding", "vec_id", Seq(0L), k = 5)),
+      "ngramJaccard" -> (() => Dedup.ngramJaccard(docs, "text", "doc_id", threshold = 0.2)),
+      "minhashLsh" -> (() => Dedup.minhashLsh(docs, "text", "doc_id")))
+    for ((name, op) <- ops) {
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      plans.clear()
+      spark.listenerManager.register(listener)
+      try {
+        op().collect()
+        org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      val nodes = plans.asScala.toSeq.flatMap(p => Plans.collect(p) { case n => n })
+      val hofs = nodes.flatMap(exprs).collect {
+        case e @ (_: ArrayAggregate | _: ZipWith | _: ArrayTransform) => e
+      }
+      assert(hofs.isEmpty, s"$name evaluates higher-order functions:\n${hofs.mkString("\n")}")
+      val compiled = nodes.collect { case w: WholeStageCodegenExec => w }
+        .flatMap(w => w.child.collect { case n => n }).flatMap(exprs).collect {
+          case e @ (_: DotExpr | _: LshBucketExpr | _: ShinglesExpr) => e
+        }
+      assert(compiled.nonEmpty, s"$name: no native kernel inside whole-stage codegen:\n" +
+        plans.asScala.mkString("\n"))
+    }
+  }
 }
