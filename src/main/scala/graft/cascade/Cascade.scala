@@ -2,6 +2,7 @@ package graft.cascade
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.io.TableIO
@@ -240,11 +241,14 @@ object Cascade {
     b.result()
   }
 
-  /** Synthetic 1:1 reattach key for the payload split. Assigned once, on
-    * the frame that is then made durable — both the light and the payload
-    * side read the SAME frozen rows, so the (partition-derived) ids are
-    * consistent between them by construction, across restarts too (a
-    * resumed run reads the committed ids, never re-derives them).
+  /** Synthetic 1:1 row key: the payload split's reattach key and the
+    * ingest duplicate drop's tiebreak (Ingest.keepFirst). Assigned on the
+    * normalized input, before the row-local prefix, and frozen with it —
+    * by the ingest-dedup input or else the prefix output — so every reader
+    * of the light and the payload side sees the SAME ids, across restarts
+    * too (a resumed run reads the committed ids, never re-derives them).
+    * Derived from the input's own partitioning, so every form of a run,
+    * spread or not, picks the same keeper among otherwise equal rows.
     */
   private val RowId = "_graft_rid"
 
@@ -347,6 +351,18 @@ object Cascade {
     * first self-join stage — and the same for both materializers; a stage
     * list without one has nothing to fold over the light set and runs as
     * one fused projection.
+    *
+    * Ingest duplicate drop (read_data_to_check.r:122-143): duplicates must
+    * never inflate neighborhood statistics, and no self-join stage runs
+    * before the split, so the drop happens where the light working set is
+    * built (or, without a split, on the fused output). Ingest fingerprints
+    * the normalized input; the materializer freezes the fingerprint and the
+    * [[RowId]] tiebreak; both ride through the row-local prefix; the
+    * keeper semi-join then reads only narrow columns of the durable prefix
+    * output, so the prefix plan has no exchange at all, and the inner
+    * payload reattach drops the duplicates' payload too. The row kernels
+    * of the prefix therefore also see the duplicate rows; every prefix
+    * stage is row-local, so the survivors' values are the same either way.
     */
   private def runWith(pages: DataFrame, cfg: CascadeConfig, models: Option[Models],
                       pseudoTexts: Seq[String], m: Materializer): DataFrame =
@@ -360,28 +376,25 @@ object Cascade {
           if (split.forall(i < _)) s.f(d) // row-local prefix: one fused projection
           else labeled(sc, s"cascade: stage ${s.code}")(m.stage(d, s, i, split.contains(i)))
         }
-      // ingest-time duplicate drop BEFORE any check (read_data_to_check.r:
-      // 122-143): duplicates must never inflate neighborhood statistics.
-      // The drop reads only url/warc_ts/text, so it runs over the PRE-
-      // feature normalization, and the feature pass runs once per surviving
-      // row, after the drop (result-identical — features are deterministic
-      // per row; see Ingest.normalizeCore).
-      def ingested: DataFrame = Ingest.stampLists(
-        if (cfg.dedupIngest)
-          Ingest.features(Ingest.dropDuplicatePages(Ingest.normalizeCore(pages, cfg), m.dedupInput))
-        else Ingest.normalize(pages, cfg), cfg)
+      def dedup(d: DataFrame): DataFrame =
+        if (cfg.dedupIngest) Ingest.keepFirst(d, RowId) else d
+      def ingested: DataFrame = {
+        val numbered = Ingest.normalizeCore(pages, cfg).withColumn(RowId, monotonically_increasing_id())
+        Ingest.stampLists(Ingest.features(
+          if (cfg.dedupIngest) m.dedupInput(Ingest.fingerprinted(numbered)) else numbered), cfg)
+      }
       split match {
-        case None => m.finish(fold(ingested, 0, stageList.length), finalDecision)
+        case None => m.finish(dedup(fold(ingested, 0, stageList.length)).drop(RowId), finalDecision)
         case Some(at) =>
-          val full = m.prefix(fold(ingested, 0, at).withColumn(RowId, monotonically_increasing_id()))
-          val outCols = full.columns.toSeq.filterNot(_ == RowId)
+          val full = m.prefix(fold(ingested, 0, at))
+          val outCols = full.columns.toSeq.filterNot(c => c == RowId || c == Ingest.Fp)
           // key-encoded columns live TWICE: hashed in the light set (grouping/
           // join key) and as strings in the payload (caller-visible output)
           val encKeys = encodedKeyCols(cfg, outCols)
           // never empty: url and text always travel as payload
           val payloadCols = outCols.filterNot(workingCol(cfg)) ++ encKeys
           val light = m.light(encodeKeys(
-            full.select(full.columns.filter(workingCol(cfg)).map(col): _*), encKeys))
+            dedup(full).select(full.columns.filter(workingCol(cfg)).map(col): _*), encKeys))
           m.finish(fold(light, at, stageList.length), d => finalDecision(
             d.drop(encKeys: _*) // hashed keys: the string originals rejoin here
               .join(full.select((RowId +: payloadCols).map(col): _*), Seq(RowId)) // 1:1
@@ -399,8 +412,9 @@ object Cascade {
     */
   private sealed abstract class Materializer(spark: SparkSession) {
     val tracker = new RunTracker(spark.sparkContext)
-    /** The fingerprinted input of the ingest duplicate drop, which scans
-      * it three times (keeper aggregate, semi-join, union).
+    /** The numbered, fingerprinted input of the ingest duplicate drop.
+      * Whatever is made durable from it must keep both columns frozen, as
+      * the keeper semi-join reads them twice after the row-local prefix.
       */
     def dedupInput(df: DataFrame): DataFrame
     /** The prefix output, full width with the [[RowId]]. By name: a resumed
@@ -419,21 +433,24 @@ object Cascade {
     def finish(checked: DataFrame, label: DataFrame => DataFrame): DataFrame
   }
 
-  /** Local checkpoints. The prefix output and the light working set are
-    * eager checkpoints, the input of every later selfRef stage a lazy one
-    * (so its scans share one computation). Everything this run created
-    * that a new checkpoint supersedes — the previous stage's checkpoint,
-    * iterate-round leftovers, the per-group stats checkpoints
-    * groupStats/joinReady created while the stage plan was BUILT — is
-    * unpersisted right after the stage ran. Without this, blocks stay
-    * pinned until driver GC and a long cascade over millions of rows turns
-    * into an eviction storm. Blocks that back the returned frame (the
-    * payload side of the split) stay pinned for the caller's action.
+  /** Local checkpoints. The ingest-dedup input is a lazy checkpoint, the
+    * prefix output and the light working set are eager ones, the input of
+    * every later selfRef stage a lazy one (so its scans share one
+    * computation). Everything this run created that a new checkpoint
+    * supersedes — the previous stage's checkpoint, iterate-round
+    * leftovers, the per-group stats checkpoints groupStats/joinReady
+    * created while the stage plan was BUILT — is unpersisted right after
+    * the stage ran. Without this, blocks stay pinned until driver GC and a
+    * long cascade over millions of rows turns into an eviction storm.
+    * Blocks that back the returned frame (the payload side of the split)
+    * stay pinned for the caller's action.
     */
   private final class Local(spark: SparkSession) extends Materializer(spark) {
     private val sc = spark.sparkContext
     private var prefixIds = Set.empty[Int]
     private var protectedIds = Set.empty[Int]
+    /** The partition count of an ingest-dedup input this run spread. */
+    private var spreadFrom: Option[Int] = None
 
     private def materializeTracked(d: DataFrame, eager: Boolean): (DataFrame, Set[Int]) = {
       val before = tracker.snapshot
@@ -446,14 +463,32 @@ object Cascade {
     // LAZY: the first downstream action (the prefix checkpoint, or the
     // caller's action for a stage list without a self-join stage) computes
     // and pins it inside that same Spark action; the prefix sweep reaps it,
-    // by which point both are materialized
-    def dedupInput(df: DataFrame): DataFrame = materialize(df, eager = false)
+    // by which point both are materialized. Spread: an input on fewer
+    // partitions than the scheduler's default parallelism (one streamed
+    // slice file is one partition) is hash-partitioned on its unique row
+    // id to that many partitions inside the same lazy checkpoint, so the
+    // row-local prefix runs on every task slot instead of in one task. The
+    // partition count comes from the checkpoint's RDD, which costs no job.
+    def dedupInput(df: DataFrame): DataFrame = {
+      val (c, ids) = materializeTracked(df, eager = false)
+      val n = c.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.getNumPartitions }
+        .get
+      if (n >= sc.defaultParallelism) c
+      else {
+        spreadFrom = Some(n max 1)
+        tracker.release(ids) // never computed: nothing was stored
+        materialize(df.repartition(sc.defaultParallelism, col(RowId)), eager = false)
+      }
+    }
 
+    // read back on the input's partition count: the prefix was spread for
+    // its row kernels, but the light set built from it and every stats pass
+    // over that narrow frame gain nothing from more, smaller partitions
     def prefix(df: => DataFrame): DataFrame = {
       val (c, ids) = materializeTracked(df, eager = true)
       prefixIds = ids
       sweepExcept(ids) // the ingest-dedup blocks are superseded here
-      c
+      spreadFrom.fold(c)(c.coalesce)
     }
 
     // the payload stays a LAZY projection of the pinned prefix blocks —
@@ -498,9 +533,12 @@ object Cascade {
   }
 
   /** TableIO snapshot commits. The row-local prefix — every text/html
-    * consumer — is committed ONCE, full width with the [[RowId]]; its
-    * presence is the progress indicator of a restart. Every later stage
-    * snapshot holds only the light working set, because the neighborhood
+    * consumer — is committed ONCE, full width with the [[RowId]] (and,
+    * with ingest dedup, the fingerprint, so the duplicate drop that builds
+    * the light set reads the committed tiebreak); its presence is the
+    * progress indicator of a restart. Nothing before it is made durable:
+    * the ingest-dedup input stays a lazy re-read of the source. Every later
+    * stage snapshot holds only the light working set, because the neighborhood
     * stages never read the payload; parquet being columnar, even the first
     * light projection of the prefix never moves the text bytes off disk.
     * This removes the text bytes from every per-stage write AND every
@@ -518,8 +556,11 @@ object Cascade {
     private def stopped = committed >= stopAfterStages
     private def reap(): Unit = tracker.release(tracker.snapshot)
 
-    // a lazy re-read of the source: the prefix commit (or, for a stage list
-    // without a self-join stage, the label commit) is the durable form
+    // a lazy re-read of the source: the prefix commit freezes the
+    // fingerprint and the row id, and a resumed run reads them back. A stage
+    // list without a self-join stage commits only its labels, so its keeper
+    // semi-join numbers the source's rows once per branch, from the same
+    // stable partitioning (a committed table or a file scan).
     def dedupInput(df: DataFrame): DataFrame = df
 
     def prefix(df: => DataFrame): DataFrame = {

@@ -33,17 +33,23 @@ object Ingest {
   def normalize(pages: DataFrame, cfg: CascadeConfig): DataFrame =
     features(normalizeCore(pages, cfg))
 
-  /** [[normalize]] minus the derived-feature projection. The cascade's
-    * ingest-dedup path materializes THIS frame (the duplicate drop reads
-    * only url/warc_ts/text) and runs [[features]] after the drop: the
-    * dedup checkpoint is narrower by the whole f_* working set, and the
-    * single-pass text scan ([[features]]' TextStatsExpr byte walk) runs
-    * once per SURVIVING row instead of once per ingested row. Feature
-    * values are deterministic per row, so computing them after the
-    * row drop is result-identical.
+  /** [[normalize]] minus the derived-feature projection: the frame the
+    * cascade fingerprints ([[fingerprinted]]) and freezes as the ingest
+    * duplicate drop's input. The drop itself runs after the row-local
+    * prefix (Cascade.runWith), so [[features]] and every row kernel of the
+    * prefix also see the duplicate rows; features are deterministic per
+    * row, so the survivors' values are the same either way.
+    *
+    * Input columns are matched to the canonical names with the session's
+    * resolver (case-insensitively by default, as `withColumn` matches) and
+    * renamed to the canonical spelling, so a `Lang` or `WARC_TS` column is
+    * read, not shadowed by a synthesized null column or skipped by the
+    * crawl-window filter and the recrawl keeper.
     */
   def normalizeCore(pages: DataFrame, cfg: CascadeConfig): DataFrame = {
-    var df = pages
+    val resolve = pages.sparkSession.sessionState.conf.resolver
+    val renames = pages.columns.flatMap(c => Canonical.find(k => k != c && resolve(k, c)).map(c -> _))
+    var df = if (renames.isEmpty) pages else pages.withColumnsRenamed(renames.toMap)
     if (!df.columns.contains(Html))   df = df.withColumn(Html, lit(null).cast("binary"))
     if (!df.columns.contains(Lang))   df = df.withColumn(Lang, lit(null).cast("string"))
     if (!df.columns.contains(Domain)) df = df.withColumn(Domain, domainOf(col(Url)))
@@ -68,6 +74,9 @@ object Ingest {
     withCols(df, Seq(Doit -> lookup(cfg.doit, 1), Prio -> lookup(cfg.priorities, 0)))
       .filter(col(Doit) =!= 0)
   }
+
+  /** The input columns ingest reads by name. */
+  private val Canonical = Seq(Url, Text, Html, Lang, Domain, Dqc, WarcTs)
 
   /** withColumn-chain collapse: apply a SEQUENCE of (name, expr) pairs as
     * ONE Dataset operation with withColumn's exact semantics — an existing
@@ -149,37 +158,65 @@ object Ingest {
         when(black, lit(FlagCodes.Blacklist)).when(keep, lit(FlagCodes.Keep))))
   }
 
-  /** Ingest-time exact duplicate drop — the reference removes duplicated
-    * stations BEFORE any check runs so duplicates never pollute
-    * neighborhood statistics (read_data_to_check.r:122-143, keep the first).
-    * Keeper = minimum (url, warc_ts) per normalized-text fingerprint:
+  /** The ingest duplicate drop's content key: the 16 md5 bytes of the
+    * normalized text (not their 32 hex chars: the cascade stores it in
+    * its checkpoints), null for blank text. Blank text is NOT deduplicable
+    * content: those rows carry their payload in html (pending backfill) or
+    * are metadata-check fodder — collapsing every empty-text row to one
+    * "keeper" would silently delete them. A null fingerprint never matches
+    * the keeper semi-join, so they bypass the drop.
+    */
+  private[graft] val Fp = "_fp"
+
+  private[graft] def fingerprinted(df: DataFrame): DataFrame = {
+    val hasContent = col(Text).isNotNull && length(trim(col(Text))) > 0
+    df.withColumn(Fp, when(hasContent, unhex(TextFeatures.fingerprint(col(Text)))))
+  }
+
+  /** The rows of a [[fingerprinted]] frame that survive the ingest
+    * duplicate drop, without the fingerprint — the reference removes
+    * duplicated stations BEFORE any check runs so duplicates never pollute
+    * neighborhood statistics (read_data_to_check.r:122-143, keep the
+    * first). Keeper = minimum (url, warc_ts, `tiebreak`) per fingerprint:
     * aggregation + semi-join, no window, skew-safe (the keeper table has
-    * one row per distinct content). The timestamp tiebreak matters for the
-    * most common crawl duplicate — recrawls of one page share the url, so a
+    * one row per distinct content). The timestamp matters for the most
+    * common crawl duplicate — recrawls of one page share the url, so a
     * url-only keeper would keep every recrawl; here exactly the earliest
-    * crawl survives. Rows identical in all three of (fingerprint, url,
-    * warc_ts) are collapsed to one by the final dropDuplicates (they are
-    * interchangeable modulo raw html bytes — the normalized text is equal
-    * by construction). `materialize` may make the fingerprinted frame,
-    * which all three branches read, durable: one fingerprint per row.
+    * crawl survives. `tiebreak` is a unique per-row column that is frozen
+    * wherever the frame is read more than once (a stored
+    * `monotonically_increasing_id`): of rows equal in all of (fingerprint,
+    * url, warc_ts) — interchangeable modulo raw html bytes — it keeps one,
+    * arbitrary but deterministic, and makes the keeper unique, so the
+    * semi-join alone is exact. Neither exchange carries a payload column:
+    * the keeper aggregate reads (fingerprint, url, warc_ts, tiebreak), and
+    * a consumer that reads only narrow columns of the result prunes the
+    * semi-join's probe side to them.
+    */
+  private[graft] def keepFirst(df: DataFrame, tiebreak: String): DataFrame = {
+    val resolve = df.sparkSession.sessionState.conf.resolver
+    val keyCols = (if (df.columns.exists(resolve(_, WarcTs))) Seq(Url, WarcTs) else Seq(Url)) :+
+      tiebreak
+    val keepers = df.filter(col(Fp).isNotNull).groupBy(col(Fp))
+      .agg(min(struct(keyCols.map(col): _*)).as("_k"))
+      .select(col(Fp), col("_k")(tiebreak).as(tiebreak))
+    df.join(keepers, Seq(Fp, tiebreak), "left_semi").unionByName(df.filter(col(Fp).isNull))
+      .drop(Fp)
+  }
+
+  /** Ingest-time exact duplicate drop over a normalized frame: number the
+    * rows, fingerprint them and [[keepFirst]]. `materialize` may make the
+    * numbered frame, which both branches read, durable: one fingerprint
+    * per row, and one frozen row number. Without it, each branch derives
+    * the numbers from the input's partitioning again, which needs an input
+    * whose row order is stable (a scan or a checkpoint). The cascade runs
+    * the same two steps, but applies [[keepFirst]] after its row-local
+    * prefix (Cascade.runWith).
     */
   def dropDuplicatePages(df: DataFrame,
                          materialize: DataFrame => DataFrame = identity): DataFrame = {
-    val keyCols = if (df.columns.contains(WarcTs)) Seq(Url, WarcTs) else Seq(Url)
-    // Blank text is NOT deduplicable content: those rows carry their payload
-    // in html (pending backfill) or are metadata-check fodder — collapsing
-    // every empty-text row to one "keeper" would silently delete them. They
-    // bypass via a null fingerprint (null keys never match a semi-join).
-    val hasContent = col(Text).isNotNull && length(trim(col(Text))) > 0
-    // the 16 md5 bytes, not their 32 hex chars: `materialize` may store it
-    val withFp = materialize(df.withColumn("_fp",
-      when(hasContent, unhex(TextFeatures.fingerprint(col(Text))))))
-    val keepers = withFp.filter(col("_fp").isNotNull).groupBy(col("_fp"))
-      .agg(min(struct(keyCols.map(col): _*)).as("_k"))
-      .select(col("_fp") +: keyCols.map(k => col("_k")(k).as(k)): _*)
-    val deduped = withFp.join(keepers, "_fp" +: keyCols, "left_semi")
-      .dropDuplicates("_fp" +: keyCols)
-    deduped.unionByName(withFp.filter(col("_fp").isNull)).drop("_fp")
+    val rowNo = "_row"
+    keepFirst(materialize(fingerprinted(df.withColumn(rowNo, monotonically_increasing_id()))),
+      rowNo).drop(rowNo)
   }
 
   /** Per-provider ingest shaping + union — the reference's per-provider

@@ -165,6 +165,63 @@ class CascadeSpec extends SparkSpec {
       s"only the final labels and metrics are committed, got $tables")
   }
 
+  /** Exchanges of `plans` that partition on the cascade's row id: the
+    * spread of a narrow ingest-dedup input.
+    */
+  private def spreads(plans: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+    plans.flatMap(PlanNodes.of).collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }.filter(_.outputPartitioning match {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        h.references.exists(_.name == "_graft_rid")
+      case _ => false
+    })
+
+  test("Cascade.run labels alike on one input partition and on many; only the one spreads") {
+    val s = spark.sparkContext.defaultParallelism
+    val pages = PagesGen.generate(spark, 600L)
+    val narrow = pages.coalesce(1)
+    val wide = pages.repartition(2 * s).localCheckpoint(true)
+    var one, many: Seq[(String, Int, Boolean)] = Nil
+    val onePlans = executedPlans { one = urlLabels(Cascade.run(narrow, Fixture.cfg)) }
+    val manyPlans = executedPlans { many = urlLabels(Cascade.run(wide, Fixture.cfg)) }
+    assert(one.size >= 595 && one === many)
+    assert(spreads(onePlans).map(_.numPartitions) === Seq(s),
+      "a one-partition input is spread once, to the default parallelism")
+    assert(spreads(manyPlans).isEmpty, "an input of enough partitions is not spread")
+  }
+
+  test("of rows equal in fingerprint, url and warc_ts every form keeps the same one") {
+    val base = PagesGen.generate(spark, 600L).withColumn("tag", lit("gen"))
+    val url = base.filter(length(trim(col(Cols.Text))) > 0).select("url")
+      .as[String](org.apache.spark.sql.Encoders.STRING).head()
+    val twin = base.filter(col("url") === url)
+    // the generated row, then two rows differing from it only in html and
+    // tag, all on one partition (so the local form spreads it)
+    val pages = base.unionByName(twin.withColumn("html", lit("<b>x</b>").cast("binary"))
+        .withColumn("tag", lit("b")))
+      .unionByName(twin.withColumn("html", lit("<i>y</i>").cast("binary"))
+        .withColumn("tag", lit("c")))
+      .coalesce(1)
+    def kept(df: DataFrame): Seq[String] =
+      df.filter(col("url") === url).select("tag").as[String](org.apache.spark.sql.Encoders.STRING)
+        .collect().toSeq
+    val rowLocal = Fixture.cfg.copy(
+      enabled = Set(FlagCodes.Metadata, FlagCodes.Plausibility, FlagCodes.LangBounds))
+    val root = java.nio.file.Files.createTempDirectory("tie").toString
+    Cascade.runResumable(pages, Fixture.cfg, root, stopAfterStages = 1)
+    val forms = Seq(
+      "run" -> kept(Cascade.run(pages, Fixture.cfg)),
+      "runResumable" -> kept(Cascade.runResumable(pages, Fixture.cfg,
+        java.nio.file.Files.createTempDirectory("tie").toString)),
+      "resumed runResumable" -> kept(Cascade.runResumable(pages, Fixture.cfg, root)),
+      "run without a self-join stage" -> kept(Cascade.run(pages, rowLocal)),
+      "runResumable without a self-join stage" -> kept(Cascade.runResumable(pages, rowLocal,
+        java.nio.file.Files.createTempDirectory("tie").toString)))
+    forms.foreach { case (form, tags) => assert(tags.size === 1, s"$form kept $tags") }
+    assert(forms.map(_._2).distinct.size === 1, s"the forms disagree: $forms")
+  }
+
   test("job labels nest: a job after a stats action keeps the enclosing stage label") {
     val sc = spark.sparkContext
     val descs = new java.util.concurrent.ConcurrentHashMap[String, String]()

@@ -92,6 +92,25 @@ class FeatureSpec extends SparkSpec {
     assert(ts.getTimestamp(1).getTime === 1700000000000L + 14 * 86400000L)
   }
 
+  test("ingest reads input columns named in another case: Lang and WARC_TS") {
+    val day = (i: Int) => new java.sql.Timestamp(1700000000000L + i * 86400000L)
+    val text = Seq.fill(50)("w").mkString(" ")
+    val rows = Seq(
+      ("https://h.example/a", day(7), "de", text),
+      ("https://h.example/a", day(6), "de", text),  // earlier recrawl: the keeper
+      ("https://h.example/b", day(8), "fr", "other words here"),
+      ("https://h.example/c", day(20), "en", "out of the crawl window"))
+      .toDF("url", "WARC_TS", "Lang", "text")
+    val cfg = buddyOnlyCfg.copy(tsMin = Some(day(5)), tsMax = Some(day(15)))
+    val out = Ingest.dropDuplicatePages(Ingest.normalize(rows, cfg))
+      .select(Cols.Url, Cols.WarcTs, Cols.Lang).collect()
+      .map(r => (r.getString(0), r.getTimestamp(1), r.getString(2))).sortBy(_._1).toSeq
+    assert(out === Seq(("https://h.example/a", day(6), "de"), ("https://h.example/b", day(8), "fr")))
+    val labeled = Cascade.run(rows, cfg.copy(dedupIngest = true))
+      .select(Cols.Url, Cols.Lang).as[(String, String)].collect().sorted.toSeq
+    assert(labeled === Seq("https://h.example/a" -> "de", "https://h.example/b" -> "fr"))
+  }
+
   test("per-provider SourceSpec: remap + affine rescale normalize two shapes") {
     val a = Seq(("https://a.example/1", "body text here of source a", "en", 10.0))
       .toDF("page_url", "body", "language", "score")

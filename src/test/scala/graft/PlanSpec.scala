@@ -109,19 +109,9 @@ class PlanSpec extends SparkSpec {
   test("groupStats aggregates once, combined map-side: one exchange on the " +
        "group keys, over a partial HashAggregate") {
     import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    object Plans extends AdaptiveSparkPlanHelper
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     def below(p: SparkPlan): SparkPlan = p match {
       case w: WholeStageCodegenExec => below(w.child)
       case i: InputAdapter => below(i.child)
@@ -129,17 +119,9 @@ class PlanSpec extends SparkSpec {
     }
     val corpus = checkpointedCorpus()
     for (cfg <- Seq(CascadeConfig(maxRefsPerGroup = Some(1000)), CascadeConfig())) {
-      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
-      plans.clear()
-      spark.listenerManager.register(listener)
-      try {
-        Neighborhood.groupStats(corpus, col(Cols.NWords), cfg)
-        org.apache.spark.ListenerDrain.drain(spark.sparkContext)
-      } finally spark.listenerManager.unregister(listener)
-      import scala.jdk.CollectionConverters._
-      val exchanges = plans.asScala.toSeq.flatMap(p =>
-        Plans.collect(p) { case e: ShuffleExchangeExec => e })
-      assert(exchanges.size === 1, s"one aggregation exchange expected:\n${plans.asScala.mkString("\n")}")
+      val plans = executedPlans(Neighborhood.groupStats(corpus, col(Cols.NWords), cfg))
+      val exchanges = plans.flatMap(PlanNodes.of).collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size === 1, s"one aggregation exchange expected:\n${plans.mkString("\n")}")
       val e = exchanges.head
       val partKeys = e.outputPartitioning match {
         case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
@@ -161,11 +143,9 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     import graft.operators.{Dedup, Similarity}
-    object Plans extends AdaptiveSparkPlanHelper
     def hashKeys(p: SparkPlan): Set[String] = p.outputPartitioning match {
       case h: HashPartitioning => h.references.map(_.name).toSet
       case _ => Set.empty
@@ -190,12 +170,12 @@ class PlanSpec extends SparkSpec {
       df.collect()
       val plan = df.queryExecution.executedPlan
       assert(plan.toString.contains("isFinalPlan=true"), s"$name: AQE did not finalize:\n$plan")
-      val shuffles = Plans.collect(plan) { case e: ShuffleExchangeExec if hashKeys(e) == bucket => e }
-      val reused = Plans.collect(plan) { case r: ReusedExchangeExec if hashKeys(r.child) == bucket => r }
+      val shuffles = PlanNodes.collect(plan) { case e: ShuffleExchangeExec if hashKeys(e) == bucket => e }
+      val reused = PlanNodes.collect(plan) { case r: ReusedExchangeExec if hashKeys(r.child) == bucket => r }
       assert(shuffles.size === 1 && reused.size === 1,
         s"$name: one bucket exchange, the other self-join side reusing it:\n$plan")
       if (name == "simhashPairs64")
-        assert(Plans.collect(plan) { case j: SortMergeJoinExec => j }.size === 1,
+        assert(PlanNodes.collect(plan) { case j: SortMergeJoinExec => j }.size === 1,
           s"the hamming confirm reads the pair row, not a join back:\n$plan")
     } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
@@ -203,21 +183,9 @@ class PlanSpec extends SparkSpec {
   test("the vector and shingle operators run no higher-order function, and " +
        "their native kernels run inside whole-stage codegen") {
     import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform, Expression, ZipWith}
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
     import graft.functions.{DotExpr, LshBucketExpr, ShinglesExpr}
     import graft.operators.{Dedup, Similarity}
-    import scala.jdk.CollectionConverters._
-    object Plans extends AdaptiveSparkPlanHelper
-    // every executed plan, the checkpoints' included: a lazy checkpoint
-    // runs its plan as its own SQL execution
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     def exprs(p: SparkPlan): Seq[Expression] = p.expressions.flatMap(_.collect { case e => e })
     val docs = graft.io.Docs.read(spark, sfDir)
     val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -228,14 +196,8 @@ class PlanSpec extends SparkSpec {
       "ngramJaccard" -> (() => Dedup.ngramJaccard(docs, "text", "doc_id", threshold = 0.2)),
       "minhashLsh" -> (() => Dedup.minhashLsh(docs, "text", "doc_id")))
     for ((name, op) <- ops) {
-      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
-      plans.clear()
-      spark.listenerManager.register(listener)
-      try {
-        op().collect()
-        org.apache.spark.ListenerDrain.drain(spark.sparkContext)
-      } finally spark.listenerManager.unregister(listener)
-      val nodes = plans.asScala.toSeq.flatMap(p => Plans.collect(p) { case n => n })
+      val plans = executedPlans(op().collect())
+      val nodes = plans.flatMap(PlanNodes.of)
       val hofs = nodes.flatMap(exprs).collect {
         case e @ (_: ArrayAggregate | _: ZipWith | _: ArrayTransform) => e
       }
@@ -245,7 +207,53 @@ class PlanSpec extends SparkSpec {
           case e @ (_: DotExpr | _: LshBucketExpr | _: ShinglesExpr) => e
         }
       assert(compiled.nonEmpty, s"$name: no native kernel inside whole-stage codegen:\n" +
-        plans.asScala.mkString("\n"))
+        plans.mkString("\n"))
     }
+  }
+
+  test("the cascade's row-local prefix plans no exchange, and no exchange of " +
+       "the ingest duplicate drop carries text or html") {
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+    import graft.cascade.Cascade
+    import graft.io.PagesGen
+    import graft.stages.Ingest
+    val s = spark.sparkContext.defaultParallelism
+    val pages = PagesGen.generate(spark, 600L)
+    def exchanges(plans: Seq[SparkPlan]) =
+      plans.flatMap(PlanNodes.of).collect { case e: Exchange => e }
+    def carried(e: Exchange) = e.output.map(_.name).toSet
+    def isSpread(e: Exchange) = e.outputPartitioning match {
+      case h: HashPartitioning => h.references.exists(_.name == "_graft_rid")
+      case _ => false
+    }
+    for (input <- Seq(pages.coalesce(1), pages.repartition(2 * s).localCheckpoint(true))) {
+      val plans = executedPlans(Cascade.run(input, Fixture.cfg).collect())
+      // the prefix is the one plan that scrubs the text
+      val prefix = plans.filter(p => PlanNodes.of(p).exists {
+        case pr: ProjectExec => pr.projectList.exists {
+          case a: Alias => a.name == Cols.ScrubbedText
+          case _ => false
+        }
+        case _ => false
+      })
+      assert(prefix.size === 1, s"one prefix execution expected:\n${plans.mkString("\n")}")
+      assert(!prefix.head.isInstanceOf[AdaptiveSparkPlanExec] && exchanges(prefix).isEmpty,
+        s"the prefix plan has an exchange:\n${prefix.head}")
+      val all = exchanges(plans)
+      assert(!all.exists(_.outputPartitioning.isInstanceOf[RoundRobinPartitioning]))
+      val dedup = all.filter(e => carried(e).contains(Ingest.Fp) && !isSpread(e))
+      assert(dedup.nonEmpty, "the ingest duplicate drop ran no exchange")
+      dedup.foreach(e => assert((carried(e) & Set(Cols.Text, Cols.Html)).isEmpty,
+        s"a dedup exchange carries the payload:\n$e"))
+    }
+    // the public composed form, over the plain normalized frame
+    val alone = exchanges(executedPlans(
+      Ingest.dropDuplicatePages(Ingest.normalize(pages, Fixture.cfg)).collect()))
+    assert(alone.nonEmpty && alone.forall(e => (carried(e) & Set(Cols.Text, Cols.Html)).isEmpty),
+      s"dropDuplicatePages moves the payload through an exchange:\n${alone.mkString("\n")}")
   }
 }

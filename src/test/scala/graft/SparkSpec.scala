@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, one session). */
@@ -22,4 +25,29 @@ trait SparkSpec extends AnyFunSuite {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** The physical plan of every SQL execution `f` ran, the checkpoints'
+    * included: a lazy checkpoint runs its plan as its own SQL execution.
+    */
+  def executedPlans(f: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      f
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+}
+
+/** Every node of an executed plan, adaptive query stages included. */
+object PlanNodes extends AdaptiveSparkPlanHelper {
+  def of(p: SparkPlan): Seq[SparkPlan] = collect(p) { case n => n }
 }

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """Decompose a Spark event log into job wall-time vs driver gaps.
 
-Usage: eventlog_decompose.py <event log> [--jobs] [--batches] [--execs]
-                             [--stages [--cores N]] [--task-metrics [--cut S]]
+Usage: eventlog_decompose.py <event log> [--jobs] [--batches]
+                             [--execs [--batch N]] [--stages [--cores N]]
+                             [--task-metrics [--cut S]]
 
 The log may be zstd-compressed (`.zstd`/`.zst`, read through the `zstd`
 binary) or uncompressed (any other name, `.inprogress` included), and either
@@ -29,7 +30,10 @@ by a job), planning (inside an execution before its first job, or all of a
 job-less one), between jobs (inside an execution, between two of its jobs),
 tail (inside an execution after its last job) and between executions
 (covered by none). Time inside nested executions counts for the innermost
-one. A last row holds the mean over the batches.
+one. A last row holds the mean over the batches. With --execs --batch N,
+one line per SQL execution of micro-batch N instead (the same executions):
+its planning ms (start to first job, or all of a job-less one), its AQE plan
+updates, its jobs with each job's ms and task count, and its description.
 
 With --stages, the parallel task work against the job-covered time: the sum
 of task executor run time, its occupancy of the covered time at `--cores`
@@ -161,6 +165,32 @@ def print_execs(jobs, execs):
         print(f"{'mean':>5} {mean[0]:7.1f} {mean[1]:7.1f} {mean[2]:5.1f} {mean[3]:8.3f} "
               + " ".join(f"{v:10.3f}" for v in mean[4:]))
 
+def print_batch_execs(jobs, execs, descs, aqe, stage_task, batch):
+    """One line per SQL execution of micro-batch `batch`."""
+    mine_jobs = [j for j in jobs if j[4].get("streaming.sql.batchId") == str(batch)]
+    own = {}
+    for s, e, _d, sids, props in mine_jobs:
+        x = props.get("spark.sql.execution.id")
+        if x is not None:
+            tasks = sum(stage_task.get(i, [0, 0, 0])[1] for i in sids)
+            own.setdefault(int(x), []).append((s, e, tasks))
+    if not own:
+        print(f"\nno jobs in micro-batch {batch}"); return
+    ids = sorted(x for x in execs if min(own) <= x <= max(own))
+    print(f"\nbatch {batch}: {len(ids)} SQL executions, {len(mine_jobs)} jobs")
+    print(f"{'exec':>6} {'plan(ms)':>8} {'aqe':>4} {'jobs':>4}  {'job ms (tasks)':<28} description")
+    plan_sum = aqe_sum = 0
+    for x in ids:
+        s0, e0 = execs[x]
+        js = sorted(own.get(x, []))
+        plan = (js[0][0] if js else e0) - s0
+        plan_sum += plan
+        aqe_sum += aqe.get(x, 0)
+        runs = " ".join(f"{e - s}({t})" for s, e, t in js)
+        print(f"{x:6d} {plan:8d} {aqe.get(x, 0):4d} {len(js):4d}  {runs:<28} "
+              f"{descs.get(x, '')[:60]}")
+    print(f"{'total':>6} {plan_sum:8d} {aqe_sum:4d} {len(mine_jobs):4d}")
+
 def print_stages(stages, covered, cores):
     """Task work vs job-covered time, then the top stage attempts."""
     task_ms = sum(st["task_ms"] for st in stages.values())
@@ -220,6 +250,7 @@ def main():
     ap.add_argument("--jobs", action="store_true")
     ap.add_argument("--batches", action="store_true")
     ap.add_argument("--execs", action="store_true")
+    ap.add_argument("--batch", type=int)
     ap.add_argument("--stages", action="store_true")
     ap.add_argument("--cores", type=int, default=32)
     ap.add_argument("--task-metrics", action="store_true")
@@ -229,6 +260,8 @@ def main():
     app_start = app_end = None
     jobs = {}          # id -> [start, end, desc, stage_ids, properties]
     execs = {}         # SQL execution id -> [start, end]
+    descs = {}         # SQL execution id -> description
+    aqe = {}           # SQL execution id -> adaptive-plan updates
     stage_task = {}    # stage id -> [task_time_ms, n_tasks, max_task_ms]
     # (stage id, attempt) -> executor run/GC time, tasks, name, wall
     stages = {}
@@ -254,6 +287,9 @@ def main():
                 jobs[ev["Job ID"]][1] = ev["Completion Time"]
         elif e.endswith("SparkListenerSQLExecutionStart"):
             execs[ev["executionId"]] = [ev["time"], None]
+            descs[ev["executionId"]] = (ev.get("description") or "").replace("\n", " ")
+        elif e.endswith("SparkListenerSQLAdaptiveExecutionUpdate"):
+            aqe[ev["executionId"]] = aqe.get(ev["executionId"], 0) + 1
         elif e.endswith("SparkListenerSQLExecutionEnd"):
             if ev["executionId"] in execs:
                 execs[ev["executionId"]][1] = ev["time"]
@@ -309,7 +345,11 @@ def main():
     if args.batches:
         print_batches(ordered)
     if args.execs:
-        print_execs(ordered, {x: t for x, t in execs.items() if t[1] is not None})
+        done = {x: t for x, t in execs.items() if t[1] is not None}
+        if args.batch is None:
+            print_execs(ordered, done)
+        else:
+            print_batch_execs(ordered, done, descs, aqe, stage_task, args.batch)
     if args.stages:
         print_stages(stages, covered * 1000.0, args.cores)
     if args.task_metrics:
