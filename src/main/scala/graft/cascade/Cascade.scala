@@ -2,7 +2,7 @@ package graft.cascade
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.io.TableIO
@@ -243,12 +243,13 @@ object Cascade {
 
   /** Synthetic 1:1 row key: the payload split's reattach key and the
     * ingest duplicate drop's tiebreak (Ingest.keepFirst). Assigned on the
-    * normalized input, before the row-local prefix, and frozen with it —
-    * by the ingest-dedup input or else the prefix output — so every reader
-    * of the light and the payload side sees the SAME ids, across restarts
-    * too (a resumed run reads the committed ids, never re-derives them).
-    * Derived from the input's own partitioning, so every form of a run,
-    * spread or not, picks the same keeper among otherwise equal rows.
+    * normalized input, before the row-local prefix, and frozen by the
+    * durable prefix output (or, for a stage list without a self-join
+    * stage, by a lazy checkpoint of the input), so every reader of the
+    * light and the payload side sees the SAME ids, across restarts too (a
+    * resumed run reads the committed ids, never re-derives them). Derived
+    * from the input's own partitioning, so every form of a run, spread or
+    * not, picks the same keeper among otherwise equal rows.
     */
   private val RowId = "_graft_rid"
 
@@ -356,13 +357,15 @@ object Cascade {
     * never inflate neighborhood statistics, and no self-join stage runs
     * before the split, so the drop happens where the light working set is
     * built (or, without a split, on the fused output). Ingest fingerprints
-    * the normalized input; the materializer freezes the fingerprint and the
-    * [[RowId]] tiebreak; both ride through the row-local prefix; the
-    * keeper semi-join then reads only narrow columns of the durable prefix
-    * output, so the prefix plan has no exchange at all, and the inner
-    * payload reattach drops the duplicates' payload too. The row kernels
-    * of the prefix therefore also see the duplicate rows; every prefix
-    * stage is row-local, so the survivors' values are the same either way.
+    * the normalized input; the fingerprint and the [[RowId]] tiebreak ride
+    * through the row-local prefix and are frozen with its durable output;
+    * the keeper semi-join then reads only narrow columns of that output, so
+    * the prefix plan has no exchange at all, and the inner payload reattach
+    * drops the duplicates' payload too. The row kernels of the prefix
+    * therefore also see the duplicate rows; every prefix stage is
+    * row-local, so the survivors' values are the same either way. Without
+    * a split nothing downstream is durable before the keeper reads its
+    * input three times, so the input is frozen by a lazy checkpoint.
     */
   private def runWith(pages: DataFrame, cfg: CascadeConfig, models: Option[Models],
                       pseudoTexts: Seq[String], m: Materializer): DataFrame =
@@ -378,15 +381,17 @@ object Cascade {
         }
       def dedup(d: DataFrame): DataFrame =
         if (cfg.dedupIngest) Ingest.keepFirst(d, RowId) else d
-      def ingested: DataFrame = {
+      def ingested(input: DataFrame => DataFrame): DataFrame = {
         val numbered = Ingest.normalizeCore(pages, cfg).withColumn(RowId, monotonically_increasing_id())
         Ingest.stampLists(Ingest.features(
-          if (cfg.dedupIngest) m.dedupInput(Ingest.fingerprinted(numbered)) else numbered), cfg)
+          input(if (cfg.dedupIngest) Ingest.fingerprinted(numbered) else numbered)), cfg)
       }
       split match {
-        case None => m.finish(dedup(fold(ingested, 0, stageList.length)).drop(RowId), finalDecision)
+        case None =>
+          val frozen = ingested(d => if (cfg.dedupIngest) materialize(d) else d)
+          m.finish(dedup(fold(frozen, 0, stageList.length)).drop(RowId), finalDecision)
         case Some(at) =>
-          val full = m.prefix(fold(ingested, 0, at))
+          val full = m.prefix(fold(ingested(m.prefixInput), 0, at))
           val outCols = full.columns.toSeq.filterNot(c => c == RowId || c == Ingest.Fp)
           // key-encoded columns live TWICE: hashed in the light set (grouping/
           // join key) and as strings in the payload (caller-visible output)
@@ -412,13 +417,13 @@ object Cascade {
     */
   private sealed abstract class Materializer(spark: SparkSession) {
     val tracker = new RunTracker(spark.sparkContext)
-    /** The numbered, fingerprinted input of the ingest duplicate drop.
-      * Whatever is made durable from it must keep both columns frozen, as
-      * the keeper semi-join reads them twice after the row-local prefix.
+    /** The numbered (and, with ingest dedup, fingerprinted) input of the
+      * row-local prefix of a stage list with a self-join stage.
       */
-    def dedupInput(df: DataFrame): DataFrame
-    /** The prefix output, full width with the [[RowId]]. By name: a resumed
-      * run never builds it.
+    def prefixInput(df: DataFrame): DataFrame
+    /** The prefix output, full width with the [[RowId]] (and the
+      * fingerprint), made durable: the ids the light and the payload side
+      * read. By name: a resumed run never builds it.
       */
     def prefix(df: => DataFrame): DataFrame
     /** The light working set, projected from the prefix output. */
@@ -433,8 +438,8 @@ object Cascade {
     def finish(checked: DataFrame, label: DataFrame => DataFrame): DataFrame
   }
 
-  /** Local checkpoints. The ingest-dedup input is a lazy checkpoint, the
-    * prefix output and the light working set are eager ones, the input of
+  /** Local checkpoints. The prefix output and the light working set are
+    * eager checkpoints (a spread prefix input a lazy one), the input of
     * every later selfRef stage a lazy one (so its scans share one
     * computation). Everything this run created that a new checkpoint
     * supersedes — the previous stage's checkpoint, iterate-round
@@ -449,7 +454,7 @@ object Cascade {
     private val sc = spark.sparkContext
     private var prefixIds = Set.empty[Int]
     private var protectedIds = Set.empty[Int]
-    /** The partition count of an ingest-dedup input this run spread. */
+    /** The partition count of a prefix input this run spread. */
     private var spreadFrom: Option[Int] = None
 
     private def materializeTracked(d: DataFrame, eager: Boolean): (DataFrame, Set[Int]) = {
@@ -460,24 +465,26 @@ object Cascade {
     private def sweepExcept(keep: Set[Int]): Unit =
       tracker.release(tracker.snapshot.diff(keep).diff(protectedIds))
 
-    // LAZY: the first downstream action (the prefix checkpoint, or the
-    // caller's action for a stage list without a self-join stage) computes
-    // and pins it inside that same Spark action; the prefix sweep reaps it,
-    // by which point both are materialized. Spread: an input on fewer
-    // partitions than the scheduler's default parallelism (one streamed
-    // slice file is one partition) is hash-partitioned on its unique row
-    // id to that many partitions inside the same lazy checkpoint, so the
-    // row-local prefix runs on every task slot instead of in one task. The
-    // partition count comes from the checkpoint's RDD, which costs no job.
-    def dedupInput(df: DataFrame): DataFrame = {
-      val (c, ids) = materializeTracked(df, eager = false)
-      val n = c.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.getNumPartitions }
-        .get
-      if (n >= sc.defaultParallelism) c
+    // Spread: an input on fewer partitions than the scheduler's default
+    // parallelism (one streamed slice file is one partition) is
+    // hash-partitioned on its unique row id to that many partitions inside
+    // a LAZY checkpoint, so the row-local prefix runs on every task slot
+    // and its own plan still has no exchange; the prefix checkpoint's job
+    // computes and pins it, and the prefix sweep reaps it. The count comes
+    // from the input's planned RDD, which runs no job for a plan without
+    // an exchange. An input whose plan has one (an adaptive plan) keeps the
+    // partitioning Spark chose: reading its count would run its upstream
+    // stages, and the prefix would run them again.
+    def prefixInput(df: DataFrame): DataFrame = {
+      val qe = df.queryExecution
+      if (qe.executedPlan.isInstanceOf[AdaptiveSparkPlanExec]) df
       else {
-        spreadFrom = Some(n max 1)
-        tracker.release(ids) // never computed: nothing was stored
-        materialize(df.repartition(sc.defaultParallelism, col(RowId)), eager = false)
+        val n = qe.toRdd.getNumPartitions
+        if (n >= sc.defaultParallelism) df
+        else {
+          spreadFrom = Some(n max 1)
+          materialize(df.repartition(sc.defaultParallelism, col(RowId)), eager = false)
+        }
       }
     }
 
@@ -487,7 +494,7 @@ object Cascade {
     def prefix(df: => DataFrame): DataFrame = {
       val (c, ids) = materializeTracked(df, eager = true)
       prefixIds = ids
-      sweepExcept(ids) // the ingest-dedup blocks are superseded here
+      sweepExcept(ids) // a spread input's blocks are superseded here
       spreadFrom.fold(c)(c.coalesce)
     }
 
@@ -537,7 +544,7 @@ object Cascade {
     * with ingest dedup, the fingerprint, so the duplicate drop that builds
     * the light set reads the committed tiebreak); its presence is the
     * progress indicator of a restart. Nothing before it is made durable:
-    * the ingest-dedup input stays a lazy re-read of the source. Every later
+    * the prefix input stays a lazy re-read of the source. Every later
     * stage snapshot holds only the light working set, because the neighborhood
     * stages never read the payload; parquet being columnar, even the first
     * light projection of the prefix never moves the text bytes off disk.
@@ -548,7 +555,8 @@ object Cascade {
     * next stage consumes exactly what a restart would consume. The stats
     * checkpoints a stage registers while its plan is built are reaped once
     * its snapshot is committed. A stage list without a self-join stage
-    * commits only `pages_labeled` and `metrics`.
+    * commits only `pages_labeled` and `metrics`; with ingest dedup, its
+    * input's lazy checkpoint (see [[runWith]]) is reaped after them.
     */
   private final class Snapshot(spark: SparkSession, root: String, stopAfterStages: Int)
       extends Materializer(spark) {
@@ -557,11 +565,8 @@ object Cascade {
     private def reap(): Unit = tracker.release(tracker.snapshot)
 
     // a lazy re-read of the source: the prefix commit freezes the
-    // fingerprint and the row id, and a resumed run reads them back. A stage
-    // list without a self-join stage commits only its labels, so its keeper
-    // semi-join numbers the source's rows once per branch, from the same
-    // stable partitioning (a committed table or a file scan).
-    def dedupInput(df: DataFrame): DataFrame = df
+    // fingerprint and the row id, and a resumed run reads them back
+    def prefixInput(df: DataFrame): DataFrame = df
 
     def prefix(df: => DataFrame): DataFrame = {
       if (TableIO.currentSnapshot(root, PrefixTable).isEmpty) TableIO.write(df, root, PrefixTable)

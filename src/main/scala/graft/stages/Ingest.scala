@@ -34,8 +34,8 @@ object Ingest {
     features(normalizeCore(pages, cfg))
 
   /** [[normalize]] minus the derived-feature projection: the frame the
-    * cascade fingerprints ([[fingerprinted]]) and freezes as the ingest
-    * duplicate drop's input. The drop itself runs after the row-local
+    * cascade numbers and fingerprints ([[fingerprinted]]) for the ingest
+    * duplicate drop. The drop itself runs after the row-local
     * prefix (Cascade.runWith), so [[features]] and every row kernel of the
     * prefix also see the duplicate rows; features are deterministic per
     * row, so the survivors' values are the same either way.
@@ -204,19 +204,19 @@ object Ingest {
   }
 
   /** Ingest-time exact duplicate drop over a normalized frame: number the
-    * rows, fingerprint them and [[keepFirst]]. `materialize` may make the
-    * numbered frame, which both branches read, durable: one fingerprint
-    * per row, and one frozen row number. Without it, each branch derives
-    * the numbers from the input's partitioning again, which needs an input
-    * whose row order is stable (a scan or a checkpoint). The cascade runs
-    * the same two steps, but applies [[keepFirst]] after its row-local
-    * prefix (Cascade.runWith).
+    * rows, fingerprint them and [[keepFirst]]. [[keepFirst]] reads the
+    * numbered frame in three branches, and a row number derived again per
+    * branch names the same row only if the input's row order is stable
+    * (it is not after a shuffle), so the frame is frozen first: a lazy
+    * local checkpoint, stored by the first action on the result, with one
+    * fingerprint and one row number per row. The cascade runs the same
+    * steps, but applies [[keepFirst]] after its row-local prefix
+    * (Cascade.runWith).
     */
-  def dropDuplicatePages(df: DataFrame,
-                         materialize: DataFrame => DataFrame = identity): DataFrame = {
+  def dropDuplicatePages(df: DataFrame): DataFrame = {
     val rowNo = "_row"
-    keepFirst(materialize(fingerprinted(df.withColumn(rowNo, monotonically_increasing_id()))),
-      rowNo).drop(rowNo)
+    keepFirst(fingerprinted(df.withColumn(rowNo, monotonically_increasing_id()))
+      .localCheckpoint(eager = false), rowNo).drop(rowNo)
   }
 
   /** Per-provider ingest shaping + union — the reference's per-provider

@@ -166,7 +166,7 @@ class CascadeSpec extends SparkSpec {
   }
 
   /** Exchanges of `plans` that partition on the cascade's row id: the
-    * spread of a narrow ingest-dedup input.
+    * spread of a narrow prefix input.
     */
   private def spreads(plans: Seq[org.apache.spark.sql.execution.SparkPlan]) =
     plans.flatMap(PlanNodes.of).collect {
@@ -177,18 +177,32 @@ class CascadeSpec extends SparkSpec {
       case _ => false
     })
 
+  /** The fixture config with only row-local checks: no self-join stage. */
+  private def rowLocal = Fixture.cfg.copy(
+    enabled = Set(FlagCodes.Metadata, FlagCodes.Plausibility, FlagCodes.LangBounds))
+
   test("Cascade.run labels alike on one input partition and on many; only the one spreads") {
     val s = spark.sparkContext.defaultParallelism
     val pages = PagesGen.generate(spark, 600L)
     val narrow = pages.coalesce(1)
     val wide = pages.repartition(2 * s).localCheckpoint(true)
-    var one, many: Seq[(String, Int, Boolean)] = Nil
-    val onePlans = executedPlans { one = urlLabels(Cascade.run(narrow, Fixture.cfg)) }
-    val manyPlans = executedPlans { many = urlLabels(Cascade.run(wide, Fixture.cfg)) }
-    assert(one.size >= 595 && one === many)
-    assert(spreads(onePlans).map(_.numPartitions) === Seq(s),
-      "a one-partition input is spread once, to the default parallelism")
-    assert(spreads(manyPlans).isEmpty, "an input of enough partitions is not spread")
+    for (cfg <- Seq(Fixture.cfg, rowLocal)) {
+      var one, many: Seq[(String, Int, Boolean)] = Nil
+      var oneParts = 0
+      val onePlans = executedPlans {
+        val out = Cascade.run(narrow, cfg)
+        one = urlLabels(out)
+        oneParts = out.rdd.getNumPartitions
+      }
+      val manyPlans = executedPlans { many = urlLabels(Cascade.run(wide, cfg)) }
+      assert(one.size >= 595 && one === many)
+      if (Cascade.stages(cfg).exists(_.selfRef))
+        assert(spreads(onePlans).map(_.numPartitions) === Seq(s),
+          "a one-partition input is spread once, to the default parallelism")
+      else assert(spreads(onePlans).isEmpty, "a stage list without a self-join stage spreads nothing")
+      assert(oneParts <= 2, s"a one-partition input's result is on $oneParts partitions")
+      assert(spreads(manyPlans).isEmpty, "an input of enough partitions is not spread")
+    }
   }
 
   test("of rows equal in fingerprint, url and warc_ts every form keeps the same one") {
@@ -206,8 +220,6 @@ class CascadeSpec extends SparkSpec {
     def kept(df: DataFrame): Seq[String] =
       df.filter(col("url") === url).select("tag").as[String](org.apache.spark.sql.Encoders.STRING)
         .collect().toSeq
-    val rowLocal = Fixture.cfg.copy(
-      enabled = Set(FlagCodes.Metadata, FlagCodes.Plausibility, FlagCodes.LangBounds))
     val root = java.nio.file.Files.createTempDirectory("tie").toString
     Cascade.runResumable(pages, Fixture.cfg, root, stopAfterStages = 1)
     val forms = Seq(
@@ -220,6 +232,34 @@ class CascadeSpec extends SparkSpec {
         java.nio.file.Files.createTempDirectory("tie").toString)))
     forms.foreach { case (form, tags) => assert(tags.size === 1, s"$form kept $tags") }
     assert(forms.map(_._2).distinct.size === 1, s"the forms disagree: $forms")
+  }
+
+  test("a shuffled input keeps one of rows equal in fingerprint, url and warc_ts in every form") {
+    val base = PagesGen.generate(spark, 600L).withColumn("tag", lit("gen"))
+    val url = base.filter(length(trim(col(Cols.Text))) > 0).select("url")
+      .as[String](org.apache.spark.sql.Encoders.STRING).head()
+    val twin = base.filter(col("url") === url)
+    // a hash-repartitioned input: its row order is whatever order the
+    // shuffle fetches arrive in, so a row number derived twice from it may
+    // name two different rows
+    val pages = base.unionByName(twin.withColumn("html", lit("<b>x</b>").cast("binary"))
+        .withColumn("tag", lit("b")))
+      .unionByName(twin.withColumn("html", lit("<i>y</i>").cast("binary"))
+        .withColumn("tag", lit("c")))
+      .repartition(col("url"))
+    def urls(df: DataFrame): Seq[String] =
+      df.select("url").as[String](org.apache.spark.sql.Encoders.STRING).collect().toSeq.sorted
+    def tmp() = java.nio.file.Files.createTempDirectory("shuffled").toString
+    val forms = Seq(
+      "dropDuplicatePages" -> urls(Ingest.dropDuplicatePages(Ingest.normalize(pages, rowLocal))),
+      "run" -> urls(Cascade.run(pages, Fixture.cfg)),
+      "runResumable" -> urls(Cascade.runResumable(pages, Fixture.cfg, tmp())),
+      "run without a self-join stage" -> urls(Cascade.run(pages, rowLocal)),
+      "runResumable without a self-join stage" -> urls(Cascade.runResumable(pages, rowLocal, tmp())))
+    forms.foreach { case (form, us) =>
+      assert(us.count(_ == url) === 1, s"$form kept ${us.count(_ == url)} of the three")
+    }
+    assert(forms.map(_._2).distinct.size === 1, "the forms keep different rows")
   }
 
   test("job labels nest: a job after a stats action keeps the enclosing stage label") {
