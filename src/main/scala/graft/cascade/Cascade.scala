@@ -356,8 +356,10 @@ object Cascade {
     * Ingest duplicate drop (read_data_to_check.r:122-143): duplicates must
     * never inflate neighborhood statistics, and no self-join stage runs
     * before the split, so the drop happens where the light working set is
-    * built (or, without a split, on the fused output). Ingest fingerprints
-    * the normalized input; the fingerprint and the [[RowId]] tiebreak ride
+    * built (or, without a split, on the fused output). Ingest numbers and
+    * fingerprints the normalized input (with a split, the fingerprint
+    * follows the prefix input's spread, so its md5 pass runs on every task
+    * slot); the fingerprint and the [[RowId]] tiebreak ride
     * through the row-local prefix and are frozen with its durable output;
     * the keeper semi-join then reads only narrow columns of that output, so
     * the prefix plan has no exchange at all, and the inner payload reattach
@@ -381,17 +383,16 @@ object Cascade {
         }
       def dedup(d: DataFrame): DataFrame =
         if (cfg.dedupIngest) Ingest.keepFirst(d, RowId) else d
-      def ingested(input: DataFrame => DataFrame): DataFrame = {
-        val numbered = Ingest.normalizeCore(pages, cfg).withColumn(RowId, monotonically_increasing_id())
-        Ingest.stampLists(Ingest.features(
-          input(if (cfg.dedupIngest) Ingest.fingerprinted(numbered) else numbered)), cfg)
-      }
+      def fingerprinted(d: DataFrame): DataFrame = if (cfg.dedupIngest) Ingest.fingerprinted(d) else d
+      def ingested(input: DataFrame => DataFrame): DataFrame = Ingest.stampLists(Ingest.features(
+        input(Ingest.normalizeCore(pages, cfg).withColumn(RowId, monotonically_increasing_id()))), cfg)
       split match {
         case None =>
-          val frozen = ingested(d => if (cfg.dedupIngest) materialize(d) else d)
+          val frozen = ingested(d => if (cfg.dedupIngest) materialize(Ingest.fingerprinted(d)) else d)
           m.finish(dedup(fold(frozen, 0, stageList.length)).drop(RowId), finalDecision)
         case Some(at) =>
-          val full = m.prefix(fold(ingested(m.prefixInput), 0, at))
+          // fingerprinted after a spread, on every task slot
+          val full = m.prefix(fold(ingested(d => fingerprinted(m.prefixInput(d))), 0, at))
           val outCols = full.columns.toSeq.filterNot(c => c == RowId || c == Ingest.Fp)
           // key-encoded columns live TWICE: hashed in the light set (grouping/
           // join key) and as strings in the payload (caller-visible output)
@@ -417,8 +418,9 @@ object Cascade {
     */
   private sealed abstract class Materializer(spark: SparkSession) {
     val tracker = new RunTracker(spark.sparkContext)
-    /** The numbered (and, with ingest dedup, fingerprinted) input of the
-      * row-local prefix of a stage list with a self-join stage.
+    /** The numbered, normalized input of the row-local prefix of a stage
+      * list with a self-join stage (fingerprinted after it, with ingest
+      * dedup).
       */
     def prefixInput(df: DataFrame): DataFrame
     /** The prefix output, full width with the [[RowId]] (and the

@@ -234,32 +234,38 @@ class CascadeSpec extends SparkSpec {
     assert(forms.map(_._2).distinct.size === 1, s"the forms disagree: $forms")
   }
 
-  test("a shuffled input keeps one of rows equal in fingerprint, url and warc_ts in every form") {
+  test("an input read in a new row order each time keeps one of rows equal in fingerprint, url and warc_ts in every form") {
     val base = PagesGen.generate(spark, 600L).withColumn("tag", lit("gen"))
     val url = base.filter(length(trim(col(Cols.Text))) > 0).select("url")
       .as[String](org.apache.spark.sql.Encoders.STRING).head()
     val twin = base.filter(col("url") === url)
-    // a hash-repartitioned input: its row order is whatever order the
-    // shuffle fetches arrive in, so a row number derived twice from it may
-    // name two different rows
-    val pages = base.unionByName(twin.withColumn("html", lit("<b>x</b>").cast("binary"))
+    val triple = base.unionByName(twin.withColumn("html", lit("<b>x</b>").cast("binary"))
         .withColumn("tag", lit("b")))
       .unionByName(twin.withColumn("html", lit("<i>y</i>").cast("binary"))
         .withColumn("tag", lit("c")))
-      .repartition(col("url"))
     def urls(df: DataFrame): Seq[String] =
       df.select("url").as[String](org.apache.spark.sql.Encoders.STRING).collect().toSeq.sorted
-    def tmp() = java.nio.file.Files.createTempDirectory("shuffled").toString
-    val forms = Seq(
-      "dropDuplicatePages" -> urls(Ingest.dropDuplicatePages(Ingest.normalize(pages, rowLocal))),
-      "run" -> urls(Cascade.run(pages, Fixture.cfg)),
-      "runResumable" -> urls(Cascade.runResumable(pages, Fixture.cfg, tmp())),
-      "run without a self-join stage" -> urls(Cascade.run(pages, rowLocal)),
-      "runResumable without a self-join stage" -> urls(Cascade.runResumable(pages, rowLocal, tmp())))
-    forms.foreach { case (form, us) =>
-      assert(us.count(_ == url) === 1, s"$form kept ${us.count(_ == url)} of the three")
+    def tmp() = java.nio.file.Files.createTempDirectory("reordered").toString
+    // one partition (the local form spreads it) and more than the default
+    // parallelism (it does not)
+    for (parts <- Seq(1, 2 * spark.sparkContext.defaultParallelism)) {
+      val stored = triple.repartition(parts).localCheckpoint(true)
+      // every read permutes each partition anew, as the fetch order of a
+      // shuffle may: a row number derived twice from it names two
+      // different rows
+      val pages = spark.createDataFrame(stored.rdd.mapPartitions(rows =>
+        scala.util.Random.shuffle(rows.toVector).iterator), stored.schema)
+      val forms = Seq(
+        "dropDuplicatePages" -> urls(Ingest.dropDuplicatePages(Ingest.normalize(pages, rowLocal))),
+        "run" -> urls(Cascade.run(pages, Fixture.cfg)),
+        "runResumable" -> urls(Cascade.runResumable(pages, Fixture.cfg, tmp())),
+        "run without a self-join stage" -> urls(Cascade.run(pages, rowLocal)),
+        "runResumable without a self-join stage" -> urls(Cascade.runResumable(pages, rowLocal, tmp())))
+      forms.foreach { case (form, us) =>
+        assert(us.count(_ == url) === 1, s"$parts partition(s): $form kept ${us.count(_ == url)} of the three")
+      }
+      assert(forms.map(_._2).distinct.size === 1, s"$parts partition(s): the forms keep different rows")
     }
-    assert(forms.map(_._2).distinct.size === 1, "the forms keep different rows")
   }
 
   test("job labels nest: a job after a stats action keeps the enclosing stage label") {
