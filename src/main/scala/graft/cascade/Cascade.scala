@@ -470,9 +470,12 @@ object Cascade {
     // Spread: an input on fewer partitions than the scheduler's default
     // parallelism (one streamed slice file is one partition) is
     // hash-partitioned on its unique row id to that many partitions inside
-    // a LAZY checkpoint, so the row-local prefix runs on every task slot
-    // and its own plan still has no exchange; the prefix checkpoint's job
-    // computes and pins it, and the prefix sweep reaps it. The count comes
+    // a LAZY checkpoint, so the row-local prefix (the fingerprint's md5
+    // pass included) runs on every task slot and its own plan still has no
+    // exchange. Creating the checkpoint runs the exchange's one-task map
+    // side (the adaptive plan runs its shuffle stage to finish planning);
+    // the prefix checkpoint's job reads and pins the spread rows, and the
+    // prefix sweep reaps them. The count comes
     // from the input's planned RDD, which runs no job for a plan without
     // an exchange. An input whose plan has one (an adaptive plan) keeps the
     // partitioning Spark chose: reading its count would run its upstream
